@@ -251,7 +251,9 @@ _TAG_DEFAULT = (False, 0, False, False)
 _tuple_new = tuple.__new__
 
 
-def tokenize(html_bytes: bytes | str) -> list[Node]:
+def tokenize(
+    html_bytes: bytes | bytearray | memoryview | str | None,
+) -> list[Node]:
     """One linear scan: html bytes → ordered list of normalized text nodes.
 
     Tolerant of unbalanced markup: a close tag pops up to its nearest
@@ -275,14 +277,14 @@ def tokenize(html_bytes: bytes | str) -> list[Node]:
         return []
     # str input is accepted so the Arrow batch layer can decode utf-8
     # straight from the record-batch buffers (plans/extract.py) without
-    # materializing an intermediate bytes object per document. The check
-    # is inverted (str first) so bytes-like inputs that are NOT bytes —
-    # bytearray from a collected Spark BinaryType row, memoryview — keep
-    # hitting .decode exactly as before.
+    # materializing an intermediate bytes object per document. Any other
+    # input is decoded through the buffer protocol, so bytes-like inputs
+    # that are NOT bytes — bytearray from a collected Spark BinaryType row,
+    # memoryview — decode the same way as bytes.
     s = (
         html_bytes
         if isinstance(html_bytes, str)
-        else html_bytes.decode("utf-8", errors="replace")
+        else str(html_bytes, "utf-8", "replace")
     )
     parts = _SCAN.split(s)
     # parts = [text, g1 (rawtext name), g2 (closing), g3 (name), g4 (body),

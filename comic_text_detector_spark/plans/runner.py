@@ -11,14 +11,17 @@ Physical design (two passes, both scale-shaped):
    ``chunk_id = partition_id % num_chunks``, written as parquet partitioned
    BY chunk_id. This is the engine's "one exchange": after it, all state is
    directory-addressed.
-2. **Chunk jobs.** Each chunk reads ONLY its ``chunk_id=K`` directory
-   (partition-pruned scan — no filter over the full input, no recompute of
-   the dedup lineage, no shuffle at all inside the chunk), runs the fused
-   Arrow extraction, and appends its output partitioned by chunk_id. The
-   output commit IS the checkpoint: completion is derived from the data at
-   partition_id granularity (staged partition set minus committed partition
-   set), so a crash mid-chunk reruns exactly the partitions whose output is
-   not visible — exactly-once per url without a two-phase protocol.
+2. **Chunk jobs.** A chunk is one read and one write: a known-schema scan
+   of ONLY its ``chunk_id=K`` directory (no schema inference, no filter
+   over the full input, no shuffle inside the chunk) through the extraction
+   kernel (``plans.extract._extract_batches`` with lineage on), appended to
+   the output partitioned by chunk_id. The output commit IS the checkpoint:
+   completion is derived from the data at partition_id granularity. A
+   chunk's staged partitions follow by arithmetic,
+   ``{p < P : p % num_chunks == K}`` (salted mode included), so its pending
+   set is that set minus the committed set — a crash mid-chunk reruns
+   exactly the partitions whose output is not visible, exactly-once per url
+   without a two-phase protocol.
    Committer fine print: with a job-atomic committer (fileoutputcommitter
    v1, the local/HDFS default) chunk output is all-or-nothing and the
    inference is trivially safe. Under committers that expose TASK output
@@ -31,9 +34,11 @@ Physical design (two passes, both scale-shaped):
    could commit half of itself before a crash and be wrongly skipped on
    resume.
 
-After each chunk commits, one ``metrics`` row per logical partition
-(run_id, partition_id, docs_in, docs_out, bytes, wall_ms, ts) is appended —
-pure lineage/observability (FIXTURES.md §4), never a correctness input.
+Metrics are aggregated once per call, after the chunks: one ``metrics`` row
+per committed partition that has none yet (run_id, partition_id, docs_in,
+docs_out, bytes, wall_ms, ts) — the partitions this call committed, plus
+any left without a row by a crash between a commit and its metrics. Pure
+lineage/observability (FIXTURES.md §4), never a correctness input.
 ``wall_ms`` sums the per-document kernel time measured inside the Arrow
 stage (the skew evidence the north_rule asks for).
 
@@ -44,86 +49,55 @@ partitioned by the same keys) and nothing else changes.
 
 from __future__ import annotations
 
+import json
 import os
 import time
-from collections.abc import Iterator
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..operators.dedup import asof_dedup
-from .extract import _SPAN_PA, extract_document
+from .extract import _extract_batches_lineage
 
-_COMBINED_FIELDS = [
-    ("url", pa.string()),
-    ("text", pa.string()),
-    ("spans", _SPAN_PA),
-    ("partition_id", pa.int32()),
-    ("in_bytes", pa.int64()),
-    ("proc_us", pa.int64()),
-]
+# the committed output (``extracted``): the lineage kernel's columns
 _COMBINED_DDL = (
     "url string, text string, "
     "spans array<struct<block_id:int,char_start:int,char_end:int>>, "
     "partition_id int, in_bytes bigint, proc_us bigint"
 )
+_METRICS_DDL = (
+    "run_id string, partition_id int, docs_in bigint, docs_out bigint, "
+    "bytes bigint, wall_ms bigint, ts timestamp"
+)
 
 
-def _extract_with_lineage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        pids = batch.column("partition_id").to_pylist()
-        texts, spans_col, in_bytes, proc_us = [], [], [], []
-        for h in htmls:
-            t0 = time.perf_counter_ns()
-            text, spans = extract_document(h)
-            dt = (time.perf_counter_ns() - t0) // 1000
-            texts.append(text)
-            spans_col.append(
-                [{"block_id": b, "char_start": s, "char_end": e} for b, s, e in spans]
-            )
-            in_bytes.append(len(h) if h is not None else 0)
-            proc_us.append(dt)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(urls, type=pa.string()),
-                pa.array(texts, type=pa.string()),
-                pa.array(spans_col, type=_SPAN_PA),
-                pa.array(pids, type=pa.int32()),
-                pa.array(in_bytes, type=pa.int64()),
-                pa.array(proc_us, type=pa.int64()),
-            ],
-            names=[n for n, _ in _COMBINED_FIELDS],
-        )
+def _partition_ids(spark: SparkSession, path: str, ddl: str) -> set[int]:
+    """Distinct ``partition_id`` of a parquet directory read with a known
+    schema (no inference job); a missing directory holds none."""
+    if not os.path.exists(path):
+        return set()
+    rows = (
+        spark.read.schema(ddl).parquet(path)
+        .select("partition_id")
+        .distinct()
+        .collect()
+    )
+    return {r.partition_id for r in rows}
 
 
 def completed_partitions(spark: SparkSession, data_dir: str) -> set[int]:
     """Partitions whose output already committed (the checkpoint read) —
     a single-column scan of the committed output.
 
-    Only a missing/empty directory means "nothing committed"; any other
-    read failure (permissions, corrupt footer, transient FS error) must
-    propagate — silently returning an empty set here would make resume
-    re-run and append already-committed chunks, duplicating documents.
+    Only a missing directory, or one holding no committed parquet yet
+    (e.g. only an aborted job's temporary dirs), means "nothing committed";
+    any other read failure (permissions, corrupt footer, transient FS
+    error) propagates — silently returning an empty set here would make
+    resume re-run and append already-committed chunks, duplicating
+    documents.
     """
-    if not os.path.exists(data_dir):
-        return set()
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = (
-            spark.read.parquet(data_dir)
-            .select("partition_id")
-            .distinct()
-            .collect()
-        )
-    except AnalysisException:
-        # exists but holds no readable parquet yet (e.g. only an aborted
-        # job's temporary dirs): schema inference fails → nothing committed.
-        return set()
-    return {r.partition_id for r in rows}
+    return _partition_ids(spark, data_dir, _COMBINED_DDL)
 
 
 def _ensure_staging(
@@ -194,13 +168,10 @@ def run_extract(
     """
     staging_dir = os.path.join(output_dir, "staging")
     data_dir = os.path.join(output_dir, "extracted")
-    metrics_dir = os.path.join(output_dir, "metrics")
 
     # Partitioning parameters are part of the checkpoint's identity:
     # resuming with a different num_partitions/num_chunks would mis-map
     # completed work and duplicate documents. Persist and enforce.
-    import json
-
     meta_path = os.path.join(output_dir, "_run_meta.json")
     meta = {"num_partitions": num_partitions, "num_chunks": num_chunks}
     if os.path.exists(meta_path):
@@ -223,7 +194,14 @@ def run_extract(
         salt_hot_hosts, hot_row_threshold, dedup,
     )
     staging_s = time.monotonic() - t_start
+    # the staged files' schema (chunk_id is the directory), so chunk scans
+    # skip parquet schema inference
+    staged_schema = StructType(
+        documents.select("url", "html").schema.fields
+        + [StructField("partition_id", IntegerType())]
+    )
     done = completed_partitions(spark, data_dir)
+    committed = set(done)
     chunks_run = 0
     for chunk in range(num_chunks):
         if stop_after_chunks is not None and chunks_run >= stop_after_chunks:
@@ -235,62 +213,28 @@ def run_extract(
         # task-visible commit protocols (fileoutputcommitter v2, S3A/direct
         # committers, speculative commits) a mid-job crash can leave SOME of
         # a chunk's partitions visible; inferring the whole chunk done from
-        # any one of them would silently drop the rest. Compare the staged
-        # partition set against the committed set and reprocess the missing
-        # ones only. (A bounded single-column distinct: ≤ num_partitions.)
-        staged = {
-            r.partition_id
-            for r in spark.read.parquet(chunk_src)
-            .select("partition_id")
-            .distinct()
-            .collect()
-        }
+        # any one of them would silently drop the rest. The chunk's staged
+        # partitions follow from chunk_id = partition_id % num_chunks; the
+        # missing ones are reprocessed only. (A staged id may hold no rows:
+        # it then reruns as an empty scan and commits nothing.)
+        staged = set(range(chunk, num_partitions, num_chunks))
         todo = sorted(staged - done)
         if not todo:
             continue
         # directory-pruned scan: only this chunk's files are read
-        part = spark.read.parquet(chunk_src).select(
-            "url", "html", "partition_id"
-        )
+        part = spark.read.schema(staged_schema).parquet(chunk_src)
         if len(todo) < len(staged):
             part = part.filter(F.col("partition_id").isin(todo))
         if atomic_partition_writes:
             # one task per partition_id → task-commit visibility is
             # partition-atomic even under v2/direct committers
             part = part.repartition(len(todo), "partition_id")
-        combined = part.mapInArrow(_extract_with_lineage, _COMBINED_DDL)
-        combined.withColumn("chunk_id", F.lit(chunk)).write.mode(
-            "append"
-        ).partitionBy("chunk_id").parquet(data_dir)
-        # Post-commit lineage append, pruned to the chunk's directory and to
-        # the partitions processed THIS run (a partial re-run must not
-        # re-count the previously committed partitions' rows).
-        chunk_out = os.path.join(data_dir, f"chunk_id={chunk}")
-        if not os.path.exists(chunk_out):
-            chunks_run += 1
-            continue
-        metrics = (
-            spark.read.parquet(chunk_out)
-            .filter(F.col("partition_id").isin(todo))
-            .groupBy("partition_id")
-            .agg(
-                F.count("*").alias("docs_in"),
-                F.sum(F.when(F.col("text") != "", 1).otherwise(0)).alias("docs_out"),
-                F.sum("in_bytes").alias("bytes"),
-                (F.sum("proc_us") / 1000).cast("long").alias("wall_ms"),
-            )
-            .select(
-                F.lit(run_id).alias("run_id"),
-                "partition_id",
-                "docs_in",
-                "docs_out",
-                "bytes",
-                "wall_ms",
-                F.current_timestamp().alias("ts"),
-            )
-        )
-        metrics.write.mode("append").parquet(metrics_dir)
+        part.mapInArrow(_extract_batches_lineage, _COMBINED_DDL).withColumn(
+            "chunk_id", F.lit(chunk)
+        ).write.mode("append").partitionBy("chunk_id").parquet(data_dir)
+        committed.update(todo)
         chunks_run += 1
+    _append_metrics(spark, output_dir, run_id, committed)
     return {
         "run_id": run_id,
         "chunks_run": chunks_run,
@@ -298,6 +242,45 @@ def run_extract(
         "staging_s": round(staging_s, 2),
         "chunks_s": round(time.monotonic() - t_start - staging_s, 2),
     }
+
+
+def _append_metrics(
+    spark: SparkSession, output_dir: str, run_id: str, committed: set[int]
+) -> None:
+    """One aggregation over the committed output: a ``metrics`` row for
+    each committed partition that has none yet. Every committed partition
+    then has exactly one row, also after a crash between a chunk commit and
+    this append."""
+    data_dir = os.path.join(output_dir, "extracted")
+    metrics_dir = os.path.join(output_dir, "metrics")
+    metered = _partition_ids(spark, metrics_dir, _METRICS_DDL)
+    missing = committed - metered
+    if not missing or not os.path.exists(data_dir):
+        return
+    out = spark.read.schema(_COMBINED_DDL).parquet(data_dir)
+    if metered:
+        # with no metrics yet every committed partition is missing
+        out = out.filter(F.col("partition_id").isin(sorted(missing)))
+    (
+        out.groupBy("partition_id")
+        .agg(
+            F.count("*").alias("docs_in"),
+            F.sum(F.when(F.col("text") != "", 1).otherwise(0)).alias("docs_out"),
+            F.sum("in_bytes").alias("bytes"),
+            (F.sum("proc_us") / 1000).cast("long").alias("wall_ms"),
+        )
+        .select(
+            F.lit(run_id).alias("run_id"),
+            "partition_id",
+            "docs_in",
+            "docs_out",
+            "bytes",
+            "wall_ms",
+            F.current_timestamp().alias("ts"),
+        )
+        .write.mode("append")
+        .parquet(metrics_dir)
+    )
 
 
 def run_extract_incremental(
@@ -329,8 +312,6 @@ def run_extract_incremental(
     append-only for rows at or below the pinned bound (what a WARC
     capture log satisfies by construction).
     """
-    import json
-
     wm_path = os.path.join(output_dir, "_watermark.json")
     state = {"watermark_us": None, "snapshots": []}
     if os.path.exists(wm_path):
@@ -385,7 +366,6 @@ def read_extracted_latest(spark: SparkSession, output_dir: str) -> DataFrame:
     """Read side of incremental mode: union committed snapshots and keep
     each url's NEWEST snapshot row (recaptures supersede older extractions
     — the cross-increment analog of the in-run as-of dedup)."""
-    import json
     from functools import reduce
 
     from pyspark.sql import Window
@@ -419,13 +399,17 @@ def read_extracted_latest(spark: SparkSession, output_dir: str) -> DataFrame:
 
 
 def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(output_dir, "extracted")).select(
-        "url", "text", "spans"
+    return (
+        spark.read.schema(_COMBINED_DDL)
+        .parquet(os.path.join(output_dir, "extracted"))
+        .select("url", "text", "spans")
     )
 
 
 def read_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(output_dir, "metrics"))
+    return spark.read.schema(_METRICS_DDL).parquet(
+        os.path.join(output_dir, "metrics")
+    )
 
 
 def metrics_report(metrics: DataFrame) -> DataFrame:

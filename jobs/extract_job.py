@@ -56,19 +56,22 @@ def main(argv: list[str]) -> int:
     wall_s = time.monotonic() - t0
     from pyspark.sql import functions as F
 
-    metrics = read_metrics(spark, args.output)
-    agg = metrics.groupBy().sum("docs_in", "docs_out", "bytes").collect()[0]
     # throughput covers THIS invocation only: the metrics table is
     # cumulative across runs/resumes of the same output dir, so dividing
     # its total by this run's wall would inflate resumed runs; filter by
-    # run_id (pass a distinct --run-id per invocation for clean lineage)
-    this_run = (
-        metrics.filter(F.col("run_id") == args.run_id)
-        .groupBy()
-        .sum("docs_in")
-        .collect()[0][0]
-        or 0
+    # run_id (pass a distinct --run-id per invocation for clean lineage).
+    # One aggregation gives the cumulative totals and this run's docs_in.
+    agg = (
+        read_metrics(spark, args.output)
+        .agg(
+            F.sum("docs_in"),
+            F.sum("docs_out"),
+            F.sum("bytes"),
+            F.sum(F.when(F.col("run_id") == args.run_id, F.col("docs_in"))),
+        )
+        .collect()[0]
     )
+    this_run = agg[3] or 0
     summary.update(
         docs_in=agg[0], docs_out=agg[1], bytes=agg[2],
         wall_s=round(wall_s, 2),

@@ -2,10 +2,12 @@
 
 * ``_decode_html`` — buffer-direct utf-8 decode of Arrow binary arrays
   (layouts, nulls, empties, slices) must agree with the per-cell path;
-* ``tokenize`` input polymorphism — str (pre-decoded), bytes and
-  bytearray inputs must yield identical node streams;
+* ``tokenize`` input polymorphism — str (pre-decoded), bytes, bytearray
+  and memoryview inputs must yield identical node streams;
 * ``_extract_batches`` — the flat ListArray span construction must
-  round-trip the kernel's span tuples exactly;
+  round-trip the kernel's span tuples exactly, and with lineage on the
+  ``partition_id`` / ``in_bytes`` / ``proc_us`` columns must stay aligned
+  with ``url``, also across byte-bounded slices;
 * the fold-based sessionize count must equal the window formulation.
 """
 
@@ -13,9 +15,11 @@ import pyarrow as pa
 import pytest
 
 from comic_text_detector_spark.functions.html import tokenize
+from comic_text_detector_spark.plans import extract as extract_mod
 from comic_text_detector_spark.plans.extract import (
     _decode_html,
     _extract_batches,
+    _extract_batches_lineage,
     extract_document,
 )
 
@@ -29,13 +33,19 @@ DOCS = [
 ]
 
 
-@pytest.mark.parametrize("pa_type", [pa.binary(), pa.large_binary()])
+DECODED = [None if d is None else d.decode("utf-8", "replace") for d in DOCS]
+
+
+@pytest.mark.parametrize(
+    "pa_type", [pa.binary(), pa.large_binary(), pa.string(), pa.large_string()]
+)
 def test_decode_html_matches_per_cell_decode(pa_type):
-    arr = pa.array(DOCS, type=pa_type)
-    want = [
-        None if b is None else b.decode("utf-8", "replace")
-        for b in arr.to_pylist()
-    ]
+    # string arrays hold the decoded text; DOCS holds a null, so the whole
+    # array takes the per-cell path
+    is_str = pa.types.is_string(pa_type) or pa.types.is_large_string(pa_type)
+    arr = pa.array(DECODED if is_str else DOCS, type=pa_type)
+    assert arr.null_count == 1
+    want = DECODED
     assert _decode_html(arr) == want
     # sliced arrays carry a nonzero offset into the shared buffers
     sl = arr.slice(3, 2)
@@ -51,6 +61,7 @@ def test_tokenize_input_polymorphism():
     as_bytes = tokenize(raw)
     assert tokenize(raw.decode("utf-8", "replace")) == as_bytes
     assert tokenize(bytearray(raw)) == as_bytes
+    assert tokenize(memoryview(raw)) == as_bytes
     assert tokenize(None) == []
 
 
@@ -69,6 +80,54 @@ def test_extract_batches_flat_span_construction():
         assert [
             (s["block_id"], s["char_start"], s["char_end"]) for s in r["spans"]
         ] == spans
+
+
+def _lineage_rows(batches: int) -> tuple[list[pa.RecordBatch], list[dict]]:
+    urls = [f"u{i}" for i in range(len(DOCS))]
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(urls, type=pa.string()),
+            pa.array(DOCS, type=pa.large_binary()),
+            pa.array([100 + i for i in range(len(DOCS))], type=pa.int32()),
+        ],
+        names=["url", "html", "partition_id"],
+    )
+    out = list(_extract_batches_lineage(iter([batch] * batches)))
+    for b in out:
+        assert b.schema.names == [
+            "url", "text", "spans", "partition_id", "in_bytes", "proc_us",
+        ]
+    return out, [r for b in out for r in b.to_pylist()]
+
+
+def _assert_lineage_aligned(rows: list[dict]) -> None:
+    for j, r in enumerate(rows):
+        i = j % len(DOCS)
+        h = DOCS[i]
+        assert r["url"] == f"u{i}"
+        assert r["partition_id"] == 100 + i
+        # raw byte length: multi-byte utf-8 and invalid bytes count as
+        # stored, a null cell as 0
+        assert r["in_bytes"] == (0 if h is None else len(h))
+        assert isinstance(r["proc_us"], int) and r["proc_us"] >= 0
+        assert r["text"] == extract_document(h)[0]
+
+
+def test_extract_batches_lineage_columns():
+    out, rows = _lineage_rows(1)
+    assert len(out) == 1
+    assert len(rows) == len(DOCS)
+    assert rows[3]["in_bytes"] > len("<p>pré-decoded — bytes</p>")  # multi-byte
+    _assert_lineage_aligned(rows)
+
+
+def test_extract_batches_lineage_aligned_across_slices(monkeypatch):
+    # a target under one page's size slices every batch into single rows
+    monkeypatch.setattr(extract_mod, "_SLICE_TARGET_BYTES", 32)
+    out, rows = _lineage_rows(2)
+    assert len(out) == 2 * len(DOCS)
+    assert len(rows) == 2 * len(DOCS)
+    _assert_lineage_aligned(rows)
 
 
 def test_sessionize_fold_equals_window(spark):

@@ -80,10 +80,8 @@ def test_resume_partial_partition_visibility(spark, tmp_path):
     not make resume skip the chunk's remaining partitions (ADVICE r1)."""
     import os
 
-    from comic_text_detector_spark.plans.runner import (
-        _COMBINED_DDL,
-        _extract_with_lineage,
-    )
+    from comic_text_detector_spark.plans.extract import _extract_batches_lineage
+    from comic_text_detector_spark.plans.runner import _COMBINED_DDL
 
     out = str(tmp_path / "job")
     corpus = corpus_df(spark, 60)
@@ -108,7 +106,7 @@ def test_resume_partial_partition_visibility(spark, tmp_path):
         "url", "html", "partition_id"
     )
     (
-        partial.mapInArrow(_extract_with_lineage, _COMBINED_DDL)
+        partial.mapInArrow(_extract_batches_lineage, _COMBINED_DDL)
         .withColumn("chunk_id", F.lit(1))
         .write.mode("append")
         .partitionBy("chunk_id")
@@ -126,6 +124,95 @@ def test_resume_partial_partition_visibility(spark, tmp_path):
     extracted = read_extracted(spark, out)
     assert extracted.count() == n_urls
     assert extracted.select("url").distinct().count() == n_urls
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_extract_job_count(spark, tmp_path):
+    """A fresh call is the staging pass (the as-of window's shuffle and the
+    write), one write per chunk, and one metrics aggregation (its shuffle
+    and the write); a rerun on completed output is the two checkpoint
+    reads (committed partitions and metered partitions, a distinct each)."""
+    out = str(tmp_path / "job")
+    corpus = corpus_df(spark, 200)
+    kw = dict(num_partitions=16, num_chunks=4)
+    fresh = _jobs_in_group(
+        spark, "runner-fresh", lambda: run_extract(spark, corpus, out, **kw)
+    )
+    assert len(completed_partitions(spark, out + "/extracted")) == 16
+    noop = _jobs_in_group(
+        spark, "runner-noop", lambda: run_extract(spark, corpus, out, **kw)
+    )
+    assert (fresh, noop) == (8, 4)
+
+
+def _metrics_exactly_once(spark, out: str, n_urls: int) -> None:
+    metrics = read_metrics(spark, out)
+    per_pid = {
+        r.partition_id: r["count"]
+        for r in metrics.groupBy("partition_id").count().collect()
+    }
+    assert set(per_pid) == completed_partitions(spark, out + "/extracted")
+    assert set(per_pid.values()) == {1}
+    assert metrics.agg(F.sum("docs_in")).collect()[0][0] == n_urls
+
+
+def test_metrics_recovered_after_crash_before_metrics(spark, tmp_path):
+    """Chunks committed but their metrics lost (a crash between the commit
+    and the metrics append): the resume adds one row for each of those
+    partitions as well as for the ones it commits itself."""
+    import shutil
+
+    out = str(tmp_path / "job")
+    corpus = corpus_df(spark, 80)
+    n_urls = asof_dedup(corpus).count()
+    kw = dict(num_partitions=16, num_chunks=4)
+    run_extract(spark, corpus, out, run_id="r1", stop_after_chunks=2, **kw)
+    assert completed_partitions(spark, out + "/extracted")
+    shutil.rmtree(out + "/metrics")
+    r2 = run_extract(spark, corpus, out, run_id="r2", **kw)
+    assert r2["chunks_run"] == 2
+    assert read_extracted(spark, out).count() == n_urls
+    _metrics_exactly_once(spark, out, n_urls)
+    # a further rerun finds every committed partition metered
+    run_extract(spark, corpus, out, run_id="r3", **kw)
+    _metrics_exactly_once(spark, out, n_urls)
+
+
+def test_resume_with_only_empty_partitions_missing(spark, tmp_path):
+    """More partitions than urls leaves staged partition ids with no rows.
+    They never show up as committed, so each rerun schedules them again:
+    the rerun commits nothing twice and meters nothing twice."""
+    import os
+
+    out = str(tmp_path / "job")
+    corpus = corpus_df(spark, 30)
+    n_urls = asof_dedup(corpus).count()
+    kw = dict(num_partitions=64, num_chunks=2)
+    run_extract(spark, corpus, out, run_id="r1", **kw)
+    committed = completed_partitions(spark, out + "/extracted")
+    assert len(committed) < 64
+    for chunk in range(2):  # every chunk has rows and empty ids
+        assert os.path.exists(os.path.join(out, "staging", f"chunk_id={chunk}"))
+        assert set(range(chunk, 64, 2)) - committed
+    r2 = run_extract(spark, corpus, out, run_id="r2", **kw)
+    assert r2["chunks_run"] == 2
+    assert r2["resumed_partitions_skipped"] == len(committed)
+    extracted = read_extracted(spark, out)
+    assert extracted.count() == n_urls
+    assert extracted.select("url").distinct().count() == n_urls
+    assert completed_partitions(spark, out + "/extracted") == committed
+    _metrics_exactly_once(spark, out, n_urls)
 
 
 def test_incremental_snapshots_watermark(spark, tmp_path):
