@@ -14,14 +14,19 @@ Physical design (two passes, both scale-shaped):
 2. **Chunk jobs.** A chunk is one read and one write: a known-schema scan
    of ONLY its ``chunk_id=K`` directory (no schema inference, no filter
    over the full input, no shuffle inside the chunk) through the extraction
-   kernel (``plans.extract._extract_batches`` with lineage on), appended to
-   the output partitioned by chunk_id. The output commit IS the checkpoint:
-   completion is derived from the data at partition_id granularity. A
-   chunk's staged partitions follow by arithmetic,
+   kernel (``plans.extract._extract_batches`` with lineage on), written
+   straight into its own output directory ``extracted/chunk_id=K`` (the
+   layout ``partitionBy("chunk_id")`` would give). The output commit IS
+   the checkpoint: completion is derived from the data at partition_id
+   granularity. A chunk's staged partitions follow by arithmetic,
    ``{p < P : p % num_chunks == K}`` (salted mode included), so its pending
    set is that set minus the committed set — a crash mid-chunk reruns
    exactly the partitions whose output is not visible, exactly-once per url
-   without a two-phase protocol.
+   without a two-phase protocol. After a chunk job returns, a
+   ``_committed_partitions.json`` marker in its directory lists every id
+   it processed, so a staged id that holds no rows (and so never shows up
+   in the data) is not scheduled again; the marker is written only after
+   the commit, so it can under-claim but never over-claim.
    Committer fine print: with a job-atomic committer (fileoutputcommitter
    v1, the local/HDFS default) chunk output is all-or-nothing and the
    inference is trivially safe. Under committers that expose TASK output
@@ -33,6 +38,20 @@ Physical design (two passes, both scale-shaped):
    partition visibility; without it, a partition split across input files
    could commit half of itself before a crash and be wrongly skipped on
    resume.
+
+Chunk jobs are sized by bytes and run concurrently. Every Python task pays a
+fixed start-up cost before its kernel runs, so a chunk scan gets
+``ceil(staged bytes / spark.sql.files.maxPartitionBytes)`` tasks (a
+``coalesce``: it only ever lowers Spark's own split count), and
+``max(1, defaultParallelism // tasks_per_chunk)`` chunk jobs are in flight
+at once (``size_chunk_jobs``). Small chunks on a few cores then run as one
+wave; once a chunk fills the cluster the window is 1 and chunks run one
+after the other. A failure replays at most the ``in_flight`` chunks that
+were running. Each chunk writes its own directory because concurrent
+appends to one path share FileOutputCommitter's ``_temporary`` directory,
+and one job's cleanup would delete the other's files. The chunk threads
+inherit the caller's job group and tags. When one chunk job fails, no new
+chunk starts; the call raises once the running ones have finished.
 
 Metrics are aggregated once per call, after the chunks: one ``metrics`` row
 per committed partition that has none yet (run_id, partition_id, docs_in,
@@ -52,7 +71,9 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
@@ -70,6 +91,8 @@ _METRICS_DDL = (
     "run_id string, partition_id int, docs_in bigint, docs_out bigint, "
     "bytes bigint, wall_ms bigint, ts timestamp"
 )
+# lists the partition ids a committed chunk job processed, rows or not
+_MARKER = "_committed_partitions.json"
 
 
 def _partition_ids(spark: SparkSession, path: str, ddl: str) -> set[int]:
@@ -98,6 +121,67 @@ def completed_partitions(spark: SparkSession, data_dir: str) -> set[int]:
     documents.
     """
     return _partition_ids(spark, data_dir, _COMBINED_DDL)
+
+
+def _marked_partitions(data_dir: str, num_chunks: int) -> set[int]:
+    """Partition ids the chunk markers record as processed, including the
+    ones that held no rows (no Spark job)."""
+    ids: set[int] = set()
+    for chunk in range(num_chunks):
+        path = os.path.join(data_dir, f"chunk_id={chunk}", _MARKER)
+        if os.path.exists(path):
+            with open(path) as f:
+                ids.update(json.load(f))
+    return ids
+
+
+def _mark_processed(chunk_dir: str, ids: list[int]) -> None:
+    """Add ``ids`` to the chunk's marker, replaced atomically. Call only
+    after the chunk job committed."""
+    path = os.path.join(chunk_dir, _MARKER)
+    marked = set(ids)
+    if os.path.exists(path):
+        with open(path) as f:
+            marked.update(json.load(f))
+    tmp = os.path.join(chunk_dir, "_" + _MARKER + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(sorted(marked), f)
+    os.replace(tmp, path)
+
+
+def _dir_bytes(path: str) -> int:
+    """Bytes of the data files under ``path`` (``_``/``.`` files skipped,
+    as the parquet reader does)."""
+    return sum(
+        os.path.getsize(os.path.join(root, name))
+        for root, _dirs, names in os.walk(path)
+        for name in names
+        if not name.startswith(("_", "."))
+    )
+
+
+def _inheriting(spark: SparkSession, fn):
+    """``fn`` run with a copy of the calling thread's local properties (job
+    group) and session tags. Unpinned PySpark threads
+    (``PYSPARK_PIN_THREAD=false``) carry no JVM thread state; pyspark then
+    returns the session instead of a wrapper, and ``fn`` runs as is."""
+    wrap = inheritable_thread_target(spark)
+    return wrap(fn) if callable(wrap) else fn
+
+
+def size_chunk_jobs(
+    chunk_bytes: int,
+    max_partition_bytes: int,
+    parallelism: int,
+    partition_tasks: int | None = None,
+) -> tuple[int, int]:
+    """``(tasks_per_chunk, in_flight)`` for a chunk of ``chunk_bytes``
+    staged bytes: one kernel task per ``max_partition_bytes`` (at least
+    one), or ``partition_tasks`` when the chunk is repartitioned into one
+    task per partition id; and as many concurrent chunk jobs as fill
+    ``parallelism`` cores (at least one)."""
+    tasks = partition_tasks or max(1, -(-chunk_bytes // max_partition_bytes))
+    return tasks, max(1, parallelism // tasks)
 
 
 def _ensure_staging(
@@ -156,7 +240,8 @@ def run_extract(
     """Run (or resume) the extraction job.
 
     ``stop_after_chunks`` is the fault-injection hook for the resumability
-    test: the driver stops after N chunk commits, simulating a crash.
+    test: the driver runs only the first N pending chunks, simulating a
+    crash after their commits.
     ``dedup=False`` skips the as-of window for inputs already known to hold
     one capture per url (the common production case with a dedup-maintained
     table) — the staging pass then shuffles nothing.
@@ -200,11 +285,15 @@ def run_extract(
         documents.select("url", "html").schema.fields
         + [StructField("partition_id", IntegerType())]
     )
-    done = completed_partitions(spark, data_dir)
-    committed = set(done)
-    chunks_run = 0
+    done_in_data = completed_partitions(spark, data_dir)
+    done = done_in_data | _marked_partitions(data_dir, num_chunks)
+    max_partition_bytes = (
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
+    parallelism = spark.sparkContext.defaultParallelism
+    jobs, windows = [], []
     for chunk in range(num_chunks):
-        if stop_after_chunks is not None and chunks_run >= stop_after_chunks:
+        if stop_after_chunks is not None and len(jobs) >= stop_after_chunks:
             break
         chunk_src = os.path.join(staging_dir, f"chunk_id={chunk}")
         if not os.path.exists(chunk_src):
@@ -215,12 +304,16 @@ def run_extract(
         # a chunk's partitions visible; inferring the whole chunk done from
         # any one of them would silently drop the rest. The chunk's staged
         # partitions follow from chunk_id = partition_id % num_chunks; the
-        # missing ones are reprocessed only. (A staged id may hold no rows:
-        # it then reruns as an empty scan and commits nothing.)
+        # missing ones are reprocessed only.
         staged = set(range(chunk, num_partitions, num_chunks))
         todo = sorted(staged - done)
         if not todo:
             continue
+        tasks, window = size_chunk_jobs(
+            _dir_bytes(chunk_src), max_partition_bytes, parallelism,
+            len(todo) if atomic_partition_writes else None,
+        )
+        windows.append(window)
         # directory-pruned scan: only this chunk's files are read
         part = spark.read.schema(staged_schema).parquet(chunk_src)
         if len(todo) < len(staged):
@@ -228,12 +321,38 @@ def run_extract(
         if atomic_partition_writes:
             # one task per partition_id → task-commit visibility is
             # partition-atomic even under v2/direct committers
-            part = part.repartition(len(todo), "partition_id")
-        part.mapInArrow(_extract_batches_lineage, _COMBINED_DDL).withColumn(
-            "chunk_id", F.lit(chunk)
-        ).write.mode("append").partitionBy("chunk_id").parquet(data_dir)
-        committed.update(todo)
-        chunks_run += 1
+            part = part.repartition(tasks, "partition_id")
+        else:
+            part = part.coalesce(tasks)
+        out = part.mapInArrow(_extract_batches_lineage, _COMBINED_DDL)
+        jobs.append((out, os.path.join(data_dir, f"chunk_id={chunk}"), todo))
+
+    def run_chunk(out: DataFrame, chunk_dir: str, todo: list[int]) -> list[int]:
+        out.write.mode("append").parquet(chunk_dir)
+        _mark_processed(chunk_dir, todo)
+        return todo
+
+    committed = set(done_in_data)
+    chunks_run = 0
+    failure = None
+    # the pool starts no more threads than there are chunk jobs
+    with ThreadPoolExecutor(max_workers=min(windows, default=1)) as pool:
+        # wrapped per job: each thread gets its own copy of the caller's
+        # local properties (job group), which a job's SQL execution edits
+        futures = [pool.submit(_inheriting(spark, run_chunk), *job) for job in jobs]
+        for fut in as_completed(futures):
+            if fut.cancelled():
+                continue
+            exc = fut.exception()
+            if exc is None:
+                committed.update(fut.result())
+                chunks_run += 1
+            elif failure is None:
+                failure = exc
+                for other in futures:
+                    other.cancel()  # only chunks not yet started
+    if failure is not None:
+        raise failure
     _append_metrics(spark, output_dir, run_id, committed)
     return {
         "run_id": run_id,

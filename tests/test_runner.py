@@ -13,7 +13,10 @@ from comic_text_detector_spark.plans.runner import (
     read_extracted,
     read_metrics,
     run_extract,
+    size_chunk_jobs,
 )
+
+MB = 2**20
 
 
 def test_resume_exactly_once(spark, tmp_path):
@@ -156,6 +159,18 @@ def test_run_extract_job_count(spark, tmp_path):
     assert (fresh, noop) == (8, 4)
 
 
+def test_size_chunk_jobs():
+    """Small chunks take one task each and all run at once on 4 cores; a
+    chunk of at least cores x maxPartitionBytes fills the cores alone, so
+    chunks run one at a time; repartitioned chunks take one task per
+    pending partition id."""
+    assert size_chunk_jobs(2 * MB, 128 * MB, 4) == (1, 4)
+    assert size_chunk_jobs(4 * 128 * MB, 128 * MB, 4) == (4, 1)
+    assert size_chunk_jobs(5 * 128 * MB, 128 * MB, 4) == (5, 1)
+    assert size_chunk_jobs(2 * MB, 128 * MB, 4, partition_tasks=16) == (16, 1)
+    assert size_chunk_jobs(2 * MB, 128 * MB, 32, partition_tasks=8) == (8, 4)
+
+
 def _metrics_exactly_once(spark, out: str, n_urls: int) -> None:
     metrics = read_metrics(spark, out)
     per_pid = {
@@ -191,8 +206,9 @@ def test_metrics_recovered_after_crash_before_metrics(spark, tmp_path):
 
 def test_resume_with_only_empty_partitions_missing(spark, tmp_path):
     """More partitions than urls leaves staged partition ids with no rows.
-    They never show up as committed, so each rerun schedules them again:
-    the rerun commits nothing twice and meters nothing twice."""
+    They never show up in the committed data, but the chunk markers record
+    them as processed: a rerun runs no chunk and appends no metrics file,
+    only the two checkpoint reads."""
     import os
 
     out = str(tmp_path / "job")
@@ -205,13 +221,66 @@ def test_resume_with_only_empty_partitions_missing(spark, tmp_path):
     for chunk in range(2):  # every chunk has rows and empty ids
         assert os.path.exists(os.path.join(out, "staging", f"chunk_id={chunk}"))
         assert set(range(chunk, 64, 2)) - committed
-    r2 = run_extract(spark, corpus, out, run_id="r2", **kw)
-    assert r2["chunks_run"] == 2
-    assert r2["resumed_partitions_skipped"] == len(committed)
+    metrics_files = sorted(os.listdir(out + "/metrics"))
+    r2 = {}
+    jobs = _jobs_in_group(
+        spark, "runner-empty-ids",
+        lambda: r2.update(run_extract(spark, corpus, out, run_id="r2", **kw)),
+    )
+    assert (jobs, r2["chunks_run"]) == (4, 0)
+    assert r2["resumed_partitions_skipped"] == 64
+    assert sorted(os.listdir(out + "/metrics")) == metrics_files
     extracted = read_extracted(spark, out)
     assert extracted.count() == n_urls
     assert extracted.select("url").distinct().count() == n_urls
     assert completed_partitions(spark, out + "/extracted") == committed
+    _metrics_exactly_once(spark, out, n_urls)
+
+
+def test_failed_chunk_keeps_exactly_once(spark, tmp_path):
+    """One concurrent chunk fails (a corrupt staged file): the call raises
+    only after the other chunks committed, and a rerun with the file
+    restored completes the output exactly once, identical to a clean run."""
+    import os
+
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    out = str(tmp_path / "job")
+    corpus = corpus_df(spark, 80)
+    n_urls = asof_dedup(corpus).count()
+    kw = dict(num_partitions=16, num_chunks=4)
+    run_extract(spark, corpus, str(tmp_path / "clean"), **kw)
+    clean = sorted(read_extracted(spark, str(tmp_path / "clean")).collect())
+
+    # stage only, then corrupt one staged file of chunk 1
+    run_extract(spark, corpus, out, run_id="r0", stop_after_chunks=0, **kw)
+    chunk_src = os.path.join(out, "staging", "chunk_id=1")
+    victim = os.path.join(
+        chunk_src, sorted(f for f in os.listdir(chunk_src) if f.endswith(".parquet"))[0]
+    )
+    with open(victim, "rb") as f:
+        good = f.read()
+    with open(victim, "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        run_extract(spark, corpus, out, run_id="r1", **kw)
+    # the other chunks had finished and committed when the call raised
+    marked = {
+        chunk for chunk in range(4)
+        if os.path.exists(os.path.join(out, "extracted", f"chunk_id={chunk}",
+                                       "_committed_partitions.json"))
+    }
+    assert marked == {0, 2, 3}
+    assert {p % 4 for p in completed_partitions(spark, out + "/extracted")} <= marked
+
+    with open(victim, "wb") as f:
+        f.write(good)
+    r2 = run_extract(spark, corpus, out, run_id="r2", **kw)
+    assert r2["chunks_run"] == 1
+    extracted = read_extracted(spark, out)
+    assert extracted.select("url").distinct().count() == n_urls
+    assert sorted(extracted.collect()) == clean
     _metrics_exactly_once(spark, out, n_urls)
 
 
