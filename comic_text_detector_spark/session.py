@@ -17,10 +17,8 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 # One Arrow batch of html-bearing rows. Median synthetic page is ~2-8 KB but
 # the skew tier is 100-1000x that (FIXTURES.md 'huge-'); 512 rows keeps a
-# batch under ~64 MB even when several huge rows land together. On corpora
-# with bounded page sizes, 2048 measures ~6% faster (less per-batch Python
-# overhead) — tune via CTD_ARROW_BATCH.
-ARROW_MAX_RECORDS = int(os.environ.get("CTD_ARROW_BATCH", "512"))
+# batch under ~64 MB even when several huge rows land together.
+ARROW_MAX_RECORDS = 512
 
 
 def get_spark(
