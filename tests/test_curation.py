@@ -2,7 +2,6 @@
 
 from pyspark.sql import functions as F
 
-from __spark_entry__ import SF_DEFAULT
 from comic_text_detector_spark.operators.curation import (
     contaminated_docs,
     hash_sample,
@@ -467,104 +466,6 @@ def test_curate_job_min_logit(spark, tmp_path):
     ) == 0
     kept = {r.url for r in spark.read.parquet(f"{out}/curated").collect()}
     assert kept == {"http://h/clean1", "http://h/clean2"}
-
-
-_BOILER_LINE = "Subscribe to our newsletter | Cookie settings | Back to top"
-_DUP_PASSAGE = (
-    "This work is licensed under the Creative Example License and may be "
-    "redistributed verbatim in any medium provided this notice and the "
-    "original attribution are preserved intact by the redistributor."
-)
-
-
-def _planted_curate_corpus(spark, path, replicas):
-    """sf0.001 docs x ``replicas`` at ``.../<rep>/<doc_id>``: a first line
-    ``doc u<rep>_<doc_id> begins``, a marker after every 6th word (copies
-    share 5-grams but no long verbatim runs), a boilerplate line in every
-    doc, and a licence passage in docs with doc_id % 61 == 0."""
-    docs = spark.read.parquet(f"{SF_DEFAULT}/documents.parquet")
-    reps = spark.range(replicas).withColumnRenamed("id", "rep")
-    uniq = F.concat(
-        F.lit("u"), F.col("rep").cast("string"),
-        F.lit("_"), F.col("doc_id").cast("string"),
-    )
-
-    def _mark(w, i):
-        return F.when(i % 6 == 5, F.concat(w, F.lit(" "), uniq)).otherwise(w)
-
-    body = F.array_join(F.transform(F.split("text", " "), _mark), " ")
-    body = F.when(
-        F.col("doc_id") % 61 == 0, F.concat(body, F.lit(" " + _DUP_PASSAGE))
-    ).otherwise(body)
-    text = F.concat_ws(
-        "\n", F.concat(F.lit("doc "), uniq, F.lit(" begins")),
-        F.lit(_BOILER_LINE), body,
-    )
-    url = F.concat(
-        F.lit("https://h"), (F.col("doc_id") % 50).cast("string"),
-        F.lit(".example/d/"), F.col("rep").cast("string"), F.lit("/"),
-        F.col("doc_id").cast("string"),
-    )
-    docs.crossJoin(reps).select(
-        url.alias("url"), text.alias("text"), F.lit("en").alias("lang")
-    ).write.parquet(path)
-
-
-def test_curate_job_planted_stages(spark, tmp_path):
-    """One curate_job call with line dedup, span cut, LM and logit floors
-    over a planted corpus: every stage does its planted job. The
-    benchmark is the first 50 base docs, so every copy of them must be
-    dropped as contaminated."""
-    import contextlib
-    import io
-    import json as _json
-
-    from jobs import curate_job
-
-    replicas = 4
-    corpus, bench, out = (str(tmp_path / d) for d in ("c", "b", "out"))
-    _planted_curate_corpus(spark, corpus, replicas)
-    spark.read.parquet(f"{SF_DEFAULT}/documents.parquet").filter(
-        F.col("doc_id") < 50
-    ).select("doc_id", "text").write.parquet(bench)
-
-    stdout = io.StringIO()
-    with contextlib.redirect_stdout(stdout):
-        assert curate_job.main(
-            [
-                "--input", corpus, "--benchmark", bench, "--output", out,
-                # legitimate lines occur in at most the copies of one base
-                # doc; the boilerplate line is in every doc
-                "--max-line-doc-freq", str(4 * replicas),
-                "--cut-dup-spans",
-                # floors that cut the low-scoring tail
-                "--min-lm-score", "-2.85", "--min-logit", "-20",
-            ],
-            spark=spark,
-        ) == 0
-    summary = _json.loads(stdout.getvalue().strip().splitlines()[-1])
-
-    docs_in = spark.read.parquet(corpus).count()
-    n_leaked = spark.read.parquet(f"{out}/contaminated").count()
-    curated = spark.read.parquet(f"{out}/curated")
-    assert summary["docs_in"] == docs_in == 500 * replicas
-    assert 0 < n_leaked < docs_in
-    assert summary["after_decontaminate"] == docs_in - n_leaked
-    assert summary["curated"] == curated.count()
-    # the LM and logit floors are the only stages here that drop docs
-    assert 0 < summary["curated"] < summary["after_decontaminate"]
-
-    # every doc derived from a benchmark doc shares 5-grams with it
-    doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-    assert curated.filter(doc_id < 50).count() == 0
-    # line dedup strips the boilerplate line and only it from every doc;
-    # the unique first line survives
-    assert curated.filter(F.col("text").contains(_BOILER_LINE)).count() == 0
-    assert curated.filter("n_lines_in - n_lines_kept != 1").count() == 0
-    assert curated.filter("text LIKE 'doc u%'").count() == summary["curated"]
-    # docs that were planted with the licence passage survive, without it
-    assert curated.filter(doc_id % 61 == 0).count() > 0
-    assert curated.filter(F.col("text").contains(_DUP_PASSAGE)).count() == 0
 
 
 def test_schedule_frontier_politeness(spark):
