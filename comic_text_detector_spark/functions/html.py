@@ -416,8 +416,11 @@ def tokenize(
 
 
 def _tokenize_positional(s: str) -> list[Node]:
-    """The positional (finditer) scanner — the slow path behind ``tokenize``
-    for documents whose tag attributes hide ``>`` inside quoted values."""
+    """The positional scanner — the slow path behind ``tokenize`` for
+    documents whose tag attributes hide ``>`` inside quoted values. Each
+    search resumes at the end of the previous construct, so markup inside
+    a re-matched tag's quoted attribute (``title="x><!--"``) never starts
+    a comment or rawtext match that would swallow the text after it."""
     nodes: list[Node] = []
     stack: list[str] = []
     boiler_depth = 0
@@ -452,13 +455,10 @@ def _tokenize_positional(s: str) -> list[Node]:
         )
         char_pos = start + len(norm)
 
-    skip_until = 0
     tag_info = _TAG_INFO
     default = _TAG_DEFAULT
-    for m in _SCAN.finditer(s):
+    while (m := _SCAN.search(s, last)) is not None:
         start = m.start()
-        if start < skip_until:
-            continue  # inside a slow-path tag's quoted attribute
         if start > last:
             emit(s[last:start])
         last = m.end()
@@ -472,7 +472,7 @@ def _tokenize_positional(s: str) -> list[Node]:
             # match; re-match quote-aware from the same position
             sm = _TAG_SLOW.match(s, start)
             if sm is not None:
-                skip_until = last = sm.end()
+                last = sm.end()
                 closing, name, body = sm.group(1, 2, 3)
         if not name.islower():
             name = name.lower()

@@ -138,7 +138,6 @@ def line_freq_dedup(
     text_col: str = "text",
     sep: str = "\n",
     max_doc_freq: int = 2,
-    broadcast_freq: bool = True,
 ) -> DataFrame:
     """CCNet-style boilerplate line removal: split each document into lines,
     drop every line that occurs in MORE than ``max_doc_freq`` distinct
@@ -156,15 +155,11 @@ def line_freq_dedup(
     groupBy(id) with an ordered array_sort reassembly. The join-back's
     build side is pre-filtered to the VIOLATORS only (df > max_doc_freq —
     the boilerplate heavy-hitters, a tiny fraction of the distinct-line
-    table) and broadcast by default, so the Zipf-skewed line-hash key
-    ('subscribe now' appearing once per doc) can never SMJ-skew: the probe
-    side streams with no exchange. Set ``broadcast_freq=False`` only if
-    the violator set itself outgrows executor memory (pathological corpora
-    with millions of distinct cross-doc boilerplate lines) — the plan
-    falls back to a shuffled equi-join and AQE's skew-join split handles
-    the hot hashes. Empty documents and documents whose every line is
-    boilerplate survive with text='' (the row is not lost — losing it
-    would silently shrink the corpus).
+    table) and broadcast, so the Zipf-skewed line-hash key ('subscribe
+    now' appearing once per doc) can never SMJ-skew: the probe side
+    streams with no exchange. Empty documents and documents whose every
+    line is boilerplate survive with text='' (the row is not lost —
+    losing it would silently shrink the corpus).
 
     (An r6 rewrite that decided drops on narrow rows and reassembled
     per-row via an id-keyed join measured 3.6x SLOWER here: in any corpus
@@ -183,9 +178,7 @@ def line_freq_dedup(
     ).withColumn("h", F.md5(F.col("line")))
     freq = lines.groupBy("h").agg(F.count_distinct("id").alias("df"))
     # only violators matter for the drop decision; absent-from-build = keep
-    boiler = freq.filter(F.col("df") > max_doc_freq)
-    if broadcast_freq:
-        boiler = F.broadcast(boiler)
+    boiler = F.broadcast(freq.filter(F.col("df") > max_doc_freq))
     kept = lines.join(boiler, "h", "left").withColumn(
         "keep",
         F.col("df").isNull() | (F.trim(F.col("line")) == ""),
@@ -350,7 +343,6 @@ def word_doc_freq_score(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_freq: bool = True,
 ) -> DataFrame:
     """(id, n_distinct_words, mean_word_df): mean corpus document-frequency
     of each document's distinct words — the cheap LM-free quality proxy CC
@@ -362,12 +354,9 @@ def word_doc_freq_score(
     full precision. Shape: explode distinct words → one groupBy for corpus
     df → equi-join back → one groupBy(id). The frequency table is
     vocabulary-sized (natural-language vocabularies are a few hundred MB
-    even at web scale), so it is BROADCAST by default — the word key is
-    Zipf-skewed ('the' appears in nearly every doc) and a shuffled join
-    would put the whole corpus's hottest key through one reducer. Set
-    ``broadcast_freq=False`` for adversarial corpora whose 'vocabulary'
-    is corpus-sized (random strings); the fallback shuffled join relies on
-    AQE skew-split, documented trade-off.
+    even at web scale), so it is BROADCAST — the word key is Zipf-skewed
+    ('the' appears in nearly every doc) and a shuffled join would put the
+    whole corpus's hottest key through one reducer.
 
     Empty tokens (null text, consecutive/leading/trailing spaces) are
     filtered BEFORE counting — a '' pseudo-word would otherwise have a
@@ -383,9 +372,7 @@ def word_doc_freq_score(
     ).filter(F.col("w") != "")
     # (id, w) pairs are already distinct after array_distinct, so a plain
     # count is exact — no count_distinct hash-dedup pass needed
-    freq = words.groupBy("w").agg(F.count("id").alias("wdf"))
-    if broadcast_freq:
-        freq = F.broadcast(freq)
+    freq = F.broadcast(words.groupBy("w").agg(F.count("id").alias("wdf")))
     return (
         words.join(freq, "w")
         .groupBy("id")
@@ -807,13 +794,13 @@ def contaminated_docs(
 def schedule_frontier(
     df: DataFrame,
     url_col: str = "url",
-    host_col: str | None = None,
     n_workers: int = 64,
     per_host_delay_ms: int = 1000,
     host_delays: DataFrame | None = None,
 ) -> DataFrame:
     """Politeness-aware crawl-frontier scheduling: (url, host, worker,
-    slot, fetch_at_ms). Every url of a host lands on the SAME worker
+    slot, fetch_at_ms), the host taken from the url by ``host_of``.
+    Every url of a host lands on the SAME worker
     (md5 host affinity — politeness needs one rate-limit owner per host),
     urls within a host take deterministic md5-ordered slots, and
     ``fetch_at_ms = slot * delay`` spaces same-host fetches — where
@@ -833,12 +820,11 @@ def schedule_frontier(
         raise ValueError(f"n_workers must be positive, got {n_workers}")
     from .salting import host_of
 
-    host = F.col(host_col) if host_col else host_of(F.col(url_col))
     w = Window.partitionBy("host").orderBy(F.col("okey"), F.col("url"))
     ranked = (
         df.select(
             F.col(url_col).alias("url"),
-            host.alias("host"),
+            host_of(F.col(url_col)).alias("host"),
             F.md5(F.concat_ws(":", F.lit("frontier"), F.col(url_col))).alias(
                 "okey"
             ),
@@ -1851,7 +1837,6 @@ def sentence_freq_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_doc_freq: int = 2,
-    broadcast_freq: bool = True,
 ) -> DataFrame:
     """``line_freq_dedup`` at SENTENCE granularity: boilerplate that
     lives inside flowing paragraphs ('Click here to subscribe. ') never
@@ -1877,9 +1862,7 @@ def sentence_freq_dedup(
         F.col("sentence").alias("s"),
     ).withColumn("h", F.md5(F.col("s")))
     freq = sents.groupBy("h").agg(F.count_distinct("id").alias("df"))
-    boiler = freq.filter(F.col("df") > max_doc_freq)
-    if broadcast_freq:
-        boiler = F.broadcast(boiler)
+    boiler = F.broadcast(freq.filter(F.col("df") > max_doc_freq))
     kept = sents.join(boiler, "h", "left").withColumn(
         "keep", F.col("df").isNull()
     )
@@ -2491,7 +2474,6 @@ def host_boilerplate_dedup(
     host_col: str = "host",
     sep: str = "\n",
     max_doc_freq: int = 2,
-    broadcast_freq: bool = False,
 ) -> DataFrame:
     """HOST-SCOPED boilerplate line removal — the per-site sibling of
     ``line_freq_dedup``: a nav bar repeated on every page of ONE site
@@ -2509,10 +2491,9 @@ def host_boilerplate_dedup(
     Scale shape: the frequency aggregate and the join-back both key on
     (host, line-hash) — co-partitioned, one exchange each; unlike the
     corpus-wide variant the violator build side grows with the number
-    of HOSTS (every site has nav lines), so the default is a shuffled
-    equi-join — the (host, h) key is Zipf-flat (hot boilerplate is hot
-    only within its host) and AQE splits any residual skew; set
-    ``broadcast_freq=True`` only for bounded-host corpora."""
+    of HOSTS (every site has nav lines), so it is a shuffled equi-join,
+    never a broadcast — the (host, h) key is Zipf-flat (hot boilerplate
+    is hot only within its host) and AQE splits any residual skew."""
     import re
 
     lines = df.select(
@@ -2526,8 +2507,6 @@ def host_boilerplate_dedup(
         F.count_distinct("id").alias("df")
     )
     boiler = freq.filter(F.col("df") > max_doc_freq)
-    if broadcast_freq:
-        boiler = F.broadcast(boiler)
     kept = lines.join(boiler, ["host", "h"], "left").withColumn(
         "keep",
         F.col("df").isNull() | (F.trim(F.col("line")) == ""),

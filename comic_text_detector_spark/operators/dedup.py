@@ -1005,14 +1005,14 @@ def bag_dedup_groups(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    fold_case: bool = True,
 ) -> DataFrame:
     """Scrambled-duplicate groups: documents whose TOKEN MULTISETS are
     identical — the spun-content signature (spam mills permute
     sentences/words of a stolen article; exact-hash dedup misses every
     permutation, minhash mostly keeps them since shingles change). The
     group key is md5 over the SORTED token list (order-insensitive,
-    multiplicity-preserving), optionally case-folded.
+    multiplicity-preserving), case-folded so a re-cased copy still
+    matches.
 
     Emits (bag_md5, n_docs, n_tokens, ids) for groups of ≥ 2 — an
     audit relation; compose with ``keep_best_representatives`` (pairs
@@ -1022,9 +1022,7 @@ def bag_dedup_groups(
     aggregate; ``ids`` is sorted for determinism and bounded by the
     group (a pathological million-copy template still aggregates —
     cap with a slice at the call site if ids lists must stay small)."""
-    t = F.col(text_col).cast("string")
-    if fold_case:
-        t = F.lower(t)
+    t = F.lower(F.col(text_col).cast("string"))
     toks = F.filter(
         F.split(F.coalesce(t, F.lit("")), r"\s+"), lambda w: w != ""
     )

@@ -93,7 +93,7 @@ def count_min_sketch(
     aggregation (groupBy cells), so Structured Streaming's state store
     accumulates it across micro-batches with no custom state code
     (complete/update output; asserted batch≡streaming in
-    tests/test_stateful_streaming.py)."""
+    tests/test_stats.py)."""
     from .dedup import md5_long
 
     if depth < 1 or width < 1:

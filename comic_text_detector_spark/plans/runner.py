@@ -192,11 +192,10 @@ def _ensure_staging(
     num_chunks: int,
     salt_hot_hosts: bool,
     hot_row_threshold: int,
-    dedup: bool = True,
 ) -> None:
     if os.path.exists(os.path.join(staging_dir, "_SUCCESS")):
         return
-    docs = asof_dedup(documents) if dedup else documents
+    docs = asof_dedup(documents)
     if salt_hot_hosts:
         from ..operators.salting import salted_partition_key
 
@@ -234,7 +233,6 @@ def run_extract(
     stop_after_chunks: int | None = None,
     salt_hot_hosts: bool = False,
     hot_row_threshold: int = 10_000,
-    dedup: bool = True,
     atomic_partition_writes: bool = False,
 ) -> dict:
     """Run (or resume) the extraction job.
@@ -242,9 +240,8 @@ def run_extract(
     ``stop_after_chunks`` is the fault-injection hook for the resumability
     test: the driver runs only the first N pending chunks, simulating a
     crash after their commits.
-    ``dedup=False`` skips the as-of window for inputs already known to hold
-    one capture per url (the common production case with a dedup-maintained
-    table) — the staging pass then shuffles nothing.
+    Staging always runs the as-of window (latest capture per url wins), so
+    an input holding re-captures still yields one document per url.
     ``atomic_partition_writes=True`` repartitions each chunk by
     partition_id before extraction so ONE task owns each partition's
     output — required for exactly-once resume under task-visible commit
@@ -276,7 +273,7 @@ def run_extract(
     t_start = time.monotonic()
     _ensure_staging(
         spark, documents, staging_dir, num_partitions, num_chunks,
-        salt_hot_hosts, hot_row_threshold, dedup,
+        salt_hot_hosts, hot_row_threshold,
     )
     staging_s = time.monotonic() - t_start
     # the staged files' schema (chunk_id is the directory), so chunk scans

@@ -25,7 +25,6 @@ def get_spark(
     app_name: str = "comic_text_detector_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
@@ -36,7 +35,7 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config(
@@ -64,7 +63,5 @@ def get_spark(
         # and the knob stays SPARK_DRIVER_MEM either way.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()

@@ -1,9 +1,9 @@
 """Small-file compaction for extracted/curated tables — the table-
 maintenance job a long-running ingest accumulates a need for: many
-checkpointed chunk writes (plans/runner.py) or streaming micro-batches
-leave hundreds of small parquet files per directory, and small files are
-the classic scan-throughput killer at 100 TB (per-file open cost, tiny
-row groups, starved readers).
+checkpointed chunk writes (plans/runner.py) leave hundreds of small
+parquet files per directory, and small files are the classic
+scan-throughput killer at 100 TB (per-file open cost, tiny row groups,
+starved readers).
 
 Bin-packing by MEASURED bytes: target file count = ceil(dir bytes /
 --target-file-mb). An unpartitioned table is rewritten with a

@@ -40,33 +40,6 @@ def test_runner_salted_mode_end_to_end(spark, tmp_path):
     assert bad == 0
 
 
-def test_streaming_incremental_checkpoint(spark, tmp_path):
-    """Second availableNow run processes ONLY newly arrived files."""
-    from comic_text_detector_spark.streaming.stream_extract import extract_stream
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    first = corpus_df(spark, 10)
-    first.write.parquet(in_dir)
-    q = extract_stream(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(out_dir).count()
-
-    # new files arrive (disjoint urls)
-    more = corpus_df(spark, 10).withColumn(
-        "url", F.concat(F.lit("again-"), F.col("url"))
-    )
-    more.write.mode("append").parquet(in_dir)
-    q2 = extract_stream(spark, in_dir, out_dir, ckpt)
-    q2.awaitTermination(120)
-    final = spark.read.parquet(out_dir)
-    n2 = final.count()
-    assert n2 == n1 + more.dropDuplicates(["url"]).count()
-    # no url processed twice across the two incremental runs
-    assert final.groupBy("url").count().filter(F.col("count") > 1).count() == 0
-
-
 def test_session_ops_invariant_to_partitioning(spark):
     """Round-5 additions must not depend on physical layout: blocklist
     verdicts, bitext pairs, sentence dedup, CMS estimates, trustrank."""

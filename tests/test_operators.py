@@ -213,19 +213,6 @@ def test_shrink_span_collapses_to_midpoint(spark):
     assert (r.a, r.b) == (-75.0, 175.0)
 
 
-def test_visualize_spans_renderer(spark):
-    from comic_text_detector_spark.debug import visualize_spans
-
-    df = spark.createDataFrame(
-        [("u1", "hello world", [(0, 0, 5), (1, 6, 11)])],
-        "url string, text string,"
-        " spans array<struct<block_id:int,char_start:int,char_end:int>>",
-    )
-    out = visualize_spans(df)
-    assert "u1" in out and "|hello world|" in out
-    assert "|^^^^^ ^^^^^| 2 spans" in out
-
-
 def test_order_mini_box_and_quad_warp(spark):
     """F19 corner ordering (reference comparison structure incl. the
     stable x-tie behavior) and the F25 unit-square→quad warp."""

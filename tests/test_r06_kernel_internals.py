@@ -4,6 +4,8 @@
   (layouts, nulls, empties, slices) must agree with the per-cell path;
 * ``tokenize`` input polymorphism — str (pre-decoded), bytes, bytearray
   and memoryview inputs must yield identical node streams;
+* the positional slow path — markup inside a quoted attribute value must
+  not start a comment or rawtext construct past the tag's end;
 * ``_extract_batches`` — the flat ListArray span construction must
   round-trip the kernel's span tuples exactly, and with lineage on the
   ``partition_id`` / ``in_bytes`` / ``proc_us`` columns must stay aligned
@@ -63,6 +65,29 @@ def test_tokenize_input_polymorphism():
     assert tokenize(bytearray(raw)) == as_bytes
     assert tokenize(memoryview(raw)) == as_bytes
     assert tokenize(None) == []
+
+
+@pytest.mark.parametrize(
+    "doc, want",
+    [
+        (
+            '<p><a title="x><!--">hello world</a> more --> tail</p>',
+            [("hello world", True), ("more --> tail", False)],
+        ),
+        (
+            '<p><a title="x><script>">hello world</a> more</p>',
+            [("hello world", True), ("more", False)],
+        ),
+        # control: the same tag with no markup inside the quoted value
+        (
+            '<p><a title="x>">hello world</a> more</p>',
+            [("hello world", True), ("more", False)],
+        ),
+    ],
+    ids=["comment", "rawtext", "plain"],
+)
+def test_tokenize_slow_path_quoted_markup_stays_in_tag(doc, want):
+    assert [(n.text, n.is_link) for n in tokenize(doc)] == want
 
 
 def test_extract_batches_flat_span_construction():

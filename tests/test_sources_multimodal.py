@@ -1,4 +1,4 @@
-"""Sources/sinks (S-group), multimodal binary plumbing, streaming analogs."""
+"""Sources/sinks (S-group) and multimodal binary plumbing."""
 
 from __future__ import annotations
 
@@ -153,46 +153,6 @@ def test_decode_image_meta_real_headers(spark, media_df, monkeypatch):
     assert {f.media_id for f in frames} == {"m1", "m2", "m3"}
     m1_frames = [f for f in frames if f.media_id == "m1"]
     assert m1_frames[0].frame_idx == 0 and len(bytes(m1_frames[0].frame)) > 0
-
-
-def test_streaming_extract_matches_batch(spark, tmp_path):
-    from comic_text_detector_spark.fixtures import corpus_df
-    from comic_text_detector_spark.operators.dedup import asof_dedup
-    from comic_text_detector_spark.plans.extract import extract_fused
-    from comic_text_detector_spark.streaming.stream_extract import extract_stream
-
-    docs = corpus_df(spark, 30)
-    in_dir, out_dir, ckpt = (
-        str(tmp_path / "in"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    docs.write.parquet(in_dir)
-    q = extract_stream(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_dir)
-    expected = extract_fused(asof_dedup(docs))
-    assert got.count() == expected.count()
-    diff = (
-        got.withColumnRenamed("text", "t1")
-        .join(expected.withColumnRenamed("text", "t2"), "url")
-        .filter(F.col("t1") != F.col("t2"))
-        .count()
-    )
-    assert diff == 0
-
-
-def test_session_window_stream_shape(spark):
-    from comic_text_detector_spark.streaming.stream_extract import (
-        session_counts_stream,
-    )
-
-    ev = spark.createDataFrame(
-        [(1, "2026-01-01 00:00:00"), (1, "2026-01-01 00:10:00"), (1, "2026-01-01 02:00:00")],
-        "user_id long, ts_s string",
-    ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"))
-    out = session_counts_stream(ev).collect()  # batch DF: runs eagerly
-    assert sorted(r.n_events for r in out) == [1, 2]
 
 
 def test_bucketed_table_write_read_prune(spark, tmp_path):

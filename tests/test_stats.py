@@ -320,3 +320,53 @@ def test_token_entropy_closed_form(spark):
     assert abs(got[2].entropy_micro - round(math.log(6) * 1e6)) <= 1
     assert abs(got[3].entropy_micro - round(math.log(2) * 1e6)) <= 1
     assert got[3].top_token_frac_micro == 500_000
+
+
+def test_streaming_count_min_accumulates_across_batches(spark, tmp_path):
+    """count_min_sketch is a plain streaming aggregation: run it over a
+    file stream in complete mode across two availableNow triggers
+    sharing a checkpoint — the final sketch equals the batch sketch of
+    ALL rows (cell-exact), i.e. cross-batch heavy-hitter state needs no
+    custom operator."""
+    from pyspark.sql import functions as F
+
+    from comic_text_detector_spark.operators.stats import (
+        count_min_estimate,
+        count_min_sketch,
+    )
+
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
+    b1 = spark.createDataFrame([("a",)] * 5 + [("b",)] * 2, "host string")
+    b1.write.parquet(in_dir)
+
+    def run_once():
+        stream = spark.readStream.schema("host string").parquet(in_dir)
+        q = (
+            count_min_sketch(stream, "host", depth=3, width=256)
+            .writeStream.format("memory")
+            .queryName("cms_sink")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    run_once()
+    b2 = spark.createDataFrame([("a",)] * 3 + [("c",)] * 4, "host string")
+    b2.write.mode("append").parquet(in_dir)
+    run_once()
+    streamed = spark.sql("SELECT * FROM cms_sink")
+    batch = count_min_sketch(
+        spark.read.parquet(in_dir), "host", depth=3, width=256
+    )
+    assert sorted(map(tuple, streamed.collect())) == sorted(
+        map(tuple, batch.collect())
+    )
+    est = {
+        r.key: r.est
+        for r in count_min_estimate(
+            streamed, spark.read.parquet(in_dir), "host", depth=3, width=256
+        ).collect()
+    }
+    assert est["a"] == 8 and est["b"] == 2 and est["c"] == 4
