@@ -951,14 +951,14 @@ def _q_temperature_sample(spark, sf_dir):
 
 
 def _q_bloom_new_urls(spark, sf_dir):
-    """Incremental-crawl dedup via a sharded relational Bloom prefilter
-    (operators/dedup.py::bloom_new_keys): which of the increment's keys
-    has the base corpus never seen. The bloom (xxhash64 probes, bit_or
-    word aggregate, k broadcast-join lookups) is performance-only — the
-    output is the EXACT set difference, so the oracle is a plain
+    """Incremental-crawl dedup via a relational Bloom prefilter
+    (operators/bloom.py::bloom_new_keys): which of the increment's keys
+    has the base corpus never seen. The bloom (salted md5_long probes,
+    bit_or word aggregate, k broadcast-join lookups) is performance-only —
+    the output is the EXACT set difference, so the oracle is a plain
     anti-join; a false-negative bug in the bit arithmetic would drop keys
     and fail the row count."""
-    from comic_text_detector_spark.operators.dedup import bloom_new_keys
+    from comic_text_detector_spark.operators.bloom import bloom_new_keys
 
     docs = _t(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 5 < 4).select(
@@ -3590,8 +3590,8 @@ def _cut_lm_outliers_oracle() -> str:
 def _q_ccnet_tiers(spark, sf_dir):
     """CCNet tier extraction proper (operators/lm.py::ccnet_tiers,
     Wenzek et al. 2020 §4.3): per-language head/middle/tail tiers cut at
-    the corpus's own LM-score quantiles via percent_rank — the adaptive
-    version of lm_bucket's fixed thresholds. percent_rank is one IEEE
+    the corpus's own LM-score quantiles via percent_rank, not at fixed
+    score thresholds. percent_rank is one IEEE
     division of exact ints over a tie-free ordering, so tier labels
     replay bit-identically in DuckDB."""
     from comic_text_detector_spark.operators.lm import (

@@ -335,12 +335,6 @@ def gen_hard_documents(n: int = 100, seed: int = SEED + 1) -> list[dict]:
     return rows
 
 
-def hard_corpus_df(spark: SparkSession, n: int = 100, seed: int = SEED + 1) -> DataFrame:
-    rows = gen_hard_documents(n, seed)
-    data = [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"]) for r in rows]
-    return spark.createDataFrame(data, DOCUMENTS_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Spark-expression wrap for the driver's documents table (oracle round trip)
 # ---------------------------------------------------------------------------

@@ -32,11 +32,6 @@ def iou(
     return inter / ua
 
 
-def xywh2xyxy(cx: Column, cy: Column, w: Column, h: Column) -> list[Column]:
-    """F3 center-format → corner-format (utils/yolov5_utils.py:220-227)."""
-    return [cx - w / 2, cy - h / 2, cx + w / 2, cy + h / 2]
-
-
 def xyxy2xywh(x1: Column, y1: Column, x2: Column, y2: Column) -> list[Column]:
     return [(x1 + x2) / 2, (y1 + y2) / 2, x2 - x1, y2 - y1]
 
@@ -48,37 +43,6 @@ def xyxy2yolo(
     (utils/imgproc_utils.py:39-51)."""
     cx, cy, w, h = xyxy2xywh(x1, y1, x2, y2)
     return [cx / page_w, cy / page_h, w / page_w, h / page_h]
-
-
-def yolo2xyxy(
-    cx: Column, cy: Column, w: Column, h: Column, page_w: Column, page_h: Column
-) -> list[Column]:
-    """F3 denormalize (utils/imgproc_utils.py:53-66)."""
-    return xywh2xyxy(cx * page_w, cy * page_h, w * page_w, h * page_h)
-
-
-def clip_box(
-    x1: Column, y1: Column, x2: Column, y2: Column, page_w: Column, page_h: Column
-) -> list[Column]:
-    """P9 clip-to-page (inference.py:163-172 semantics)."""
-    z = F.lit(0.0)
-    return [
-        F.greatest(z, F.least(x1, page_w)),
-        F.greatest(z, F.least(y1, page_h)),
-        F.greatest(z, F.least(x2, page_w)),
-        F.greatest(z, F.least(y2, page_h)),
-    ]
-
-
-def expand_window(
-    x1: Column, y1: Column, x2: Column, y2: Column, page_w: Column, page_h: Column
-) -> list[Column]:
-    """F7 expand_textwindow (utils/imgproc_utils.py:151-161): pad the box by
-    (max(h,w)*0.25 + min(h,w)*0.75) / 16, clipped to the page."""
-    w = x2 - x1
-    h = y2 - y1
-    pad = (F.greatest(h, w) * 0.25 + F.least(h, w) * 0.75) / 16.0
-    return clip_box(x1 - pad, y1 - pad, x2 + pad, y2 + pad, page_w, page_h)
 
 
 def rotate_polygon(pts: Column, cx: Column, cy: Column, angle_rad: Column) -> Column:
@@ -176,13 +140,6 @@ def hex2rgb(color: Column) -> Column:
         F.shiftright(color, 8).bitwiseAND(F.lit(255)),
         color.bitwiseAND(F.lit(255)),
     )
-
-
-def block_angle(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    """F12 block geometry (utils/textblock.py:302-342): atan2 edge angle in
-    degrees, snapped to 0 when |angle| < 3."""
-    deg = F.degrees(F.atan2(y2 - y1, x2 - x1))
-    return F.when(F.abs(deg) < 3, F.lit(0.0)).otherwise(deg)
 
 
 def order_mini_box(pts: Column) -> Column:

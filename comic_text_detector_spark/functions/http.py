@@ -3,11 +3,9 @@ pipeline applies: keep status-200 ``text/html`` payloads, route
 everything else (redirects, errors, binaries) away BEFORE the
 expensive extraction stage ever sees the bytes.
 
-``sources/warc.py::parse_warc`` strips the envelope when reading WARC
-response records; this module is the column-level complement for
-pipelines that carry the RAW envelope (direct fetch tables, revisit
-analysis, redirect-chain mining) — pure regexp/substring column
-expressions, zero shuffles, oracle-replayable.
+This module parses the RAW envelope for pipelines that carry it (direct
+fetch tables, revisit analysis, redirect-chain mining) — pure
+regexp/substring column expressions, zero shuffles, oracle-replayable.
 
 Discipline: a payload that does not start with ``HTTP/`` yields NULL
 status and a NULL body (it is not an HTTP envelope — never guess);
@@ -92,7 +90,7 @@ def http_response_meta(
             "content_length"
         ),
         F.when(is_http, _header(env, "location")).alias("location"),
-        # validators for conditional revisits (revisit_request_headers)
+        # validators for conditional revisits
         F.when(is_http, _header(env, "etag")).alias("etag"),
         F.when(is_http, _header(env, "last-modified")).alias(
             "last_modified"
@@ -101,18 +99,6 @@ def http_response_meta(
             is_http & (env_end > 0),
             F.substring(p, env_end + 4, 2_147_483_647),
         ).alias("body"),
-    )
-
-
-def keep_html_ok(meta: DataFrame) -> DataFrame:
-    """The canonical front-door filter: status 200, ``text/html`` or
-    ``application/xhtml+xml``, non-NULL body. A pushed-down Filter on
-    the parsed columns — redirects/errors/binaries never reach the
-    extraction Arrow stage."""
-    return meta.filter(
-        (F.col("status") == 200)
-        & F.col("content_type").isin("text/html", "application/xhtml+xml")
-        & F.col("body").isNotNull()
     )
 
 
@@ -254,7 +240,7 @@ def soft404_signals(
 ) -> DataFrame:
     """(url, title_nf, body_nf, tiny, soft404_score, is_soft404) from
     extracted (status, title, text) columns — the post-extraction
-    complement of ``keep_html_ok``'s status gate.
+    complement of the status gate.
 
     ``soft404_score`` = 600·title_nf + 400·body_nf + 100·tiny;
     ``is_soft404`` fires only on status-200 rows with score ≥ 500
@@ -283,23 +269,4 @@ def soft404_signals(
         (
             (F.col(status_col) == 200) & (score >= SOFT404_THRESHOLD)
         ).alias("is_soft404"),
-    )
-
-
-def revisit_request_headers(meta: DataFrame) -> DataFrame:
-    """Conditional-GET plan for a recrawl: (url, if_none_match,
-    if_modified_since, conditional) from a prior capture's parsed
-    envelope. RFC 9110 §13.1: send the stored ETag back verbatim as
-    If-None-Match (weak validators included — fine for GET), and the
-    stored Last-Modified as If-Modified-Since; ``conditional`` is
-    false when the origin gave no validator at all (the fetcher must
-    do a full GET — never invent a validator). Pure projection; pairs
-    with ``operators/recrawl.py::recrawl_schedule`` for WHEN to ask."""
-    return meta.select(
-        "url",
-        F.col("etag").alias("if_none_match"),
-        F.col("last_modified").alias("if_modified_since"),
-        (
-            F.col("etag").isNotNull() | F.col("last_modified").isNotNull()
-        ).alias("conditional"),
     )

@@ -10,19 +10,13 @@ any corpus size.
 
 Float contract: dice and masked-L1 are sums of products of caller values
 (dyadic inputs → exact sums in any order) plus one division — SQL-oracle
-checkable bit-for-bit. Balanced BCE needs log/exp, which engines round
-differently in the last ulp, so it is pytest-verified against an
-independent numpy replication instead (the one documented rows-only-style
-exception, same policy as the xxhash64 ops).
+checkable bit-for-bit.
 
 Reference analogs:
 * DiceLoss — /root/reference/utils/loss.py:103-138
   (1 - 2·Σ(p·g·m) / (Σ(p·m) + Σ(g·m) + eps)).
 * MaskL1Loss — /root/reference/utils/loss.py:140-147
   (Σ(|p−g|·m) / (Σm + eps)).
-* BalanceCrossEntropyLoss — /root/reference/utils/loss.py:50-101
-  (all positive BCE terms + the top negative_ratio·|pos| negative terms,
-  normalized by the selected count — OHEM negative mining).
 * border map — /root/reference/utils/db_utils.py:674-692 (per-pixel
   clipped distance to the polygon edge over the dilated band; 1-D recast
   below uses the F18 offset δ = L(1−r²)/2 as the band width).
@@ -30,7 +24,7 @@ Reference analogs:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -76,59 +70,6 @@ def masked_l1_loss(
     return agg.select(
         group_col,
         (F.col("num") / (F.col("den") + F.lit(eps))).alias("l1_loss"),
-    )
-
-
-def balanced_bce_loss(
-    df: DataFrame,
-    group_col: str,
-    logit_col: str = "logit",
-    gt_col: str = "gt",
-    mask_col: str = "mask",
-    negative_ratio: float = 3.0,
-    eps: float = 1e-6,
-) -> DataFrame:
-    """(group, bce_loss): BCE-with-logits with OHEM negative mining — all
-    positive terms plus the top ``min(#neg, negative_ratio·#pos)`` negative
-    terms, normalized by the selected count. Relational shape: per-row
-    stable BCE expr (max(x,0) − x·g + log1p(exp(−|x|))), one window to
-    rank negatives per group, one aggregate. log/exp make it
-    pytest-checked (numpy replication), not SQL-oracled."""
-    x, g, m = F.col(logit_col), F.col(gt_col), F.col(mask_col)
-    l = F.greatest(x, F.lit(0.0)) - x * g + F.log1p(F.exp(-F.abs(x)))
-    d = df.withColumn("__l", l).withColumn(
-        "__pos", (g * m).cast("double")
-    ).withColumn("__neg", ((F.lit(1.0) - g) * m).cast("double"))
-    wcount = Window.partitionBy(group_col)
-    wrank = Window.partitionBy(group_col).orderBy(
-        F.when(F.col("__neg") > 0, F.col("__l")).desc_nulls_last()
-    )
-    d = (
-        d.withColumn("__pc", F.sum("__pos").over(wcount))
-        .withColumn("__rn", F.row_number().over(wrank))
-        .withColumn(
-            "__keep_neg",
-            (F.col("__neg") > 0)
-            & (
-                F.col("__rn")
-                <= F.floor(F.col("__pc") * F.lit(negative_ratio))
-            ),
-        )
-    )
-    agg = d.groupBy(group_col).agg(
-        F.sum(F.col("__l") * F.col("__pos")).alias("pl"),
-        F.sum(
-            F.when(F.col("__keep_neg"), F.col("__l")).otherwise(F.lit(0.0))
-        ).alias("nl"),
-        F.sum("__pos").alias("pc"),
-        F.sum(F.when(F.col("__keep_neg"), 1.0).otherwise(0.0)).alias("nc"),
-    )
-    return agg.select(
-        group_col,
-        (
-            (F.col("pl") + F.col("nl"))
-            / (F.col("pc") + F.col("nc") + F.lit(eps))
-        ).alias("bce_loss"),
     )
 
 

@@ -8,18 +8,15 @@ valid PNGs, CRCs and zlib IDAT included) make the round trip testable by
 construction, like the PDF source. Reference analog: ``imread``
 (reference utils/io_utils.py:42) decodes real bytes at pipeline entry.
 
-Pixel-level decode IS real for PNG (``multimodal/pixels.py``: full
-unfilter, letterbox, re-encode) and video frame extraction IS real for
-Y4M containers (``pixels.sample_y4m_frames``). Codec-entropy formats
-(h264, full JPEG pixel decode) need cv2/PIL/ffmpeg, not in this
-container — those are dropped, not faked. ``sample_frames`` below
-remains only as the clearly-marked ``CTD_FAKE_DECODE`` byte-slicing
-test harness for codec formats; it is opt-in and raises otherwise.
+Pixel-level decode is real for PNG (``multimodal/pixels.py``: full
+unfilter, letterbox, re-encode), baseline JPEG and GIF, and video frame
+extraction is real for Y4M containers (``pixels.y4m_frame_stats``).
+Codec-entropy formats (h264 and the like) need cv2/PIL/ffmpeg, not in this
+container, and are dropped, not faked.
 """
 
 from __future__ import annotations
 
-import os
 import struct
 import zlib
 from collections.abc import Iterator
@@ -28,18 +25,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA_DDL = "media_id string, media binary, mime string"
 IMAGE_META_DDL = (
     "media_id string, mime string, width int, height int, channels int, ok boolean"
 )
-FRAME_SAMPLE_DDL = "media_id string, frame_idx int, frame binary"
-
-_MAGIC = {
-    b"\x89PNG": "image/png",
-    b"\xff\xd8\xff": "image/jpeg",
-    b"RIFF": "audio/wav",
-    b"\x1aE\xdf\xa3": "video/webm",
-}
 
 
 def sniff_mime(media: Column) -> Column:
@@ -53,17 +41,6 @@ def sniff_mime(media: Column) -> Column:
         .when(hexpfx.startswith("52494646"), F.lit("audio/wav"))
         .when(hexpfx.startswith("1a45dfa3"), F.lit("video/webm"))
         .otherwise(F.lit("application/octet-stream"))
-    )
-
-
-def media_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
-    """Typed metadata projection: byte length, sha256, sniffed mime —
-    all built-in expressions."""
-    return df.select(
-        "*",
-        F.length(F.col(media_col)).alias("n_bytes"),
-        F.sha2(F.col(media_col), 256).alias("sha256"),
-        sniff_mime(F.col(media_col)).alias("sniffed_mime"),
     )
 
 
@@ -240,77 +217,3 @@ def synthesize_jpeg(width: int, height: int) -> bytes:
 def synthesize_gif(width: int, height: int) -> bytes:
     """Minimal GIF89a: header + logical screen descriptor + trailer."""
     return b"GIF89a" + struct.pack("<HH", width, height) + b"\x70\x00\x00" + b"\x3b"
-
-
-def grayscale_png(pixels: bytes, width: int) -> bytes:
-    """Fully valid 8-bit grayscale PNG from raw pixel bytes (row-major,
-    ``len(pixels)`` must be a multiple of ``width``). Same chunk machinery
-    as ``synthesize_png``; used by the span-mask sink (S7)."""
-    if not pixels:  # empty input → a real 1x1 black pixel, never a
-        pixels = b"\x00"  # truncated IDAT (IHDR must match the data)
-        width = 1
-    width = max(1, width)
-    height = max(1, len(pixels) // width)
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
-    scanlines = b"".join(
-        b"\x00" + pixels[r * width : (r + 1) * width] for r in range(height)
-    )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + png_chunk(b"IHDR", ihdr)
-        + png_chunk(b"IDAT", zlib.compress(scanlines))
-        + png_chunk(b"IEND", b"")
-    )
-
-
-def decode_grayscale_png(data: bytes) -> bytes:
-    """Inverse of ``grayscale_png`` for golden tests: inflate IDAT and strip
-    the per-row filter byte (filter 0 only — what the encoder emits)."""
-    meta = parse_image_meta(data)
-    if meta is None or meta[0] != "image/png":
-        raise ValueError("not a PNG")
-    _, width, height, _ = meta
-    idat = b""
-    i = 8
-    while i + 8 <= len(data):
-        (ln,) = struct.unpack(">I", data[i : i + 4])
-        tag = data[i + 4 : i + 8]
-        if tag == b"IDAT":
-            idat += data[i + 8 : i + 8 + ln]
-        i += 12 + ln
-    raw = zlib.decompress(idat)
-    stride = width + 1
-    return b"".join(raw[r * stride + 1 : (r + 1) * stride] for r in range(height))
-
-
-def sample_frames(
-    df: DataFrame, every_n: int = 10, media_col: str = "media"
-) -> DataFrame:
-    """TEST-HARNESS frame sampling for codec formats: emits (media_id,
-    frame_idx, frame) rows — the UDTF (one-to-many) batch shape — by
-    slicing bytes deterministically. Opt-in via ``CTD_FAKE_DECODE=1``;
-    otherwise raises. REAL frame sampling exists for Y4M containers:
-    ``multimodal.pixels.sample_y4m_frames`` (same output shape, genuine
-    demux + pixel decode). Codec formats (h264 etc.) need ffmpeg — a real
-    deployment swaps the decode call inside this kernel."""
-    fake = os.environ.get("CTD_FAKE_DECODE", "0") == "1"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "codec frame sampling requires ffmpeg; for Y4M use "
-                    "multimodal.pixels.sample_y4m_frames (real), or set "
-                    "CTD_FAKE_DECODE=1 for the byte-slicing test harness"
-                )
-            out = {"media_id": [], "frame_idx": [], "frame": []}
-            for mid, media in zip(pdf["media_id"], pdf[media_col]):
-                raw = bytes(media) if media is not None else b""
-                n_frames = max(1, len(raw) // 256)
-                for i in range(0, n_frames, every_n):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["frame"].append(raw[i * 256 : (i + 1) * 256])
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", media_col).mapInPandas(kernel, FRAME_SAMPLE_DDL)

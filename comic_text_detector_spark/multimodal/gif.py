@@ -449,49 +449,6 @@ def encode_gif_animation(
     return bytes(out)
 
 
-def sample_gif_frames(
-    df: DataFrame, every_n: int = 1, media_col: str = "media", size: int = 0
-) -> DataFrame:
-    """REAL animation frame sampling, the GIF sibling of
-    ``pixels.sample_y4m_frames`` (same output shape): composite every
-    frame of each GIF (disposal + partial updates for real), keep every
-    ``every_n``-th, emit each as an RGB PNG (optionally letterboxed to
-    ``size``). One-to-many Arrow-batched kernel, no shuffle. Undecodable
-    blobs yield no rows (drop-not-fake)."""
-    import pandas as pd
-
-    from .pixels import encode_png, letterbox_pixels
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf[media_col]):
-                frames = decode_gif_frames(
-                    bytes(blob) if blob is not None else b""
-                )
-                if not frames:
-                    continue
-                for idx, arr in enumerate(frames):
-                    if idx % every_n:
-                        continue
-                    h, w = arr.shape[:2]
-                    if size:
-                        arr = letterbox_pixels(arr, size)[0]
-                    rows.append((mid, idx, w, h, encode_png(arr)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height", "frame_png"
-                ],
-            )
-
-    return df.select("media_id", media_col).mapInPandas(
-        kernel,
-        "media_id string, frame_idx int, width int, height int,"
-        " frame_png binary",
-    )
-
-
 def gif_frame_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
     """Per-GIF animation summary over REAL composited frames: (media_id,
     n_frames, width, height, last_sum) where ``last_sum`` is the integer

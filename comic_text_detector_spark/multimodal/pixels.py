@@ -116,8 +116,8 @@ def decode_png_pixels(data: bytes) -> np.ndarray | None:
 def decode_image_pixels(data: bytes) -> np.ndarray | None:
     """Magic-byte dispatch over the real pixel decoders: PNG (this module)
     or baseline JPEG (``multimodal.jpeg``) → (h, w, ch) uint8, else None.
-    This is the decode call every pixel-tier operator (letterbox, warp)
-    goes through, so the dominant crawl format decodes for real too."""
+    This is the decode call the pixel-tier operators (letterbox) go
+    through, so the dominant crawl format decodes for real too."""
     if not isinstance(data, (bytes, bytearray)):
         return None
     data = bytes(data)
@@ -229,142 +229,6 @@ def letterbox_images(
     )
 
 
-def warp_quad_coeffs_np(quad: list[tuple[float, float]]) -> tuple[float, ...]:
-    """The SAME unit-square→quad closed form as
-    ``functions.geometry.quad_warp_coeffs``, in plain floats for the pixel
-    kernel (one definition per tier: column exprs for the relational gate,
-    this for numpy sampling — both cite reference utils/textblock.py:
-    162-194)."""
-    (x0, y0), (x1, y1), (x2, y2), (x3, y3) = quad
-    dx1, dy1 = x1 - x2, y1 - y2
-    dx2, dy2 = x3 - x2, y3 - y2
-    dx3, dy3 = x0 - x1 + x2 - x3, y0 - y1 + y2 - y3
-    den = dx1 * dy2 - dy1 * dx2
-    g = (dx3 * dy2 - dy3 * dx2) / den
-    h = (dx1 * dy3 - dy1 * dx3) / den
-    return (
-        x1 - x0 + g * x1, x3 - x0 + h * x3, x0,
-        y1 - y0 + g * y1, y3 - y0 + h * y3, y0, g, h,
-    )
-
-
-def warp_region_pixels(
-    arr: "np.ndarray", quad: list[tuple[float, float]], textheight: int,
-    vertical: bool = False,
-) -> "np.ndarray":
-    """F25 get_transformed_region on REAL pixels (reference
-    utils/textblock.py:162-194): rectify the quad [tl, tr, br, bl] to an
-    upright strip. Sizing follows the reference's midpoint-aspect
-    formulas per branch — horizontal: h = textheight,
-    w = round(textheight / ratio); vertical: w = textheight,
-    h = round(textheight * ratio), then rotate 90° CCW — with
-    ratio = ‖mid_v‖/‖mid_h‖ and python round() (banker's), matching the
-    reference's int(round(...)) exactly (unlike letterbox_geometry, which
-    uses floor(+0.5) because it shares a SQL-oracle contract; this kernel
-    has no SQL twin, so reference parity wins). Sampling is
-    nearest-neighbor via the inverse map (each destination pixel pulled
-    through the square→quad transform — no matrix inversion, no cv2);
-    the reference's bilinear filter is an antialiasing nicety, not a
-    geometry difference, and nearest keeps axis-aligned warps exactly
-    equal to crops (tested)."""
-    (x0, y0), (x1, y1), (x2, y2), (x3, y3) = quad
-    m0 = ((x0 + x1) / 2, (y0 + y1) / 2)
-    m1 = ((x1 + x2) / 2, (y1 + y2) / 2)
-    m2 = ((x2 + x3) / 2, (y2 + y3) / 2)
-    m3 = ((x3 + x0) / 2, (y3 + y0) / 2)
-    vec_v = (m2[0] - m0[0], m2[1] - m0[1])
-    vec_h = (m1[0] - m3[0], m1[1] - m3[1])
-    ratio = float(np.hypot(*vec_v)) / float(np.hypot(*vec_h))
-    if vertical:
-        w = int(textheight)
-        h = int(round(textheight * ratio))
-    else:
-        h = int(textheight)
-        w = int(round(textheight / ratio))
-    if h < 2 or w < 2:
-        raise ValueError(f"degenerate warp target {w}x{h}")
-    # A near-degenerate quad (tiny ||vec_h||) makes ratio, and hence the
-    # destination raster, unboundedly large; refuse instead of letting
-    # np.mgrid allocate an executor-OOM-sized array (caller degrades to
-    # ok=false like every other malformed input).
-    if h > 10_000 or w > 10_000:
-        raise ValueError(f"warp target {w}x{h} exceeds 10000px bound")
-    a, b, c, d, e, f, g, hh = warp_quad_coeffs_np(quad)
-    ys, xs = np.mgrid[0:h, 0:w]
-    u = xs / (w - 1)
-    v = ys / (h - 1)
-    den = g * u + hh * v + 1.0
-    sx = (a * u + b * v + c) / den
-    sy = (d * u + e * v + f) / den
-    ih, iw = arr.shape[0], arr.shape[1]
-    sxi = np.clip(np.floor(sx + 0.5).astype(np.int64), 0, iw - 1)
-    syi = np.clip(np.floor(sy + 0.5).astype(np.int64), 0, ih - 1)
-    region = arr[syi, sxi]
-    if vertical:
-        region = np.rot90(region)  # CCW, reference ROTATE_90_COUNTERCLOCKWISE
-    return np.ascontiguousarray(region)
-
-
-def warp_region_images(
-    df: DataFrame,
-    textheight: int = 48,
-    media_col: str = "media",
-    quad_col: str = "quad",
-    vertical_col: str | None = None,
-) -> DataFrame:
-    """DataFrame face of F25: (media_id, media, quad[, vertical]) →
-    (media_id, ok, out_w, out_h, region_png). ``quad`` is
-    array<array<double>> [tl, tr, br, bl] in source-pixel coordinates.
-    Decodes PNG or baseline JPEG (``decode_image_pixels``); undecodable
-    / degenerate rows emit ok=false, null region — same tolerant
-    contract as every media kernel here."""
-    import pandas as pd
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            verts = (
-                pdf[vertical_col]
-                if vertical_col is not None
-                else [False] * len(pdf)
-            )
-            for mid, blob, quad, vert in zip(
-                pdf["media_id"], pdf[media_col], pdf[quad_col], verts
-            ):
-                arr = decode_image_pixels(blob)
-                if arr is None or quad is None or len(quad) != 4:
-                    rows.append((mid, False, None, None, None))
-                    continue
-                try:
-                    # the quad parse sits INSIDE the try: a null point or
-                    # short inner array (legal for array<array<double>>)
-                    # raises TypeError/IndexError and must degrade to
-                    # ok=false, never crash the task
-                    region = warp_region_pixels(
-                        arr,
-                        [(float(p[0]), float(p[1])) for p in quad],
-                        textheight,
-                        vertical=bool(vert),
-                    )
-                except (ValueError, ZeroDivisionError, TypeError, IndexError):
-                    rows.append((mid, False, None, None, None))
-                    continue
-                rows.append(
-                    (mid, True, region.shape[1], region.shape[0],
-                     encode_png(region))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "ok", "out_w", "out_h", "region_png"],
-            )
-
-    return df.mapInPandas(
-        kernel,
-        "media_id string, ok boolean, out_w int, out_h int,"
-        " region_png binary",
-    )
-
-
 # ---- real video: Y4M (YUV4MPEG2) container ----
 #
 # The one mainstream video container that is fully stdlib-parseable: a text
@@ -451,46 +315,13 @@ def iter_y4m_frames(data: bytes):
         idx += 1
 
 
-def sample_y4m_frames(
-    df: DataFrame, every_n: int = 10, media_col: str = "media", size: int = 0
-) -> DataFrame:
-    """REAL frame sampling: demux Y4M, keep every ``every_n``-th frame,
-    emit each as a grayscale PNG of the luma plane (optionally letterboxed
-    to ``size``). One-to-many Arrow-batched kernel, no shuffle — the UDTF
-    shape SURVEY §2.8 asks of the video leg, now over genuine containers."""
-    import pandas as pd
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf[media_col]):
-                for w, h, idx, luma in iter_y4m_frames(blob):
-                    if idx % every_n:
-                        continue
-                    arr = np.frombuffer(luma, dtype=np.uint8).reshape(h, w, 1)
-                    if size:
-                        arr = letterbox_pixels(arr, size)[0]
-                    rows.append((mid, idx, w, h, encode_png(arr)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "width", "height", "frame_png"],
-            )
-
-    return df.select("media_id", media_col).mapInPandas(
-        kernel,
-        "media_id string, frame_idx int, width int, height int, frame_png binary",
-    )
-
-
 def y4m_frame_stats(
     df: DataFrame, every_n: int = 1, media_col: str = "media"
 ) -> DataFrame:
     """Frame-sampling AUDIT rows for the video leg: demux Y4M, keep every
     ``every_n``-th frame, and emit (media_id, frame_idx, width, height,
-    luma_sum) — the integer sum of the sampled frame's luma plane. This is
-    the gate-checkable face of ``sample_y4m_frames`` (whose PNG payloads an
-    SQL oracle cannot rebuild): the sum is exact integer arithmetic over
-    the decoded bytes, so a demux bug (wrong stride, wrong chroma skip,
+    luma_sum) — the integer sum of the sampled frame's luma plane, exact
+    integer arithmetic over the decoded bytes, so a demux bug (wrong stride, wrong chroma skip,
     off-by-one frame walk) or a sampling bug (wrong cadence) changes a
     value the oracle predicts. Undecodable/non-Y4M blobs yield no rows
     (drop-not-fake, same contract as ``iter_y4m_frames``).

@@ -1,7 +1,7 @@
 """Real WAV (RIFF PCM) audio decode + integer-exact feature extraction.
 
 Completes the multimodal triad (images: ``pixels.py``/``jpeg.py``/
-``gif.py``; video: ``pixels.sample_y4m_frames``; audio: here). WAV is the
+``gif.py``; video: ``pixels.y4m_frame_stats``; audio: here). WAV is the
 one audio container fully parseable with the stdlib: a RIFF chunk walk to
 the ``fmt `` and ``data`` chunks, then fixed-width PCM samples. Anything
 that needs a codec (MP3, AAC, FLAC) is refused — decodable-or-refused,

@@ -118,3 +118,42 @@ def bloom_contains(
     return out.select(*keep, F.coalesce(present, F.lit(False)).alias(
         "maybe_present"
     ))
+
+
+def bloom_new_keys(
+    base: DataFrame,
+    incr: DataFrame,
+    key_col: str = "url",
+    m_bits: int = 1 << 24,
+    k: int = 4,
+) -> DataFrame:
+    """EXACT set of keys in ``incr`` that are absent from ``base`` — the
+    incremental-crawl dedup primitive ("which of this snapshot's URLs have
+    we never seen?") — with a Bloom prefilter so the expensive exact
+    anti-join runs only over candidate matches.
+
+    Plan shape: ``bloom_build`` over the base keys, then ``bloom_contains``'s
+    k broadcast joins split the increment's distinct keys into
+    DEFINITE-NEW (some probe bit clear; the filter has no false negatives,
+    so these skip the join entirely) and CANDIDATE (all k bits set: real
+    dups plus the false-positive rate). Only candidates flow into the
+    exact anti-join against base, so that join's probe side shrinks from
+    the whole increment to dups + ε·new.
+
+    Output: one row per distinct new key (column ``key_col``). NULL keys
+    are dropped (no meaningful identity). Correctness never depends on
+    the filter: false positives merely take the slow path.
+    """
+    key = F.col(key_col)
+    seen = base.filter(key.isNotNull()).select(key)
+    probed = bloom_contains(
+        incr.filter(key.isNotNull()).select(key).distinct(),
+        bloom_build(seen, key_col, m_bits, k),
+        key_col,
+        m_bits,
+        k,
+    )
+    definite_new = probed.filter(~F.col("maybe_present")).select(key)
+    candidates = probed.filter(F.col("maybe_present")).select(key)
+    confirmed_new = candidates.join(seen.distinct(), key_col, "left_anti")
+    return definite_new.unionByName(confirmed_new)

@@ -524,128 +524,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def build_bloom(
-    base: DataFrame,
-    key_col: str = "url",
-    n_buckets: int = 256,
-    bits_per_bucket: int = 1 << 16,
-    k: int = 4,
-) -> DataFrame:
-    """Sharded Bloom filter as a RELATION: rows (bucket, word, bits) where
-    ``bits`` is a bigint holding 64 filter bits. Spark's native
-    ``bloom_filter_agg`` is not in the public registry, so the filter is
-    built from public primitives — ``xxhash64`` probes and a ``bit_or``
-    aggregate — which also makes it engine-portable and join-able.
-
-    Scale shape: the groupBy's map-side ``bit_or`` partials collapse each
-    partition's contribution to at most the filter's own size
-    (n_buckets x bits/64 rows), so the shuffle is bounded by filter size —
-    NOT corpus size — no matter how many base keys stream through. The
-    result is megabytes for billions of keys and broadcasts cleanly.
-
-    Sizing: with ``n`` base keys spread over ``n_buckets``, the per-key
-    false-positive rate is ~(1-e^(-k·n̄/m))^k for n̄ = n/n_buckets,
-    m = bits_per_bucket — the caller picks m for the corpus; FP only
-    costs extra work in ``bloom_new_keys``'s exact confirm, never
-    correctness.
-    """
-    key = F.col(key_col)
-    # ONE corpus scan: the k probe positions travel as an array column and
-    # explode (a union of k per-probe branches would physically re-scan
-    # the base relation k times — Spark does not dedupe common subplans)
-    rows = base.filter(key.isNotNull()).select(
-        F.pmod(F.xxhash64(key), F.lit(n_buckets)).alias("bucket"),
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(F.xxhash64(F.lit(j), key), F.lit(bits_per_bucket))
-                    for j in range(k)
-                ]
-            )
-        ).alias("p"),
-    )
-    # pyspark's shiftleft() only takes a literal shift amount — go through
-    # a named column + F.expr for the column-valued shift
-    words = rows.select(
-        "bucket",
-        (F.col("p") / 64).cast("long").alias("word"),
-        (F.col("p") % 64).cast("int").alias("bit"),
-    ).select(
-        "bucket", "word", F.expr("shiftleft(CAST(1 AS BIGINT), bit)").alias("m")
-    )
-    return words.groupBy("bucket", "word").agg(F.bit_or("m").alias("bits"))
-
-
-def bloom_new_keys(
-    base: DataFrame,
-    incr: DataFrame,
-    key_col: str = "url",
-    n_buckets: int = 256,
-    bits_per_bucket: int = 1 << 16,
-    k: int = 4,
-) -> DataFrame:
-    """EXACT set of keys in ``incr`` that are absent from ``base`` — the
-    incremental-crawl dedup primitive ("which of this snapshot's URLs have
-    we never seen?") — with a Bloom prefilter so the expensive exact
-    anti-join runs only over candidate matches.
-
-    Plan shape: k broadcast hash joins against the sharded bloom relation
-    (zero shuffle — the filter is bounded-size regardless of base
-    cardinality), splitting the increment into DEFINITE-NEW (some probe
-    bit clear; the bloom guarantees no false negatives, so these skip the
-    join entirely) and CANDIDATE (all k bits set: real dups plus the FP
-    rate). Only candidates flow into the exact anti-join against base.
-    At 100 TB with a mostly-fresh increment, that join's probe side
-    shrinks from the whole increment to dups + ε·new — the base-side scan
-    stays, but the shuffle is keyed only by candidate keys.
-
-    Output: one row per distinct new key (column ``key_col``). NULL keys
-    are dropped (no meaningful identity). Correctness never depends on
-    the bloom: false positives merely take the slow path.
-    """
-    bloom = F.broadcast(
-        build_bloom(base, key_col, n_buckets, bits_per_bucket, k)
-    )
-    key = F.col(key_col)
-    cur = incr.filter(key.isNotNull()).select(key).distinct()
-    cur = cur.withColumn("bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)))
-    hit_flags = []
-    for j in range(k):
-        p = F.pmod(F.xxhash64(F.lit(j), key), F.lit(bits_per_bucket))
-        cur = cur.withColumn(f"_w{j}", (p / 64).cast("long")).withColumn(
-            f"_b{j}", (p % 64).cast("int")
-        )
-        bj = bloom.select(
-            F.col("bucket").alias(f"_kb{j}"),
-            F.col("word").alias(f"_kw{j}"),
-            F.col("bits").alias(f"_bits{j}"),
-        )
-        cur = cur.join(
-            bj,
-            (F.col("bucket") == F.col(f"_kb{j}"))
-            & (F.col(f"_w{j}") == F.col(f"_kw{j}")),
-            "left",
-        ).drop(f"_kb{j}", f"_kw{j}")
-        hit_flags.append(
-            F.expr(
-                f"_bits{j} IS NOT NULL"
-                f" AND (shiftright(_bits{j}, _b{j}) & CAST(1 AS BIGINT)) = 1"
-            )
-        )
-    maybe_dup = hit_flags[0]
-    for h in hit_flags[1:]:
-        maybe_dup = maybe_dup & h
-    cur = cur.select(key, maybe_dup.alias("_maybe"))
-    definite_new = cur.filter(~F.col("_maybe")).select(key)
-    candidates = cur.filter(F.col("_maybe")).select(key)
-    confirmed_new = candidates.join(
-        base.filter(F.col(key_col).isNotNull()).select(key).distinct(),
-        key_col,
-        "left_anti",
-    )
-    return definite_new.unionByName(confirmed_new)
-
-
 def neardup_survivors(
     df: DataFrame,
     id_col: str = "doc_id",

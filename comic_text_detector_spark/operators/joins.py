@@ -85,13 +85,3 @@ def recover_uncovered(
         .agg(F.max("__cov").alias("max_coverage"))
     )
     return agg.filter(F.col("max_coverage") < max_coverage)
-
-
-def paired_scan_join(
-    left: DataFrame, right: DataFrame, left_key: Column, right_key: Column,
-    how: str = "inner",
-) -> DataFrame:
-    """J5 filename-pairing equi-join on derived keys (reference
-    seg_dataset.py:125-135): broadcast when one side is small is left to
-    AQE/caller via F.broadcast."""
-    return left.join(right, left_key == right_key, how)

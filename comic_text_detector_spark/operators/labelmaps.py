@@ -8,7 +8,8 @@ Per polygon (convex, the kernel family's contract):
 * ignore rule — min bounding side < ``min_text_size``, |area| < 1, or a
   failed shrink → the ORIGINAL polygon is zeroed in the shrink mask and
   nothing is drawn (reference :556-564).
-* shrink map — ``shrink_polygon`` (d = A(1-r²)/P, miter offset) filled 1.
+* shrink map — the polygon offset inward by d = A(1-r²)/P (miter
+  offset, ``polygons._offset_ccw``) filled 1.
 * border map — offset the polygon OUTWARD by the same d, and inside that
   padded region write max(0, 1 - dist/d) where dist is the distance to
   the nearest original-polygon edge; the canvas composes polygons with

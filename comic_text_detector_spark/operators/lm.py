@@ -100,20 +100,6 @@ def lm_score(
     )
 
 
-def lm_bucket(
-    scored: DataFrame, head_min: float, tail_max: float
-) -> DataFrame:
-    """CCNet's head/middle/tail split on fixed score thresholds (CCNet
-    derives them from score quantiles of a held-out sample; pass those in
-    — fixed literals keep the bucketing deterministic and oracle-exact)."""
-    return scored.withColumn(
-        "bucket",
-        F.when(F.col("score") >= head_min, F.lit("head"))
-        .when(F.col("score") <= tail_max, F.lit("tail"))
-        .otherwise(F.lit("middle")),
-    )
-
-
 def ccnet_tiers(
     docs: DataFrame,
     unigrams: DataFrame,
@@ -126,7 +112,7 @@ def ccnet_tiers(
 ) -> DataFrame:
     """CCNet tier EXTRACTION proper (Wenzek et al. 2020 §4.3): per-
     language head/middle/tail tiers derived from the LM-score QUANTILES
-    of the corpus itself — unlike ``lm_bucket``'s fixed thresholds, the
+    of the corpus itself — unlike fixed score thresholds, the
     cut points adapt per language, which is the whole point (a 'good'
     perplexity in zh is a different number than in en).
 

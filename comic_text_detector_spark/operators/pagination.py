@@ -3,16 +3,9 @@
 article instead of k fragments (fragments depress quality scores, split
 dedup identities, and truncate training sequences mid-thought).
 
-Two halves:
-
-* ``extract_rel_next`` — (url, next_url) from raw html, both
-  attribute orders of ``<link rel="next" href=…>`` / ``<a rel="next"
-  href=…>``, entity-decoded href, root-relative resolution against the
-  page's own scheme+host (same rules as canonical_dedup / redirects);
-  any other relative form is dropped, never guessed.
-* ``stitch_pagination`` — walk the next-pointer chains from their
-  ROOTS (pages nobody points to) and concatenate the member texts in
-  chain order.
+``stitch_pagination`` takes the (url, next_url) edge list and walks the
+next-pointer chains from their ROOTS (pages nobody points to),
+concatenating the member texts in chain order.
 
 Discipline (shared with ``resolve_redirects``): no visited-set state —
 a pagination CYCLE (malformed sites do emit them) simply stops growing
@@ -36,52 +29,8 @@ sort) — here the page graph declares adjacency instead of geometry.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# attribute names are SPACE-ANCHORED (`( [^>]*)? rel=`) so a
-# data-rel="next"/data-href can never satisfy the match — the same
-# convention links.py documents for CANON_A/HREF
-REL_NEXT_A = (
-    '(?is)<(?:link|a)( [^>]*)? rel="next"( [^>]*)? href="([^">]*)"'
-)
-REL_NEXT_B = (
-    '(?is)<(?:link|a)( [^>]*)? href="([^">]*)"( [^>]*)? rel="next"'
-)
-
-
-def extract_rel_next(
-    df: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """(url, next_url) for every page declaring a rel-next; pages
-    without one emit nothing. Pure regexp column exprs."""
-    from comic_text_detector_spark.functions.links import decode_entities
-
-    h = F.col(html_col).cast("string")
-    raw = F.coalesce(
-        F.nullif(F.regexp_extract(h, REL_NEXT_A, 3), F.lit("")),
-        F.nullif(F.regexp_extract(h, REL_NEXT_B, 2), F.lit("")),
-    )
-    decoded = decode_entities(raw)  # THE shared definition (links.py)
-    url = F.col(url_col)
-    scheme = F.regexp_extract(url, r"^([a-zA-Z]+):", 1)
-    scheme_host = F.regexp_extract(url, r"^([a-zA-Z]+://[^/?#]+)", 1)
-    nxt = (
-        F.when(decoded.rlike("^[a-zA-Z]+://"), decoded)
-        .when(  # protocol-relative: resolve against the scheme alone
-            decoded.startswith("//") & (scheme != ""),
-            F.concat(scheme, F.lit(":"), decoded),
-        )
-        .when(
-            decoded.startswith("/") & (scheme_host != ""),
-            F.concat(scheme_host, decoded),
-        )
-    )
-    return (
-        df.select(url.alias("url"), nxt.alias("next_url"))
-        .filter(F.col("next_url").isNotNull())
-        .filter(F.col("next_url") != F.col("url"))
-    )
 
 
 def stitch_pagination(

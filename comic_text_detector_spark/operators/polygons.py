@@ -142,32 +142,9 @@ def rect_corners(
     return out
 
 
-def rotated_rect_iou(
-    r1: tuple[float, float, float, float, float],
-    r2: tuple[float, float, float, float, float],
-) -> float:
-    """(cx, cy, w, h, angle_rad) x2 → IoU. Reference
-    utils/db_utils.py:11-30 computes the same quantity with shapely."""
-    return convex_iou(rect_corners(*r1), rect_corners(*r2))
-
-
-def convex_offset(pts: list[Point], d: float) -> list[Point] | None:
-    """Offset a convex polygon by ``d`` (positive = outward): shift every
-    edge ``d`` along its outward normal and re-intersect adjacent edges —
-    miter joins. Returns None when the result is no longer strictly CCW
-    convex (shrink past the inradius, or a degenerate input): an explicit
-    refusal, never a self-intersecting 'polygon'. Non-finite coordinates
-    refuse too — NaN sails through every sign check and would otherwise
-    come back as an ok-looking all-NaN polygon."""
-    try:
-        p = ensure_ccw(_validate_poly(pts))
-    except ValueError:
-        return None
-    return _offset_ccw(p, d)
-
-
 def _offset_ccw(p: list[Point], d: float) -> list[Point] | None:
-    """Core of ``convex_offset`` for an already-validated CCW polygon —
+    """Miter offset of an already-validated CCW polygon by ``d``
+    (outward for d > 0, inward for d < 0), or None when it degenerates —
     the per-row kernels normalize once and call this directly instead of
     re-validating/re-orienting the same polygon three times."""
     if not math.isfinite(d):
@@ -226,39 +203,6 @@ def _offset_ccw(p: list[Point], d: float) -> list[Point] | None:
             if ex * (q[1] - s1[1]) - ey * (q[0] - s1[0]) < tol:
                 return None
     return out
-
-
-def unclip_polygon(
-    pts: list[Point], ratio: float = 1.5
-) -> list[Point] | None:
-    """True F18 unclip (reference utils/db_utils.py:168-174): offset
-    outward by d = area * ratio / perimeter."""
-    try:
-        p = ensure_ccw(_validate_poly(pts))
-    except ValueError:
-        return None
-    area = abs(polygon_area_signed(p))
-    per = _perimeter(p)
-    if per == 0:
-        return None
-    return _offset_ccw(p, area * ratio / per)
-
-
-def shrink_polygon(pts: list[Point], ratio: float) -> list[Point] | None:
-    """True F18 shrink (reference utils/db_utils.py:501-525): offset
-    inward by d = area * (1 - ratio^2) / perimeter. None when the shrink
-    distance exceeds the inradius (the polygon would invert) — callers
-    fall back to dropping the candidate, as the reference's validity
-    checks do."""
-    try:
-        p = ensure_ccw(_validate_poly(pts))
-    except ValueError:
-        return None
-    area = abs(polygon_area_signed(p))
-    per = _perimeter(p)
-    if per == 0:
-        return None
-    return _offset_ccw(p, -(area * (1 - ratio * ratio) / per))
 
 
 def _perimeter(p: list[Point]) -> float:

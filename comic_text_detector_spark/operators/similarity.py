@@ -395,30 +395,6 @@ def ivf_topk(
     )
 
 
-def srp_signature(vec_col: Column, num_planes: int = 16, dim: int = 64) -> Column:
-    """Signed-random-projection bucket id as a bigint column (no UDF).
-
-    Plane components are deterministic pseudo-randoms in [-1, 1]:
-    ((xxhash64(plane, dim_index) mod 2001) - 1000) / 1000.
-    """
-    sig = F.lit(0).cast("long")
-    for p in range(num_planes):
-        plane = F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda i: (
-                (F.pmod(F.xxhash64(F.lit(p), i), F.lit(2001)) - F.lit(1000))
-                / F.lit(1000.0)
-            ),
-        )
-        dot = F.aggregate(
-            F.zip_with(vec_col, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        sig = sig + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)).cast("long")
-    return sig
-
-
 def lsh_bucket_topk(
     corpus: DataFrame,
     queries: DataFrame,

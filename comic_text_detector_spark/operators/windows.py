@@ -32,26 +32,3 @@ def nth_per_group(
     return df.withColumn("__rn", F.row_number().over(w)).filter(
         F.col("__rn") == n
     ).drop("__rn")
-
-
-def sessionize(
-    df: DataFrame,
-    group_col: str,
-    order_col: str,
-    gap_expr: Column,
-    session_name: str = "session_id",
-) -> DataFrame:
-    """W3 gap sessionization — THE core webtext operator (the split_textblk
-    rule, reference utils/textblock.py:390-419): lag + conditional flag +
-    running sum = session id."""
-    w = Window.partitionBy(group_col).orderBy(order_col)
-    flag = F.when(
-        F.col(order_col).cast("double")
-        - F.lag(F.col(order_col).cast("double")).over(w)
-        > gap_expr,
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    return df.withColumn("__new", flag).withColumn(
-        session_name,
-        F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    ).drop("__new")

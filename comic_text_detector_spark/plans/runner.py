@@ -248,6 +248,13 @@ def run_extract(
     protocols (v2/direct committers); leave False (shuffle-free chunks)
     with a job-atomic committer. Returns a summary dict.
     """
+    # checked before anything is written: a bad value must not be
+    # persisted into _run_meta.json, where every rerun would refuse it
+    if num_partitions < 1 or num_chunks < 1:
+        raise ValueError(
+            f"num_partitions and num_chunks must be >= 1, got "
+            f"{num_partitions} and {num_chunks}"
+        )
     staging_dir = os.path.join(output_dir, "staging")
     data_dir = os.path.join(output_dir, "extracted")
 
@@ -399,121 +406,6 @@ def _append_metrics(
     )
 
 
-def run_extract_incremental(
-    spark: SparkSession,
-    documents: DataFrame,
-    output_dir: str,
-    snapshot_id: str,
-    ts_col: str = "warc_ts",
-    **run_kwargs,
-) -> dict:
-    """Incremental (recrawl) ingestion on top of the resumable runner:
-    each snapshot processes ONLY captures newer than the committed
-    watermark — the real workflow for a crawl table that keeps appending.
-
-    Layout: ``output_dir/snapshots/<snapshot_id>/`` is a full,
-    independently resumable ``run_extract`` output;
-    ``output_dir/_watermark.json`` records the committed watermark (in
-    epoch microseconds) plus the snapshot commit order, and advances ONLY
-    after the whole increment commits.
-
-    Crash-safety: the increment's UPPER ts bound is pinned into
-    ``<snap_dir>/_pending.json`` the first time the snapshot is entered,
-    so a crash → table grows → rerun sequence re-enters the SAME bounded
-    increment (old_watermark, pinned_max] and run_extract's per-partition
-    checkpoint resumes it; rows that arrived after the pin wait for the
-    next snapshot instead of slipping between a fresh max() and the
-    already-written staging (which would lose them). Re-running a
-    committed snapshot_id is a no-op. Input contract: the table is
-    append-only for rows at or below the pinned bound (what a WARC
-    capture log satisfies by construction).
-    """
-    wm_path = os.path.join(output_dir, "_watermark.json")
-    state = {"watermark_us": None, "snapshots": []}
-    if os.path.exists(wm_path):
-        with open(wm_path) as f:
-            state = json.load(f)
-    if snapshot_id in [s["snapshot_id"] for s in state["snapshots"]]:
-        return {"snapshot_id": snapshot_id, "skipped": "already_committed"}
-
-    # NULL capture timestamps must not silently vanish (both the watermark
-    # filter and the pinned upper bound would evaluate to null and drop the
-    # row even on the first snapshot). Coalesce them to epoch 0: they ride
-    # in the FIRST snapshot and are never re-processed by later increments
-    # — same fate a plain run_extract gives them, made explicit here.
-    ts_us = F.coalesce(
-        F.unix_micros(F.col(ts_col).cast("timestamp")), F.lit(0)
-    )
-    docs = documents
-    if state["watermark_us"] is not None:
-        docs = docs.filter(ts_us > F.lit(state["watermark_us"]))
-
-    snap_dir = os.path.join(output_dir, "snapshots", snapshot_id)
-    pending_path = os.path.join(snap_dir, "_pending.json")
-    if os.path.exists(pending_path):
-        with open(pending_path) as f:
-            mx = json.load(f)["watermark_us"]
-    else:
-        mx = docs.agg(F.max(ts_us).alias("m")).collect()[0].m
-        if mx is None:
-            return {"snapshot_id": snapshot_id, "skipped": "no_new_captures"}
-        os.makedirs(snap_dir, exist_ok=True)
-        with open(pending_path, "w") as f:
-            json.dump({"watermark_us": int(mx)}, f)
-    docs = docs.filter(ts_us <= F.lit(mx))
-
-    summary = run_extract(
-        spark, docs, snap_dir, run_id=snapshot_id, **run_kwargs
-    )
-    state["snapshots"].append(
-        {"snapshot_id": snapshot_id, "watermark_us": int(mx)}
-    )
-    state["watermark_us"] = max(int(mx), state["watermark_us"] or 0)
-    tmp = wm_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, wm_path)  # single-file atomic commit of the watermark
-    summary["snapshot_id"] = snapshot_id
-    summary["new_watermark_us"] = int(mx)
-    return summary
-
-
-def read_extracted_latest(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Read side of incremental mode: union committed snapshots and keep
-    each url's NEWEST snapshot row (recaptures supersede older extractions
-    — the cross-increment analog of the in-run as-of dedup)."""
-    from functools import reduce
-
-    from pyspark.sql import Window
-
-    wm_path = os.path.join(output_dir, "_watermark.json")
-    with open(wm_path) as f:
-        state = json.load(f)
-    if not state["snapshots"]:
-        raise ValueError(f"no committed snapshots under {output_dir}")
-    # rank by each snapshot's PINNED WATERMARK, not by commit order: a
-    # crashed increment resumed after a later one commits lands at the
-    # end of the list while holding OLDER captures — its rows must not
-    # supersede the newer snapshot's (commit index only breaks wm ties)
-    ordered = sorted(
-        enumerate(state["snapshots"]),
-        key=lambda t: (t[1]["watermark_us"], t[0]),
-    )
-    dfs = [
-        read_extracted(
-            spark, os.path.join(output_dir, "snapshots", s["snapshot_id"])
-        ).withColumn("__seq", F.lit(rank))
-        for rank, (_, s) in enumerate(ordered)
-    ]
-    merged = reduce(lambda a, b: a.unionByName(b), dfs)
-    w = Window.partitionBy("url").orderBy(F.col("__seq").desc())
-    return (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__seq", "__rn")
-    )
-
-
 def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
     return (
         spark.read.schema(_COMBINED_DDL)
@@ -523,22 +415,8 @@ def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
 
 
 def read_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.schema(_METRICS_DDL).parquet(
-        os.path.join(output_dir, "metrics")
-    )
-
-
-def metrics_report(metrics: DataFrame) -> DataFrame:
-    """GROUPING SETS rollup over the lineage table (SURVEY.md §2.4 note)."""
-    metrics.createOrReplaceTempView("__metrics")
-    return metrics.sparkSession.sql(
-        """
-        SELECT run_id, partition_id,
-               sum(docs_in)  AS docs_in,
-               sum(docs_out) AS docs_out,
-               sum(bytes)    AS bytes,
-               sum(wall_ms)  AS wall_ms
-        FROM __metrics
-        GROUP BY GROUPING SETS ((run_id, partition_id), (run_id), ())
-        """
-    )
+    """The lineage table; empty when no chunk has run (an empty input)."""
+    metrics_dir = os.path.join(output_dir, "metrics")
+    if not os.path.exists(metrics_dir):
+        return spark.createDataFrame([], _METRICS_DDL)
+    return spark.read.schema(_METRICS_DDL).parquet(metrics_dir)

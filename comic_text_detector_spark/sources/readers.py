@@ -1,36 +1,17 @@
 """Sources (SURVEY.md §2.1 S-group).
 
-S1 directory scan with predicate → Spark's file source + Catalyst pruning;
-S2 raw-byte ingestion → binaryFile source; S8 JSON re-scan with a DECLARED
-schema (the tolerant-kwargs behavior of TextBlock(**d) maps to from_json
-ignoring unknown fields); S9/S10 paired scans → equi-join on a derived key.
+S1 directory scan with a declared schema → Spark's file source + Catalyst
+pruning (``read_documents``), or an Iceberg table when one is configured
+(``read_table``); S11 annotation-line parse as column expressions
+(``parse_ann_line``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..schemas import DOCUMENTS_SCHEMA
-
-# The JSON block record schema — the F22/S8 serialization surface
-# (reference TextBlock.to_dict, utils/textblock.py:158-160; re-read path
-# inference.py:180-200). Unknown JSON fields are silently ignored by
-# from_json, mirroring the reference's **kwargs tolerance (textblock.py:44).
-BLOCK_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField("block_id", T.IntegerType()),
-        T.StructField("char_start", T.IntegerType()),
-        T.StructField("char_end", T.IntegerType()),
-        T.StructField("conf", T.DoubleType()),
-        T.StructField("language", T.StringType()),
-        T.StructField("vertical", T.BooleanType()),
-        T.StructField("font_size", T.DoubleType()),
-        T.StructField("angle", T.IntegerType()),
-        T.StructField("text", T.ArrayType(T.StringType())),
-    ]
-)
 
 
 def read_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -53,35 +34,6 @@ def read_table(spark: SparkSession, source: str) -> DataFrame:
     return spark.read.parquet(source)
 
 
-def read_raw_pages(spark: SparkSession, glob: str) -> DataFrame:
-    """S2: raw file ingestion — one row per file with the bytes as
-    ``html: binary`` (the imread analog, utils/io_utils.py:42). The path
-    becomes the url surrogate."""
-    bf = spark.read.format("binaryFile").load(glob)
-    return bf.select(
-        F.col("path").alias("url"),
-        F.col("modificationTime").alias("warc_ts"),
-        F.col("content").alias("html"),
-    )
-
-
-def read_blocks_json(spark: SparkSession, path: str) -> DataFrame:
-    """S8: re-scan previously written JSON block records with the declared
-    schema (url + array of blocks per line)."""
-    line_schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("blocks", T.ArrayType(BLOCK_JSON_SCHEMA)),
-        ]
-    )
-    return spark.read.schema(line_schema).json(path)
-
-
-def parse_blocks_json(col) -> F.Column:
-    """F22 from_json surface for an embedded JSON string column."""
-    return F.from_json(col, T.ArrayType(BLOCK_JSON_SCHEMA))
-
-
 def parse_ann_line(line_col, page_w=None, page_h=None):
     """S11 annotation-line parse (reference db_dataset.py:224-230):
     'x1 y1 x2 y2 x3 y3 x4 y4' text → array of 4 [x, y] pairs, optionally
@@ -98,14 +50,3 @@ def parse_ann_line(line_col, page_w=None, page_h=None):
             pts, lambda p: F.array(p[0] / page_w, p[1] / page_h)
         )
     return pts
-
-
-def paired_scan(
-    left: DataFrame, right: DataFrame, derive_left, derive_right,
-) -> DataFrame:
-    """S9/S10 filename-pairing scan: join two scans on derived keys
-    (reference pairs x.jpg with mask-x.png / line-x.txt,
-    seg_dataset.py:125-135, db_dataset.py:82-92)."""
-    return left.withColumn("__k", derive_left).join(
-        right.withColumn("__k", derive_right), "__k"
-    ).drop("__k")

@@ -2,8 +2,10 @@
 
 The reference fans one compute out to four per-image files (yolo labels,
 line polys, JSON blocks, mask PNG — inference.py:43-70); the engine's
-canonical sinks are parquet/Iceberg tables, with the text/JSON formats kept
-as column expressions so the byte format is testable without I/O.
+canonical sink is a url-bucketed parquet/Iceberg table
+(``write_extracted_table``, read back by ``read_url``), with the yolo-label
+and JSON-block text formats kept as column expressions so the byte format
+is testable without I/O.
 """
 
 from __future__ import annotations
@@ -13,11 +15,6 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_extracted(df: DataFrame, path: str, mode: str = "append") -> None:
-    """S3: the canonical sink (Iceberg writeTo(...).append() in prod)."""
-    df.write.mode(mode).parquet(path)
 
 
 def url_bucket(url_col: Column, buckets: int) -> Column:
@@ -63,11 +60,6 @@ def write_extracted_table(
     )
 
 
-def read_extracted_table(spark: SparkSession, path: str) -> DataFrame:
-    """Full-table scan of a ``write_extracted_table`` layout."""
-    return spark.read.parquet(path)
-
-
 def read_url(spark: SparkSession, path: str, url: str) -> DataFrame:
     """Point lookup against the bucketed layout: the url's bucket is
     computed up front (same expression as the writer) and applied as a
@@ -97,58 +89,7 @@ def yolo_label_lines(
     return F.format_string("%d %.6f %.6f %.6f %.6f", cls, cx, cy, w, h)
 
 
-def line_poly_rows(pts: Column) -> Column:
-    """S5 line-polygon text sink: n x 8 ints space-joined (inference.py:61-65
-    flattens (n,4,2) to 8-tuples)."""
-    return F.array_join(
-        F.transform(F.flatten(pts), lambda v: v.cast("int").cast("string")), " "
-    )
-
-
 def blocks_json(blocks_struct: Column) -> Column:
     """S6 JSON blocks sink: to_json of the block struct array (reference
     json.dumps(blk_dict_list, cls=NumpyEncoder), inference.py:66-68)."""
     return F.to_json(blocks_struct)
-
-
-def span_mask_png(df: DataFrame, max_width: int = 1 << 16) -> DataFrame:
-    """S7 mask sink, made real: per document, a 1-row 8-bit grayscale PNG
-    whose pixel i is 255 iff text offset i is covered by a span (the
-    reference writes the refined seg mask as a PNG per image,
-    inference.py:43-70 — this is its span-coverage recast, and the PNG
-    bytes are fully valid, CRCs + zlib IDAT included). Documents longer
-    than ``max_width`` are truncated to bound the row size (cap logged by
-    the caller via the ``truncated`` column). Arrow-batched mapInPandas."""
-    import pandas as pd
-
-    from ..multimodal.binary_ops import grayscale_png
-
-    def kernel(batches):
-        for pdf in batches:
-            urls, masks, truncs = [], [], []
-            for url, text, spans in zip(pdf["url"], pdf["text"], pdf["spans"]):
-                n = len(text or "")
-                trunc = n > max_width
-                n = min(n, max_width)
-                row = bytearray(n)
-                for s in spans if spans is not None else []:
-                    a = max(0, int(s["char_start"]))
-                    b = min(n, int(s["char_end"]))
-                    if b > a:
-                        row[a:b] = b"\xff" * (b - a)
-                urls.append(url)
-                masks.append(grayscale_png(bytes(row), max(1, n)))
-                truncs.append(trunc)
-            yield pd.DataFrame(
-                {"url": urls, "mask_png": masks, "truncated": truncs}
-            )
-
-    return df.select("url", "text", "spans").mapInPandas(
-        kernel, "url string, mask_png binary, truncated boolean"
-    )
-
-
-def write_labels_text(df: DataFrame, line_col: str, path: str) -> None:
-    """Group lines per url and write one text row per document
-    (concat_ws('\n', collect_list(...)) — the F8 assembly)."""
-    df.select(F.col(line_col).alias("value")).write.mode("overwrite").text(path)

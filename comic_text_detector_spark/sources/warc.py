@@ -1,444 +1,15 @@
-"""WARC ingestion: Common Crawl's on-disk format → the documents table.
+"""Crawl-archive record formats over the documents table.
 
-The S2 raw-ingestion path for real crawls: ``binaryFile`` yields one row per
-WARC file; an Arrow-batched stage splits records, keeps ``response``
-records, parses ``WARC-Target-URI`` / ``WARC-Date``, strips the HTTP
-response envelope, and emits ``(url, warc_ts, html)`` rows — the UDTF
-(one-to-many) shape. Gzip (including the per-record concatenated-member
-layout CC uses for ``.warc.gz``) is handled transparently.
-
-Pure stdlib; one linear pass per file; Content-Length driven slicing (no
-regex over payloads).
+``classify_revisits`` marks each later identical-payload capture as a WARC
+``revisit`` record that refers to the first ``response`` with that digest;
+``cdx_lines`` writes the CDXJ url-index line of each capture and
+``parse_cdx`` reads one back. All three are column expressions plus at most
+one window; nothing here reads or writes WARC files.
 """
 
 from __future__ import annotations
 
-import gzip
-import io
-from collections.abc import Iterator
-
-import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
-
-WARC_DOCS_DDL = "url string, warc_ts string, html binary"
-
-_GZIP_MAGIC = b"\x1f\x8b"
-
-
-def _maybe_gunzip(data: bytes) -> bytes:
-    """Decompress all concatenated gzip members (CC gzips per record)."""
-    if not data.startswith(_GZIP_MAGIC):
-        return data
-    out = io.BytesIO()
-    with gzip.GzipFile(fileobj=io.BytesIO(data)) as gz:
-        while True:
-            chunk = gz.read(1 << 20)
-            if not chunk:
-                break
-            out.write(chunk)
-    return out.getvalue()
-
-
-def parse_warc(
-    data: bytes, record_types: tuple[bytes, ...] = (b"response",)
-) -> list[tuple[str, str, bytes]]:
-    """bytes of a WARC file → [(url, warc_date, payload)] for records of
-    the requested types (``response`` for crawls, ``conversion`` for WET
-    extracts). Tolerant: malformed records are skipped, the scan resyncs
-    on the next ``WARC/`` marker."""
-    data = _maybe_gunzip(data)
-    out: list[tuple[str, str, bytes]] = []
-    pos = 0
-    n = len(data)
-    while pos < n:
-        start = data.find(b"WARC/", pos)
-        if start == -1:
-            break
-        hdr_end = data.find(b"\r\n\r\n", start)
-        if hdr_end == -1:
-            break
-        headers: dict[bytes, bytes] = {}
-        for line in data[start:hdr_end].split(b"\r\n")[1:]:
-            k, _, v = line.partition(b":")
-            headers[k.strip().lower()] = v.strip()
-        try:
-            length = int(headers.get(b"content-length", b""))
-        except ValueError:
-            pos = hdr_end + 4
-            continue
-        body = data[hdr_end + 4 : hdr_end + 4 + length]
-        pos = hdr_end + 4 + length
-        if headers.get(b"warc-type") not in record_types:
-            continue
-        url = headers.get(b"warc-target-uri", b"").decode("utf-8", "replace")
-        ts = headers.get(b"warc-date", b"").decode("ascii", "replace")
-        # strip the HTTP envelope from RESPONSE records only — a WET
-        # conversion record whose extracted text begins with "HTTP/" is
-        # plain text, not an envelope
-        if headers.get(b"warc-type") == b"response" and body.startswith(
-            b"HTTP/"
-        ):
-            http_end = body.find(b"\r\n\r\n")
-            body = body[http_end + 4 :] if http_end != -1 else b""
-        if url:
-            out.append((url, ts, body))
-    return out
-
-
-def read_warc(spark: SparkSession, glob: str) -> DataFrame:
-    """WARC files → documents(url, warc_ts, html).
-
-    binaryFile gives file-level parallelism (CC segments are ~1 GB each, so
-    one task per segment file is the natural unit); record splitting runs
-    inside the Arrow stage. warc_ts is parsed from the ISO WARC-Date.
-    """
-    from pyspark.sql import functions as F
-
-    bf = spark.read.format("binaryFile").load(glob).select("content")
-
-    def split_records(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls: list[str] = []
-            tss: list[str] = []
-            bodies: list[bytes] = []
-            for blob in batch.column("content").to_pylist():
-                for url, ts, body in parse_warc(blob):
-                    urls.append(url)
-                    tss.append(ts)
-                    bodies.append(body)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, type=pa.string()),
-                    pa.array(tss, type=pa.string()),
-                    pa.array(bodies, type=pa.binary()),
-                ],
-                names=["url", "warc_ts", "html"],
-            )
-
-    rows = bf.mapInArrow(split_records, WARC_DOCS_DDL)
-    return rows.select(
-        "url", F.to_timestamp("warc_ts").alias("warc_ts"), "html"
-    )
-
-
-# ---------------------------------------------------------------------------
-# WET output (the Common-Crawl *.warc.wet convention: extracted plain text
-# as WARC `conversion` records) — the ecosystem-standard sink for exactly
-# what this engine produces, so downstream consumers of CC WET files can
-# read this engine's output unchanged.
-
-
-def _wet_uri(url: str) -> str:
-    """WARC-Target-URI must be an ASCII URI with no framing hazards:
-    percent-encode non-ASCII (IRIs arrive from read_warc's utf-8 decode)
-    and control characters; already-percent-encoded bytes pass through."""
-    from urllib.parse import quote
-
-    return quote(url, safe=":/?#[]@!$&'()*+,;=%~-._")
-
-
-def _wet_record(url: str, ts: str, text: str) -> bytes:
-    import hashlib
-
-    payload = text.encode("utf-8")
-    # deterministic record id (the engine never invents wall-clock or
-    # random state): uuid-shaped md5 of the record identity
-    rid = hashlib.md5(f"{url}\x00{ts}".encode()).hexdigest()
-    rec_id = f"<urn:uuid:{rid[:8]}-{rid[8:12]}-{rid[12:16]}-{rid[16:20]}-{rid[20:32]}>"
-    hdr = (
-        "WARC/1.0\r\n"
-        "WARC-Type: conversion\r\n"
-        f"WARC-Record-ID: {rec_id}\r\n"
-        f"WARC-Target-URI: {_wet_uri(url)}\r\n"
-        f"WARC-Date: {ts}\r\n"
-        "Content-Type: text/plain\r\n"
-        f"Content-Length: {len(payload)}\r\n"
-        "\r\n"
-    ).encode("ascii")
-    return hdr + payload + b"\r\n\r\n"
-
-
-def wet_files(
-    df: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    ts_col: str | None = None,
-    compress: bool = True,
-) -> DataFrame:
-    """Extracted rows → one gzipped WET payload per PARTITION:
-    (part_id, n_records, wet) with ``wet`` the complete ``*.warc.wet(.gz)``
-    bytes (warcinfo header record + one ``conversion`` record per doc).
-    The partition is the file-sized unit, mirroring how read_warc treats
-    one file as one task; callers persist the blobs with any binary sink.
-    Null/absent timestamps stamp the epoch (deterministic output — the
-    engine never invents wall-clock times)."""
-    import gzip as _gzip
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    cols = [
-        F.col(url_col).alias("url"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("text"),
-        (
-            F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-            if ts_col
-            else F.lit(None).cast("string")
-        ).alias("ts"),
-        F.spark_partition_id().alias("part_id"),
-    ]
-
-    def kernel(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        chunks: list[bytes] = []
-        n = 0
-        part = 0
-        fields = b"software: ctd-spark wet writer\r\n"
-        info = (
-            b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
-            b"WARC-Record-ID: "
-            b"<urn:uuid:00000000-0000-0000-0000-000000000000>\r\n"
-            b"WARC-Date: 1970-01-01T00:00:00Z\r\n"
-            b"Content-Type: application/warc-fields\r\n"
-            + f"Content-Length: {len(fields)}\r\n\r\n".encode()
-            + fields
-            + b"\r\n\r\n"
-        )
-        for pdf in batches:
-            for url, text, ts, pid in zip(
-                pdf["url"], pdf["text"], pdf["ts"], pdf["part_id"]
-            ):
-                part = int(pid)
-                chunks.append(
-                    _wet_record(
-                        str(url), ts if ts else "1970-01-01T00:00:00Z",
-                        str(text),
-                    )
-                )
-                n += 1
-        body = info + b"".join(chunks)
-        if compress:
-            body = _gzip.compress(body, compresslevel=6, mtime=0)
-        if n > 0:  # empty partitions emit no blob: a spurious
-            # (part_id=0, empty) row would collide with the real
-            # partition 0 under one-file-per-part_id writers
-            yield pd.DataFrame(
-                {"part_id": [part], "n_records": [n], "wet": [body]}
-            )
-
-    return df.select(*cols).mapInPandas(
-        kernel, "part_id int, n_records bigint, wet binary"
-    )
-
-
-def read_wet(spark: SparkSession, glob: str) -> DataFrame:
-    """WET files → (url, warc_ts, text): the read side of ``wet_files``
-    (and of real Common Crawl ``*.warc.wet.gz`` segments)."""
-    from pyspark.sql import functions as F
-
-    bf = spark.read.format("binaryFile").load(glob).select("content")
-
-    def split_records(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls: list[str] = []
-            tss: list[str] = []
-            texts: list[str] = []
-            for blob in batch.column("content").to_pylist():
-                for url, ts, body in parse_warc(
-                    blob, record_types=(b"conversion",)
-                ):
-                    urls.append(url)
-                    tss.append(ts)
-                    texts.append(body.decode("utf-8", "replace"))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, type=pa.string()),
-                    pa.array(tss, type=pa.string()),
-                    pa.array(texts, type=pa.string()),
-                ],
-                names=["url", "warc_ts", "text"],
-            )
-
-    rows = bf.mapInArrow(split_records, "url string, warc_ts string, text string")
-    return rows.select(
-        "url", F.to_timestamp("warc_ts").alias("warc_ts"), "text"
-    )
-
-
-def _wat_payload(url: str, ts: str, title: str,
-                 hrefs: list, anchors: list) -> bytes:
-    """The WAT JSON envelope for one page — the Common Crawl metadata
-    shape (Envelope → Payload-Metadata → HTML-Metadata with Head/Links),
-    restricted to what the engine extracts: title + <a href> links.
-    Deterministic serialization (sorted keys, no whitespace, ascii)."""
-    import json
-
-    links = [
-        {"path": "A@/href", "url": h, "text": a}
-        for h, a in zip(hrefs, anchors)
-    ]
-    doc = {
-        "Envelope": {
-            "WARC-Header-Metadata": {
-                "WARC-Target-URI": url,
-                "WARC-Date": ts,
-                "WARC-Type": "response",
-            },
-            "Payload-Metadata": {
-                "HTTP-Response-Metadata": {
-                    "HTML-Metadata": {
-                        "Head": {"Title": title},
-                        "Links": links,
-                    }
-                }
-            },
-        }
-    }
-    return json.dumps(
-        doc, sort_keys=True, separators=(",", ":"), ensure_ascii=True
-    ).encode("ascii")
-
-
-def wat_files(
-    df: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    ts_col: str | None = None,
-    compress: bool = True,
-) -> DataFrame:
-    """Crawled rows → one gzipped WAT payload per PARTITION: (part_id,
-    n_records, wat) with ``wat`` complete ``*.warc.wat(.gz)`` bytes
-    (warcinfo header + one ``metadata`` record of JSON per page) —
-    completing the Common Crawl format trio beside ``read_warc`` and
-    ``wet_files``. Title and links are extracted JVM-side with the SAME
-    regexes as ``functions/links.py`` (one definition of 'a link'), so
-    the WAT output and the link graph can never disagree; the kernel
-    only assembles bytes. Same partition-as-file and deterministic-id
-    discipline as ``wet_files``."""
-    import gzip as _gzip
-    import hashlib
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..functions.links import A_TAG, ANCHOR, HREF
-
-    # null html must yield an empty page record, not a null array that
-    # crashes the kernel (wet_files applies the same coalesce to text)
-    h = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
-    tags = F.regexp_extract_all(h, F.lit(A_TAG), F.lit(0))
-    cols = [
-        F.col(url_col).alias("url"),
-        (
-            F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-            if ts_col
-            else F.lit(None).cast("string")
-        ).alias("ts"),
-        F.regexp_extract(h, "<title>([^<]*)</title>", 1).alias("title"),
-        F.transform(tags, lambda t: F.regexp_extract(t, HREF, 1)).alias(
-            "hrefs"
-        ),
-        F.transform(tags, lambda t: F.regexp_extract(t, ANCHOR, 1)).alias(
-            "anchors"
-        ),
-        F.spark_partition_id().alias("part_id"),
-    ]
-
-    def kernel(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        chunks: list[bytes] = []
-        n = 0
-        part = 0
-        fields = b"software: ctd-spark wat writer\r\n"
-        info = (
-            b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
-            b"WARC-Record-ID: "
-            b"<urn:uuid:00000000-0000-0000-0000-000000000000>\r\n"
-            b"WARC-Date: 1970-01-01T00:00:00Z\r\n"
-            b"Content-Type: application/warc-fields\r\n"
-            + f"Content-Length: {len(fields)}\r\n\r\n".encode()
-            + fields
-            + b"\r\n\r\n"
-        )
-        for pdf in batches:
-            for url, ts, title, hrefs, anchors, pid in zip(
-                pdf["url"], pdf["ts"], pdf["title"], pdf["hrefs"],
-                pdf["anchors"], pdf["part_id"],
-            ):
-                part = int(pid)
-                ts = ts if ts else "1970-01-01T00:00:00Z"
-                # the envelope carries the SAME percent-encoded URI as the
-                # WARC record header — a consumer cross-referencing the
-                # two must never see different URIs for one record
-                payload = _wat_payload(
-                    _wet_uri(str(url)), ts, str(title),
-                    list(hrefs), list(anchors),
-                )
-                rid = hashlib.md5(f"wat:{url}\x00{ts}".encode()).hexdigest()
-                rec_id = (
-                    f"<urn:uuid:{rid[:8]}-{rid[8:12]}-{rid[12:16]}-"
-                    f"{rid[16:20]}-{rid[20:32]}>"
-                )
-                hdr = (
-                    "WARC/1.0\r\n"
-                    "WARC-Type: metadata\r\n"
-                    f"WARC-Record-ID: {rec_id}\r\n"
-                    f"WARC-Target-URI: {_wet_uri(str(url))}\r\n"
-                    f"WARC-Date: {ts}\r\n"
-                    "Content-Type: application/json\r\n"
-                    f"Content-Length: {len(payload)}\r\n"
-                    "\r\n"
-                ).encode("ascii")
-                chunks.append(hdr + payload + b"\r\n\r\n")
-                n += 1
-        body = info + b"".join(chunks)
-        if compress:
-            body = _gzip.compress(body, compresslevel=6, mtime=0)
-        if n > 0:  # empty partitions emit nothing (part-id collision)
-            yield pd.DataFrame(
-                {"part_id": [part], "n_records": [n], "wat": [body]}
-            )
-
-    return df.select(*cols).mapInPandas(
-        kernel, "part_id int, n_records bigint, wat binary"
-    )
-
-
-def read_wat(spark: SparkSession, glob: str) -> DataFrame:
-    """WAT files → (url, warc_ts, meta_json): the read side of
-    ``wat_files`` (metadata records; json stays a string for the caller
-    to ``from_json`` with their schema)."""
-    from pyspark.sql import functions as F
-
-    bf = spark.read.format("binaryFile").load(glob).select("content")
-
-    def split_records(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls: list[str] = []
-            tss: list[str] = []
-            metas: list[str] = []
-            for blob in batch.column("content").to_pylist():
-                for url, ts, body in parse_warc(
-                    blob, record_types=(b"metadata",)
-                ):
-                    urls.append(url)
-                    tss.append(ts)
-                    metas.append(body.decode("utf-8", "replace"))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, type=pa.string()),
-                    pa.array(tss, type=pa.string()),
-                    pa.array(metas, type=pa.string()),
-                ],
-                names=["url", "warc_ts", "meta_json"],
-            )
-
-    rows = bf.mapInArrow(
-        split_records, "url string, warc_ts string, meta_json string"
-    )
-    return rows.select(
-        "url", F.to_timestamp("warc_ts").alias("warc_ts"), "meta_json"
-    )
+from pyspark.sql import DataFrame
 
 
 def classify_revisits(

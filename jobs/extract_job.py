@@ -18,7 +18,7 @@ import json
 import sys
 
 
-def main(argv: list[str]) -> int:
+def main(argv: list[str], spark=None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="documents parquet path")
     p.add_argument("--output", required=True, help="job output dir")
@@ -35,8 +35,10 @@ def main(argv: list[str]) -> int:
     from comic_text_detector_spark.session import get_spark
     from comic_text_detector_spark.sources.readers import read_documents
 
-    spark = get_spark(app_name="ctd-extract")
-    spark.sparkContext.setLogLevel("WARN")
+    owns_session = spark is None
+    if owns_session:
+        spark = get_spark(app_name="ctd-extract")
+        spark.sparkContext.setLogLevel("WARN")
     if args.synthesize:
         from comic_text_detector_spark.fixtures import write_corpus
 
@@ -73,12 +75,13 @@ def main(argv: list[str]) -> int:
     )
     this_run = agg[3] or 0
     summary.update(
-        docs_in=agg[0], docs_out=agg[1], bytes=agg[2],
+        docs_in=agg[0] or 0, docs_out=agg[1] or 0, bytes=agg[2] or 0,
         wall_s=round(wall_s, 2),
         docs_per_sec=round(this_run / wall_s, 1),
     )
     print(json.dumps(summary))
-    spark.stop()
+    if owns_session:
+        spark.stop()
     return 0
 
 

@@ -228,12 +228,12 @@ def test_portable_hash_parity_adversarial_texts(spark):
 
 class TestBloomNewKeys:
     def test_exact_under_heavy_fp(self, spark):
-        """A deliberately tiny filter (2 buckets x 64 bits) pushes nearly
+        """A deliberately tiny filter (128 bits) pushes nearly
         every key down the candidate path — the output must STILL be the
         exact set difference (the bloom is performance-only)."""
         from pyspark.sql import functions as F
 
-        from comic_text_detector_spark.operators.dedup import bloom_new_keys
+        from comic_text_detector_spark.operators.bloom import bloom_new_keys
 
         base = spark.range(0, 300).select(
             F.concat(F.lit("k"), F.col("id")).alias("url")
@@ -242,7 +242,7 @@ class TestBloomNewKeys:
             F.concat(F.lit("k"), F.col("id")).alias("url")
         )
         exp = sorted(f"k{i}" for i in range(300, 400))
-        for kwargs in ({}, {"n_buckets": 2, "bits_per_bucket": 64, "k": 2}):
+        for kwargs in ({}, {"m_bits": 128, "k": 2}):
             got = sorted(
                 r["url"]
                 for r in bloom_new_keys(base, incr, "url", **kwargs).collect()
@@ -254,7 +254,7 @@ class TestBloomNewKeys:
         zero false negatives), so re-presenting the base yields nothing."""
         from pyspark.sql import functions as F
 
-        from comic_text_detector_spark.operators.dedup import bloom_new_keys
+        from comic_text_detector_spark.operators.bloom import bloom_new_keys
 
         base = spark.range(0, 500).select(
             F.concat(F.lit("u"), F.col("id")).alias("url")
@@ -262,7 +262,7 @@ class TestBloomNewKeys:
         assert bloom_new_keys(base, base, "url").count() == 0
 
     def test_nulls_dropped_and_empty_base(self, spark):
-        from comic_text_detector_spark.operators.dedup import bloom_new_keys
+        from comic_text_detector_spark.operators.bloom import bloom_new_keys
 
         base = spark.createDataFrame([], "url string")
         incr = spark.createDataFrame(
@@ -276,7 +276,7 @@ class TestBloomNewKeys:
         anti-join is the only exchange keyed by data volume."""
         from pyspark.sql import functions as F
 
-        from comic_text_detector_spark.operators.dedup import bloom_new_keys
+        from comic_text_detector_spark.operators.bloom import bloom_new_keys
 
         base = spark.range(0, 200).select(
             F.concat(F.lit("k"), F.col("id")).alias("url")

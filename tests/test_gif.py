@@ -269,9 +269,7 @@ def test_gif_frame_stats_and_sampling_spark(spark):
     from comic_text_detector_spark.multimodal.gif import (
         encode_gif_animation,
         gif_frame_stats,
-        sample_gif_frames,
     )
-    from comic_text_detector_spark.multimodal.pixels import decode_png_pixels
 
     def anim(n):
         frames = [{"arr": _rgb(3, 4, (10, 20, 30)), "disposal": 1}]
@@ -296,9 +294,3 @@ def test_gif_frame_stats_and_sampling_spark(spark):
         {"arr": _rgb(1, 1, (42, 0, 0)), "left": 1, "disposal": 1},
     ])[-1]
     assert stats["b"].last_sum == int(want.astype(np.int64).sum())
-    sampled = sample_gif_frames(df).collect()
-    assert sorted((r.media_id, r.frame_idx) for r in sampled) == [
-        ("a", 0), ("b", 0), ("b", 1), ("b", 2)
-    ]
-    last_png = [r for r in sampled if r.media_id == "b" and r.frame_idx == 2]
-    assert np.array_equal(decode_png_pixels(last_png[0].frame_png), want)

@@ -2,10 +2,7 @@
 
 from __future__ import annotations
 
-from comic_text_detector_spark.functions.http import (
-    http_response_meta,
-    keep_html_ok,
-)
+from comic_text_detector_spark.functions.http import http_response_meta
 
 OK = (
     "HTTP/1.1 200 OK\r\nServer: x\r\nContent-Type: text/html;"
@@ -48,25 +45,6 @@ def test_http_response_meta_planted(spark):
     assert raw.status is None and raw.content_type is None
     assert raw.body is None
     assert rows["null"].status is None
-
-
-def test_keep_html_ok_front_door(spark):
-    df = spark.createDataFrame(
-        [
-            ("keep", OK),
-            ("xhtml", "HTTP/1.1 200 OK\r\nContent-Type:"
-                      " application/xhtml+xml\r\n\r\n<html/>"),
-            ("err", "HTTP/1.1 404 Not Found\r\nContent-Type:"
-                    " text/html\r\n\r\nnope"),
-            ("bin", "HTTP/1.1 200 OK\r\nContent-Type:"
-                    " image/png\r\n\r\nPNG"),
-        ],
-        "url string, payload string",
-    )
-    kept = sorted(
-        r.url for r in keep_html_ok(http_response_meta(df)).collect()
-    )
-    assert kept == ["keep", "xhtml"]
 
 
 def test_dechunk_and_gunzip_kernels():
@@ -149,28 +127,3 @@ def test_soft404_signals(spark):
     assert not got["ok"].is_soft404 and got["ok"].soft404_score == 0
     n = got["nulls"]  # absence of evidence except tininess
     assert n.soft404_score == 100 and not n.is_soft404
-
-
-def test_revisit_request_headers(spark):
-    from comic_text_detector_spark.functions.http import (
-        http_response_meta,
-        revisit_request_headers,
-    )
-
-    rows = [
-        ("v", "HTTP/1.1 200 OK\r\nETag: \"abc\"\r\nLast-Modified:"
-              " Mon, 01 Jan 2024 00:00:00 GMT\r\n\r\nbody"),
-        ("e", "HTTP/1.1 200 OK\r\nETag: W/\"weak\"\r\n\r\nbody"),
-        ("n", "HTTP/1.1 200 OK\r\n\r\nbody"),  # no validator: full GET
-    ]
-    df = spark.createDataFrame(rows, "url string, payload string")
-    got = {
-        r.url: r
-        for r in revisit_request_headers(http_response_meta(df)).collect()
-    }
-    v = got["v"]
-    assert v.if_none_match == '"abc"' and v.conditional
-    assert v.if_modified_since == "Mon, 01 Jan 2024 00:00:00 GMT"
-    assert got["e"].if_none_match == 'W/"weak"'  # weak validators kept
-    n = got["n"]
-    assert not n.conditional and n.if_none_match is None

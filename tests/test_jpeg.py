@@ -6,7 +6,6 @@ subsampling), honest refusals, and the Spark pixel surface."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from comic_text_detector_spark.multimodal import jpeg as J
 from comic_text_detector_spark.multimodal.jpeg import (
@@ -188,36 +187,6 @@ def test_letterbox_images_over_mixed_png_jpeg(spark):
     # pad columns are the reference gray, content center is the jpeg color
     assert tuple(canvas[0, 0]) == (114, 114, 114)
     assert int(np.abs(canvas[32, 32].astype(int) - [10, 200, 90]).max()) <= 3
-
-
-def test_warp_region_images_over_jpeg(spark):
-    """F25 pixel warp now rectifies regions out of real JPEGs: an
-    axis-aligned quad over a solid-color jpeg yields that color."""
-    from comic_text_detector_spark.multimodal.pixels import warp_region_images
-
-    jpg = synthesize_jpeg_real(48, 32, (120, 30, 240))
-    df = spark.createDataFrame(
-        [("j", jpg, [[8.0, 8.0], [39.0, 8.0], [39.0, 23.0], [8.0, 23.0]])],
-        "media_id string, media binary, quad array<array<double>>",
-    )
-    row = warp_region_images(df, textheight=16).collect()[0]
-    assert row["ok"]
-    from comic_text_detector_spark.multimodal.pixels import decode_png_pixels
-
-    region = decode_png_pixels(bytes(row["region_png"]))
-    assert region is not None
-    assert int(np.abs(region[2:-2, 2:-2].astype(int) - [120, 30, 240]).max()) <= 3
-
-
-def test_warp_size_cap_degrades_not_oom():
-    """ADVICE fix: near-degenerate quads (tiny horizontal extent → huge
-    ratio) must raise, not allocate an unbounded destination raster."""
-    from comic_text_detector_spark.multimodal.pixels import warp_region_pixels
-
-    arr = np.zeros((100, 100, 3), np.uint8)
-    quad = [(50.0, 0.0), (50.001, 0.0), (50.001, 99.0), (50.0, 99.0)]
-    with pytest.raises(ValueError):
-        warp_region_pixels(arr, quad, textheight=48)
 
 
 def test_decoder_fuzz_never_crashes():

@@ -8,10 +8,8 @@ import math
 from pyspark.sql import functions as F
 
 from comic_text_detector_spark.functions.geometry import (
-    expand_window,
     iou,
     union_area,
-    xywh2xyxy,
     xyxy2yolo,
 )
 from comic_text_detector_spark.operators.merge import merge_blocks, merge_spans_by_gap
@@ -187,18 +185,12 @@ def test_geometry_exprs(spark):
     # disjoint → -1
     df2 = spark.createDataFrame([(0.0, 0.0, 1.0, 1.0, 5.0, 5.0, 6.0, 6.0)], df.schema)
     assert df2.select(union_area(*[F.col(c) for c in df.columns]).alias("ua")).collect()[0].ua == -1.0
-    # yolo round trip
+    # yolo normalization: (cx, cy, w, h) over the page size
     df3 = spark.createDataFrame([(10.0, 20.0, 30.0, 60.0)], "x1 double, y1 double, x2 double, y2 double")
     pw, ph = F.lit(100.0), F.lit(200.0)
     yolo = xyxy2yolo(F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"), pw, ph)
-    back = xywh2xyxy(yolo[0] * pw, yolo[1] * ph, yolo[2] * pw, yolo[3] * ph)
-    vals = df3.select(*[b.alias(f"v{i}") for i, b in enumerate(back)]).collect()[0]
-    assert [vals.v0, vals.v1, vals.v2, vals.v3] == [10.0, 20.0, 30.0, 60.0]
-    # expand window clips to page
-    df4 = spark.createDataFrame([(0.0, 0.0, 100.0, 200.0)], "x1 double, y1 double, x2 double, y2 double")
-    ew = expand_window(F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"), F.lit(100.0), F.lit(200.0))
-    v = df4.select(*[e.alias(f"e{i}") for i, e in enumerate(ew)]).collect()[0]
-    assert [v.e0, v.e1, v.e2, v.e3] == [0.0, 0.0, 100.0, 200.0]
+    vals = df3.select(*[b.alias(f"v{i}") for i, b in enumerate(yolo)]).collect()[0]
+    assert [vals.v0, vals.v1, vals.v2, vals.v3] == [0.2, 0.2, 0.2, 0.2]
 
 
 def test_shrink_span_collapses_to_midpoint(spark):

@@ -2,30 +2,7 @@
 
 from __future__ import annotations
 
-from comic_text_detector_spark.operators.pagination import (
-    extract_rel_next,
-    stitch_pagination,
-)
-
-
-def test_extract_rel_next_forms(spark):
-    df = spark.createDataFrame(
-        [
-            ("http://s/a1", '<link rel="next" href="http://s/a2">'),
-            ("http://s/a2", '<a href="/a3?p=3&amp;x=1" rel="next">more</a>'),
-            ("http://s/a3", "<p>last page, no next</p>"),
-            ("http://s/self", '<link rel="next" href="http://s/self">'),
-            ("http://s/rel", '<link rel="next" href="page2.html">'),
-        ],
-        "url string, html string",
-    )
-    got = {r.url: r.next_url for r in extract_rel_next(df).collect()}
-    assert got == {
-        "http://s/a1": "http://s/a2",
-        # root-relative resolved, entity decoded
-        "http://s/a2": "http://s/a3?p=3&x=1",
-        # self-loop and non-root-relative forms dropped, never guessed
-    }
+from comic_text_detector_spark.operators.pagination import stitch_pagination
 
 
 def test_stitch_pagination_chain(spark):
@@ -80,28 +57,6 @@ def test_stitch_pagination_branch_determinism(spark):
     )
     (row,) = stitch_pagination(pages, nexts).collect()
     assert row.text == "a\nb" and row.n_pages == 2
-
-
-def test_extract_rel_next_boundary_and_protocol_relative(spark):
-    df = spark.createDataFrame(
-        [
-            # data-rel must NOT fabricate an edge
-            ("http://s/d", '<a data-rel="next" href="http://t/x">t</a>'),
-            # data-href swallowed by an unanchored regex would mis-pick
-            ("http://s/e",
-             '<a data-href="http://bad/x" rel="next" href="/ok">n</a>'),
-            # protocol-relative resolves against the scheme alone
-            ("https://s/f", '<link rel="next" href="//cdn.s.com/f2">'),
-            # entity decode shares links.py's definition (&apos; too)
-            ("http://s/g", '<link rel="next" href="/p?q=a&apos;b">'),
-        ],
-        "url string, html string",
-    )
-    got = {r.url: r.next_url for r in extract_rel_next(df).collect()}
-    assert "http://s/d" not in got
-    assert got["http://s/e"] == "http://s/ok"
-    assert got["https://s/f"] == "https://cdn.s.com/f2"
-    assert got["http://s/g"] == "http://s/p?q=a'b"
 
 
 def test_stitch_rootless_cycle_surfaces(spark):

@@ -6,15 +6,11 @@ from __future__ import annotations
 import math
 
 from comic_text_detector_spark.operators.polygons import (
+    _offset_ccw,
     convex_iou,
-    convex_offset,
     offset_polygons_df,
-    polygon_area_signed,
     polygon_iou_df,
     rect_corners,
-    rotated_rect_iou,
-    shrink_polygon,
-    unclip_polygon,
 )
 
 
@@ -37,6 +33,9 @@ def test_convex_iou_planted():
 def test_rotated_iou_rotation_invariant():
     a = (0.3, 0.1, 3.0, 1.5, 0.2)
     b = (0.8, -0.4, 2.0, 2.5, 1.1)
+    def rotated_rect_iou(r1, r2):
+        return convex_iou(rect_corners(*r1), rect_corners(*r2))
+
     i0 = rotated_rect_iou(a, b)
     assert 0 < i0 < 1
     for th in (0.7, -1.3, math.pi / 2):
@@ -49,31 +48,30 @@ def test_rotated_iou_rotation_invariant():
         assert abs(rotated_rect_iou(rot(a), rot(b)) - i0) < 1e-9
 
 
-def test_offset_shrink_unclip_roundtrip():
+def test_offset_shrink_unclip_roundtrip(spark):
     sq = rect_corners(0, 0, 2, 2, 0)
-    # unclip ratio 1.5: d = 4*1.5/8 = 0.75 → side 3.5
-    u = unclip_polygon(sq, 1.5)
-    assert abs(abs(polygon_area_signed(u)) - 12.25) < 1e-12
-    # shrink ratio 0.4: d = 4*(1-0.16)/8 = 0.42 → side 1.16
-    s = shrink_polygon(sq, 0.4)
-    assert abs(abs(polygon_area_signed(s)) - 1.16 * 1.16) < 1e-12
     # shrink beyond the inradius refuses (would yield a phantom polygon)
-    assert convex_offset(sq, -1.5) is None
-    assert convex_offset(sq, -1.0) is None  # exact inradius collapses
+    assert _offset_ccw(sq, -1.5) is None
+    assert _offset_ccw(sq, -1.0) is None  # exact inradius collapses
     # offset round-trips on a rotated pentagon
     pent = [
         (math.cos(2 * math.pi * k / 5) * 3 + 1,
          math.sin(2 * math.pi * k / 5) * 3 - 2)
         for k in range(5)
     ]
-    back = convex_offset(convex_offset(pent, 0.5), -0.5)
+    back = _offset_ccw(_offset_ccw(pent, 0.5), -0.5)
     err = max(
         abs(a - b) for p, q in zip(pent, back) for a, b in zip(p, q)
     )
     assert err < 1e-9
-    # clockwise input is normalized, not corrupted
-    u2 = unclip_polygon(list(reversed(sq)), 1.5)
-    assert abs(abs(polygon_area_signed(u2)) - 12.25) < 1e-12
+    # clockwise input is normalized, not corrupted: unclip ratio 1.5 is
+    # d = 4*1.5/8 = 0.75 → side 3.5 either way round
+    polys = spark.createDataFrame(
+        [(1, [list(p) for p in sq]), (2, [list(p) for p in reversed(sq)])],
+        "doc_id bigint, poly array<array<double>>",
+    )
+    unc = offset_polygons_df(polys, ratio=1.5, mode="unclip").collect()
+    assert all(r.ok and abs(r.area_out - 12.25) < 1e-12 for r in unc)
 
 
 def test_polygon_df_faces(spark):
@@ -131,8 +129,6 @@ def test_polygon_review_repros(spark):
     import pytest
 
     nanq = [(0.0, 0.0), (2.0, 0.0), (2.0, 2.0), (0.0, float("nan"))]
-    assert unclip_polygon(nanq, 1.5) is None
-    assert convex_offset(nanq, 0.5) is None
     with pytest.raises(ValueError):
         convex_iou(rect_corners(0, 0, 2, 2, 0), nanq)
     with pytest.raises(ValueError):
@@ -153,15 +149,17 @@ def test_polygon_review_repros(spark):
 
     # vertex quantized almost onto an edge: the miter clamp keeps the
     # offset finite and the polygon is NOT spuriously refused
-    near = [(0.0, 0.0), (1.0, -1e-9), (2.0, 0.0), (2.0, 2.0), (0.0, 2.0)]
-    u = unclip_polygon(near, 1.5)
-    assert u is not None
-    plain = unclip_polygon(
-        [(0.0, 0.0), (2.0, 0.0), (2.0, 2.0), (0.0, 2.0)], 1.5
+    near = [[0.0, 0.0], [1.0, -1e-9], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0]]
+    plain = [[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0]]
+    polys = spark.createDataFrame(
+        [(1, near), (2, plain)], "doc_id bigint, poly array<array<double>>"
     )
-    assert abs(
-        abs(polygon_area_signed(u)) - abs(polygon_area_signed(plain))
-    ) < 1e-6
+    u = {
+        r.doc_id: r
+        for r in offset_polygons_df(polys, ratio=1.5, mode="unclip").collect()
+    }
+    assert u[1].ok and u[2].ok
+    assert abs(u[1].area_out - u[2].area_out) < 1e-6
 
     # NaN polygons through the offset DataFrame face stay ok=false
     polys = spark.createDataFrame(

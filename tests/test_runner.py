@@ -9,7 +9,6 @@ from comic_text_detector_spark.fixtures import corpus_df
 from comic_text_detector_spark.operators.dedup import asof_dedup
 from comic_text_detector_spark.plans.runner import (
     completed_partitions,
-    metrics_report,
     read_extracted,
     read_metrics,
     run_extract,
@@ -64,10 +63,6 @@ def test_resume_exactly_once(spark, tmp_path):
         metrics.groupBy("partition_id").count().filter(F.col("count") > 1).count()
         == 0
     )
-    # grouping-sets report runs and contains the grand total
-    rep = metrics_report(metrics)
-    grand = rep.filter(F.col("run_id").isNull()).collect()
-    assert len(grand) == 1 and grand[0].docs_in == n_urls
 
     # resuming with different partitioning parameters must refuse (would
     # mis-map completed work and duplicate documents)
@@ -284,86 +279,47 @@ def test_failed_chunk_keeps_exactly_once(spark, tmp_path):
     _metrics_exactly_once(spark, out, n_urls)
 
 
-def test_incremental_snapshots_watermark(spark, tmp_path):
-    """Incremental recrawl mode: a second snapshot processes ONLY captures
-    past the committed watermark; recaptures supersede on the read side;
-    committed/empty snapshots are no-ops."""
-    from comic_text_detector_spark.fixtures import wrap_html_expr
-    from comic_text_detector_spark.plans.runner import (
-        read_extracted_latest,
-        read_metrics,
-        run_extract_incremental,
-    )
+def test_bad_partitioning_writes_nothing(spark, tmp_path):
+    """A zero chunk or partition count is refused before _run_meta.json is
+    written, so a rerun with valid values on the same directory runs."""
+    import os
 
-    out = str(tmp_path / "inc")
-    kw = dict(num_partitions=8, num_chunks=2)
-    docs1 = corpus_df(spark, 40)
-    n_urls1 = docs1.select("url").distinct().count()
+    import pytest
 
-    s1 = run_extract_incremental(spark, docs1, out, "snap1", **kw)
-    assert s1["chunks_run"] == 2
-    assert read_extracted_latest(spark, out).count() == n_urls1
+    out = str(tmp_path / "job")
+    corpus = corpus_df(spark, 20)
+    for bad in (dict(num_partitions=8, num_chunks=0),
+                dict(num_partitions=0, num_chunks=2)):
+        with pytest.raises(ValueError, match="must be >= 1"):
+            run_extract(spark, corpus, out, **bad)
+        assert not os.path.exists(os.path.join(out, "_run_meta.json"))
+    r = run_extract(spark, corpus, out, num_partitions=8, num_chunks=2)
+    assert r["chunks_run"] == 2
+    n_urls = corpus.select("url").distinct().count()
+    assert read_extracted(spark, out).count() == n_urls
 
-    # the crawl table grows: 10 brand-new urls + 1 recapture of an old url
-    new_rows = spark.range(10).select(
-        F.concat(F.lit("https://newhost.example/"), F.col("id")).alias("url"),
-        (
-            F.lit("2026-02-01 00:00:00").cast("timestamp")
-            + F.make_interval(secs=F.col("id").cast("double"))
-        ).alias("warc_ts"),
-        wrap_html_expr(
-            F.concat(F.lit("brand new document number "), F.col("id"))
-        ).cast("binary").alias("html"),
-        F.concat(F.lit("brand new document number "), F.col("id")).alias("text"),
-        F.lit("eng").alias("lang"),
-    )
-    recap_url = docs1.orderBy("url").first().url
-    recap = spark.range(1).select(
-        F.lit(recap_url).alias("url"),
-        F.lit("2026-03-01 00:00:00").cast("timestamp").alias("warc_ts"),
-        wrap_html_expr(F.lit("fresh recapture content that is long enough"))
-        .cast("binary")
-        .alias("html"),
-        F.lit("fresh recapture content that is long enough").alias("text"),
-        F.lit("eng").alias("lang"),
-    )
-    table2 = docs1.unionByName(new_rows).unionByName(recap)
 
-    s2 = run_extract_incremental(spark, table2, out, "snap2", **kw)
-    assert s2["chunks_run"] >= 1
-    # only the 11 new captures were processed in snapshot 2
-    snap2_metrics = read_metrics(spark, out + "/snapshots/snap2")
-    docs_in = snap2_metrics.agg(F.sum("docs_in")).collect()[0][0]
-    assert docs_in == 11
-
-    latest = read_extracted_latest(spark, out)
-    assert latest.count() == n_urls1 + 10
-    got = latest.filter(F.col("url") == recap_url).collect()[0].text
-    assert got == "fresh recapture content that is long enough"
-
-    # committed snapshot → no-op; unchanged table → no new captures
-    assert run_extract_incremental(spark, table2, out, "snap2", **kw)[
-        "skipped"
-    ] == "already_committed"
-    assert run_extract_incremental(spark, table2, out, "snap3", **kw)[
-        "skipped"
-    ] == "no_new_captures"
-
-    # review repro: a crashed-then-late-committed snapshot appends LAST in
-    # the state file while holding OLDER captures — the read side must
-    # rank by pinned watermark, not commit order
+def test_extract_job_empty_input(spark, tmp_path, capsys):
+    """An empty documents table runs no chunk, so no metrics are written;
+    the job still reports zero totals instead of failing on the read."""
     import json
 
-    wm_path = out + "/_watermark.json"
-    with open(wm_path) as f:
-        state = json.load(f)
-    state["snapshots"] = state["snapshots"][::-1]
-    with open(wm_path, "w") as f:
-        json.dump(state, f)
-    latest2 = read_extracted_latest(spark, out)
-    assert latest2.count() == n_urls1 + 10
-    got2 = latest2.filter(F.col("url") == recap_url).collect()[0].text
-    assert got2 == "fresh recapture content that is long enough"
+    from jobs import extract_job
+
+    src = str(tmp_path / "docs")
+    corpus_df(spark, 4).limit(0).write.parquet(src)
+    out = str(tmp_path / "out")
+    capsys.readouterr()
+    assert extract_job.main(
+        ["--input", src, "--output", out, "--num-partitions", "4",
+         "--num-chunks", "2"],
+        spark=spark,
+    ) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["chunks_run"] == 0
+    assert (summary["docs_in"], summary["docs_out"], summary["bytes"]) == (0, 0, 0)
+    assert read_metrics(spark, out).count() == 0
+    assert not spark.sparkContext._jsc.sc().isStopped()
 
 
 def test_compact_job_binpacks_and_verifies(spark, tmp_path):

@@ -7,30 +7,12 @@ import pytest
 
 from comic_text_detector_spark.multimodal.binary_ops import (
     decode_image_meta,
-    media_stats,
-    sample_frames,
-)
-from comic_text_detector_spark.sources.readers import (
-    paired_scan,
-    parse_blocks_json,
-    read_raw_pages,
+    sniff_mime,
 )
 from comic_text_detector_spark.sources.sinks import (
     blocks_json,
-    line_poly_rows,
     yolo_label_lines,
 )
-
-
-def test_raw_page_source_binaryfile(spark, tmp_path):
-    p = tmp_path / "pages"
-    p.mkdir()
-    (p / "a.html").write_bytes(b"<p>hello page one content here</p>")
-    (p / "b.html").write_bytes(b"<p>second page content</p>")
-    df = read_raw_pages(spark, str(p))
-    rows = {r.url.split("/")[-1]: bytes(r.html) for r in df.collect()}
-    assert rows["a.html"].startswith(b"<p>hello")
-    assert len(rows) == 2
 
 
 def test_blocks_json_roundtrip(spark):
@@ -40,17 +22,12 @@ def test_blocks_json_roundtrip(spark):
         "conf:double,language:string,vertical:boolean,font_size:double,angle:int,"
         "text:array<string>>>",
     )
+    import json
+
     js = df.select("url", blocks_json(F.col("blocks")).alias("j"))
-    back = js.select("url", parse_blocks_json(F.col("j")).alias("blocks"))
-    row = back.collect()[0]
-    assert row.blocks[0].language == "eng" and row.blocks[0].text == ["hello"]
-    # tolerant re-read: unknown fields ignored (the **kwargs analog)
-    extra = spark.createDataFrame(
-        [('[{"block_id":1,"char_start":2,"char_end":3,"UNKNOWN_FIELD":42}]',)],
-        "j string",
-    )
-    got = extra.select(parse_blocks_json(F.col("j")).alias("b")).collect()[0]
-    assert got.b[0].block_id == 1 and got.b[0].conf is None
+    (block,) = json.loads(js.collect()[0].j)
+    assert block["language"] == "eng" and block["text"] == ["hello"]
+    assert (block["block_id"], block["char_start"], block["char_end"]) == (0, 0, 10)
 
 
 def test_yolo_label_and_poly_sinks(spark):
@@ -59,27 +36,6 @@ def test_yolo_label_and_poly_sinks(spark):
         yolo_label_lines(F.col("cls"), F.col("cx"), F.col("cy"), F.col("w"), F.col("h")).alias("l")
     ).collect()[0].l
     assert line == "0 0.500000 0.250000 0.100000 0.200000"
-    poly = spark.createDataFrame(
-        [([[0.0, 1.0], [2.0, 3.0], [4.0, 5.0], [6.0, 7.0]],)],
-        "pts array<array<double>>",
-    )
-    row = poly.select(line_poly_rows(F.col("pts")).alias("r")).collect()[0].r
-    assert row == "0 1 2 3 4 5 6 7"
-
-
-def test_paired_scan_join(spark):
-    imgs = spark.createDataFrame([("x.jpg", 1), ("y.jpg", 2)], "path string, v int")
-    masks = spark.createDataFrame(
-        [("mask-x.png", 10), ("mask-y.png", 20)], "mpath string, mv int"
-    )
-    out = paired_scan(
-        imgs,
-        masks,
-        F.regexp_replace("path", r"\.jpg$", ""),
-        F.regexp_replace(F.regexp_replace("mpath", r"^mask-", ""), r"\.png$", ""),
-    )
-    got = {(r.path, r.mpath) for r in out.collect()}
-    assert got == {("x.jpg", "mask-x.png"), ("y.jpg", "mask-y.png")}
 
 
 @pytest.fixture()
@@ -93,15 +49,20 @@ def media_df(spark):
 
 
 def test_media_stats_and_sniff(spark, media_df):
-    out = {r.media_id: r for r in media_stats(media_df).collect()}
-    assert out["m1"].sniffed_mime == "image/png"
-    assert out["m2"].sniffed_mime == "image/jpeg"
-    assert out["m3"].sniffed_mime == "application/octet-stream"
-    assert out["m1"].n_bytes == 306
-    assert len(out["m1"].sha256) == 64
+    out = {
+        r.media_id: r.sniffed_mime
+        for r in media_df.select(
+            "media_id", sniff_mime(F.col("media")).alias("sniffed_mime")
+        ).collect()
+    }
+    assert out == {
+        "m1": "image/png",
+        "m2": "image/jpeg",
+        "m3": "application/octet-stream",
+    }
 
 
-def test_decode_image_meta_real_headers(spark, media_df, monkeypatch):
+def test_decode_image_meta_real_headers(spark):
     from comic_text_detector_spark.multimodal.binary_ops import (
         parse_image_meta,
         synthesize_gif,
@@ -147,13 +108,6 @@ def test_decode_image_meta_real_headers(spark, media_df, monkeypatch):
     weird = b"BM" + b"\x00" * 12 + _s.pack("<I", 13) + _s.pack("<ii", 17, 9)
     assert parse_image_meta(weird) is None
 
-    # frame-sampling plumbing keeps its documented fake (video needs ffmpeg)
-    monkeypatch.setenv("CTD_FAKE_DECODE", "1")
-    frames = sample_frames(media_df, every_n=1).collect()
-    assert {f.media_id for f in frames} == {"m1", "m2", "m3"}
-    m1_frames = [f for f in frames if f.media_id == "m1"]
-    assert m1_frames[0].frame_idx == 0 and len(bytes(m1_frames[0].frame)) > 0
-
 
 def test_bucketed_table_write_read_prune(spark, tmp_path):
     """Iceberg-style bucketed layout: snapshot appends accumulate, point
@@ -164,7 +118,6 @@ def test_bucketed_table_write_read_prune(spark, tmp_path):
     from comic_text_detector_spark.fixtures import corpus_df
     from comic_text_detector_spark.operators.dedup import asof_dedup
     from comic_text_detector_spark.sources.sinks import (
-        read_extracted_table,
         read_url,
         write_extracted_table,
     )
@@ -172,7 +125,7 @@ def test_bucketed_table_write_read_prune(spark, tmp_path):
     path = str(tmp_path / "tbl")
     docs = asof_dedup(corpus_df(spark, 40)).select("url", "html")
     write_extracted_table(docs, path, buckets=8)
-    n1 = read_extracted_table(spark, path).count()
+    n1 = spark.read.parquet(path).count()
     assert n1 == docs.count()
 
     # snapshot append: second batch lands alongside the first
@@ -180,7 +133,7 @@ def test_bucketed_table_write_read_prune(spark, tmp_path):
         F.concat(F.lit("snap2-"), F.col("url")).alias("url"), "html"
     )
     write_extracted_table(more, path, buckets=8)
-    assert read_extracted_table(spark, path).count() == n1 + 5
+    assert spark.read.parquet(path).count() == n1 + 5
 
     # point lookup returns exactly the row and PRUNES the scan
     target = docs.select("url").first().url
@@ -191,43 +144,6 @@ def test_bucketed_table_write_read_prune(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="buckets=8"):
         write_extracted_table(more, path, buckets=16)
-
-
-def test_span_mask_png_sink(spark):
-    """S7 made real: the span-coverage mask is a valid grayscale PNG whose
-    pixels round-trip exactly."""
-    from comic_text_detector_spark.multimodal.binary_ops import (
-        decode_grayscale_png,
-        parse_image_meta,
-    )
-    from comic_text_detector_spark.sources.sinks import span_mask_png
-
-    df = spark.createDataFrame(
-        [
-            ("u1", "hello world", [(0, 0, 5), (1, 6, 11)]),
-            ("u2", "", []),
-        ],
-        "url string, text string,"
-        " spans array<struct<block_id:int,char_start:int,char_end:int>>",
-    )
-    rows = {r.url: r for r in span_mask_png(df).collect()}
-    m1 = bytes(rows["u1"].mask_png)
-    assert parse_image_meta(m1) == ("image/png", 11, 1, 1)
-    assert decode_grayscale_png(m1) == b"\xff" * 5 + b"\x00" + b"\xff" * 5
-    assert not rows["u1"].truncated
-    # empty document still yields a valid 1x1 PNG with a real pixel (the
-    # IDAT must match the declared IHDR dims, not truncate)
-    m2 = bytes(rows["u2"].mask_png)
-    assert parse_image_meta(m2) == ("image/png", 1, 1, 1)
-    assert decode_grayscale_png(m2) == b"\x00"
-    # truncation cap bounds the row
-    long = spark.createDataFrame(
-        [("u3", "x" * 100, [(0, 0, 100)])],
-        "url string, text string,"
-        " spans array<struct<block_id:int,char_start:int,char_end:int>>",
-    )
-    r3 = span_mask_png(long, max_width=10).collect()[0]
-    assert r3.truncated and parse_image_meta(bytes(r3.mask_png))[1] == 10
 
 
 # ---- real pixel ops (F5/F6) ----
@@ -381,27 +297,6 @@ def test_y4m_demux_and_frame_content():
     assert list(iter_y4m_frames(v[: len(v) - 3]))[:6] == frames[:6]
 
 
-def test_sample_y4m_frames_spark(spark):
-    from comic_text_detector_spark.multimodal.pixels import (
-        decode_png_pixels,
-        sample_y4m_frames,
-        synthesize_y4m,
-    )
-
-    df = spark.createDataFrame(
-        [("v1", synthesize_y4m(6, 4, 25)), ("junk", b"GIF89a nope")],
-        "media_id string, media binary",
-    )
-    rows = sample_y4m_frames(df, every_n=10).collect()
-    got = {(r.media_id, r.frame_idx): r for r in rows}
-    assert set(got) == {("v1", 0), ("v1", 10), ("v1", 20)}
-    # every sampled frame decodes back to its constant luma
-    for (_, k), r in got.items():
-        arr = decode_png_pixels(bytes(r.frame_png))
-        assert arr.shape == (4, 6, 1)
-        assert (arr == (k * 7 + 31) % 256).all()
-
-
 def test_y4m_adversarial_headers_terminate():
     """Review repros: negative W must not loop forever, non-numeric W must
     not raise, unknown colorspaces are dropped (sampling at the wrong
@@ -450,66 +345,6 @@ def test_letterbox_rgba_and_gray_alpha(spark):
     out = decode_png_pixels(bytes(got["rgba"].out_png))
     assert out.shape == (6, 6, 3)  # alpha stripped for model input
     assert decode_png_pixels(bytes(got["ga"].out_png)).shape == (6, 6, 1)
-
-
-def test_warp_region_axis_aligned_equals_crop(spark):
-    """F25 on real pixels: an axis-aligned quad warp with the exact
-    integer mapping is a crop; the vertical branch rotates 90 CCW; the
-    DataFrame face flags garbage rows ok=false."""
-    import numpy as np
-
-    from comic_text_detector_spark.multimodal.pixels import (
-        encode_png,
-        warp_region_images,
-        warp_region_pixels,
-    )
-
-    arr = ((np.arange(20 * 16).reshape(20, 16) * 7) % 256).astype(np.uint8)[
-        ..., None
-    ]
-    quad = [(3, 2), (12, 2), (12, 9), (3, 9)]  # x:3..12, y:2..9
-    region = warp_region_pixels(arr, quad, textheight=8)
-    assert region.shape == (8, 10, 1)
-    assert np.array_equal(region[:, :, 0], arr[2:10, 3:13, 0])
-    # vertical branch: w=textheight, h=round(textheight*ratio) (reference
-    # utils/textblock.py:185-191), THEN rotate 90 CCW. textheight=10 makes
-    # the mapping exact: pre-rotation 10x8 == the crop, rotated after.
-    regv = warp_region_pixels(arr, quad, textheight=10, vertical=True)
-    assert np.array_equal(regv[:, :, 0], np.rot90(arr[2:10, 3:13, 0]))
-    # the vertical output's line height IS textheight (post-rotation rows)
-    assert regv.shape[0] == 10
-
-    # perspective quad: corners land exactly on the source corners
-    pq = [(2.0, 1.0), (13.0, 3.0), (11.0, 12.0), (1.0, 9.0)]
-    reg2 = warp_region_pixels(arr, pq, textheight=9)
-    assert reg2[0, 0, 0] == arr[1, 2, 0]          # dest tl ← src tl
-    assert reg2[0, -1, 0] == arr[3, 13, 0]        # dest tr ← src tr
-    assert reg2[-1, -1, 0] == arr[12, 11, 0]      # dest br ← src br
-    assert reg2[-1, 0, 0] == arr[9, 1, 0]         # dest bl ← src bl
-
-    from comic_text_detector_spark.multimodal.pixels import decode_png_pixels
-
-    df = spark.createDataFrame(
-        [
-            ("good", bytearray(encode_png(arr)), [[3.0, 2.0], [12.0, 2.0],
-                                                  [12.0, 9.0], [3.0, 9.0]]),
-            ("bad", bytearray(b"not a png"), [[0.0, 0.0], [1.0, 0.0],
-                                              [1.0, 1.0], [0.0, 1.0]]),
-            # null inner point / short inner array: tolerant ok=false,
-            # never a task crash (review repro)
-            ("nullpt", bytearray(encode_png(arr)),
-             [[0.0, 0.0], [9.0, 0.0], [9.0, 9.0], None]),
-            ("shortpt", bytearray(encode_png(arr)),
-             [[0.0, 0.0], [9.0, 0.0], [9.0, 9.0], [1.0]]),
-        ],
-        "media_id string, media binary, quad array<array<double>>",
-    )
-    out = {r.media_id: r for r in warp_region_images(df, textheight=8).collect()}
-    assert out["good"].ok and (out["good"].out_w, out["good"].out_h) == (10, 8)
-    got = decode_png_pixels(bytes(out["good"].region_png))
-    assert np.array_equal(got[:, :, 0], arr[2:10, 3:13, 0])
-    for bad_id in ("bad", "nullpt", "shortpt"):
-        assert not out[bad_id].ok and out[bad_id].region_png is None
 
 
 def test_y4m_frame_stats_sampling(spark):

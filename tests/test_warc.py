@@ -1,227 +1,6 @@
-"""WARC ingestion: synthesize warc / warc.gz files, read → extract."""
+"""Crawl-archive record formats: revisit classification and CDXJ lines."""
 
 from __future__ import annotations
-
-import gzip
-
-from comic_text_detector_spark.fixtures import gen_documents
-from comic_text_detector_spark.plans.extract import extract_fused
-from comic_text_detector_spark.sources.warc import parse_warc, read_warc
-
-
-def _warc_record(url: str, ts: str, html: bytes, wtype: bytes = b"response") -> bytes:
-    http = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html
-    hdr = (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: " + wtype + b"\r\n"
-        b"WARC-Target-URI: " + url.encode() + b"\r\n"
-        b"WARC-Date: " + ts.encode() + b"\r\n"
-        b"Content-Length: " + str(len(http)).encode() + b"\r\n"
-    )
-    return hdr + b"\r\n" + http + b"\r\n\r\n"
-
-
-def _build_warc(rows) -> bytes:
-    parts = [
-        _warc_record("urn:warcinfo", "2026-01-01T00:00:00Z", b"", b"warcinfo")
-    ]
-    for r in rows:
-        parts.append(
-            _warc_record(r["url"], "2026-02-03T04:05:06Z", r["html"])
-        )
-    return b"".join(parts)
-
-
-def test_parse_warc_pure():
-    rows = gen_documents(5)[:5]
-    data = _build_warc(rows)
-    got = parse_warc(data)
-    assert [u for u, _, _ in got] == [r["url"] for r in rows]
-    assert all(ts == "2026-02-03T04:05:06Z" for _, ts, _ in got)
-    assert got[0][2] == rows[0]["html"]
-    # gz variant (concatenated members like CC)
-    gz = b"".join(gzip.compress(_warc_record(r["url"], "2026-02-03T04:05:06Z", r["html"])) for r in rows)
-    got_gz = parse_warc(gz)
-    assert [u for u, _, _ in got_gz] == [r["url"] for r in rows]
-
-
-def test_read_warc_to_extraction(spark, tmp_path):
-    rows = gen_documents(10)[:10]
-    (tmp_path / "seg-0.warc").write_bytes(_build_warc(rows[:5]))
-    (tmp_path / "seg-1.warc.gz").write_bytes(gzip.compress(_build_warc(rows[5:])))
-    docs = read_warc(spark, str(tmp_path))
-    collected = {r.url: bytes(r.html) for r in docs.collect()}
-    assert len(collected) == 10
-    assert collected[rows[0]["url"]] == rows[0]["html"]
-    ts = docs.select("warc_ts").first().warc_ts
-    assert ts is not None and ts.year == 2026
-    # straight into the flagship pipeline: byte-identical extraction
-    out = {r.url: r.text for r in extract_fused(docs).collect()}
-    for r in rows:
-        assert out[r["url"]] == r["text"]
-
-
-def test_wet_roundtrip(spark, tmp_path):
-    """Extract-shaped rows → WET blobs → parse back: byte-identical text
-    per url, timestamps preserved, warcinfo skipped."""
-    from pyspark.sql import functions as F
-
-    from comic_text_detector_spark.sources.warc import (
-        parse_warc,
-        read_wet,
-        wet_files,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            ("https://a.example/1", "hello extracted world", "2024-03-01 10:00:00"),
-            ("https://a.example/2", "unicode: héllo → done", "2024-03-01 11:30:00"),
-            ("https://a.example/3", "", None),
-        ],
-        "url string, text string, ts string",
-    ).withColumn("ts", F.to_timestamp("ts")).repartition(1)
-
-    blobs = wet_files(docs, ts_col="ts").collect()
-    assert len(blobs) == 1 and blobs[0].n_records == 3
-    recs = parse_warc(bytes(blobs[0].wet), record_types=(b"conversion",))
-    by_url = {u: (ts, body) for u, ts, body in recs}
-    assert by_url["https://a.example/1"][1] == b"hello extracted world"
-    assert by_url["https://a.example/1"][0] == "2024-03-01T10:00:00Z"
-    assert by_url["https://a.example/2"][1].decode() == "unicode: héllo → done"
-    assert by_url["https://a.example/3"] == ("1970-01-01T00:00:00Z", b"")
-
-    # file round-trip through the Spark reader
-    out = tmp_path / "seg.warc.wet.gz"
-    out.write_bytes(bytes(blobs[0].wet))
-    back = {r.url: r.text for r in read_wet(spark, str(out)).collect()}
-    assert back["https://a.example/1"] == "hello extracted world"
-    assert back["https://a.example/2"] == "unicode: héllo → done"
-    # response-record reader ignores conversion records entirely
-    assert parse_warc(bytes(blobs[0].wet)) == []
-
-
-def test_wet_http_prefixed_text_and_iri_urls(spark, tmp_path):
-    """Review findings: conversion-record text starting with 'HTTP/' must
-    survive intact (the envelope strip is response-only), non-ASCII urls
-    percent-encode, and empty partitions emit no blob."""
-    from pyspark.sql import functions as F
-
-    from comic_text_detector_spark.sources.warc import (
-        parse_warc,
-        wet_files,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            ("https://exämple.com/über", "HTTP/1.1 is a protocol, actually"),
-        ],
-        "url string, text string",
-    ).repartition(4)  # 3 partitions end up empty
-    blobs = wet_files(docs).collect()
-    assert len(blobs) == 1  # empty partitions emit nothing
-    recs = parse_warc(bytes(blobs[0].wet), record_types=(b"conversion",))
-    assert len(recs) == 1
-    url, _, body = recs[0]
-    assert body == b"HTTP/1.1 is a protocol, actually"
-    assert url == "https://ex%C3%A4mple.com/%C3%BCber"
-    # both mandatory record ids present (warcinfo + conversion)
-    import gzip
-
-    raw = gzip.decompress(bytes(blobs[0].wet))
-    assert raw.count(b"WARC-Record-ID:") == 2  # warcinfo + conversion
-
-
-class TestWat:
-    def test_wat_roundtrip_links_match_extractor(self, spark, tmp_path):
-        """wat_files → real blobs → read_wat: urls/timestamps survive and
-        the JSON Links equal functions/links.py's extraction verbatim
-        (one definition of 'a link')."""
-        import json
-
-        from comic_text_detector_spark.functions.links import extract_links
-        from comic_text_detector_spark.sources.warc import read_wat, wat_files
-
-        html1 = (
-            "<html><head><title>Page One</title></head><body>"
-            '<a href="https://x.example/a">first</a>'
-            '<a class="z" href="/rel">second</a>'
-            "<a data-href=\"bad\">no link</a></body></html>"
-        )
-        html2 = "<html><body>no links, no title</body></html>"
-        docs = spark.createDataFrame(
-            [
-                ("https://h.example/1", "2024-02-03 04:05:06", html1),
-                ("https://h.example/2", "2024-02-03 04:05:07", html2),
-            ],
-            "url string, warc_ts string, html string",
-        ).selectExpr("url", "CAST(warc_ts AS TIMESTAMP) AS warc_ts", "html")
-
-        blobs = wat_files(docs.repartition(1), ts_col="warc_ts")
-        out = str(tmp_path / "wat")
-        import os
-
-        os.makedirs(out)
-        for i, r in enumerate(blobs.collect()):
-            with open(f"{out}/part{i}.warc.wat.gz", "wb") as f:
-                f.write(bytes(r["wat"]))
-
-        back = read_wat(spark, f"{out}/*.warc.wat.gz")
-        rows = {r["url"]: r for r in back.collect()}
-        assert set(rows) == {"https://h.example/1", "https://h.example/2"}
-        assert str(rows["https://h.example/1"]["warc_ts"]).startswith(
-            "2024-02-03 04:05:06"
-        )
-        meta = json.loads(rows["https://h.example/1"]["meta_json"])
-        env = meta["Envelope"]
-        assert env["WARC-Header-Metadata"]["WARC-Type"] == "response"
-        hm = env["Payload-Metadata"]["HTTP-Response-Metadata"]["HTML-Metadata"]
-        assert hm["Head"]["Title"] == "Page One"
-        got_links = [(l["url"], l["text"]) for l in hm["Links"]]
-        exp_links = [
-            (r["href"], r["anchor"])
-            for r in extract_links(
-                docs.filter("url = 'https://h.example/1'")
-            ).collect()
-        ]
-        assert got_links == exp_links == [
-            ("https://x.example/a", "first"),
-            ("/rel", "second"),
-        ]
-        meta2 = json.loads(rows["https://h.example/2"]["meta_json"])
-        hm2 = meta2["Envelope"]["Payload-Metadata"][
-            "HTTP-Response-Metadata"
-        ]["HTML-Metadata"]
-        assert hm2["Links"] == [] and hm2["Head"]["Title"] == ""
-
-
-def test_wat_null_html_yields_empty_record(spark):
-    """NULL html must produce an empty-links record, not a kernel crash
-    (review finding), and the envelope URI must match the header's
-    percent-encoded form for non-ASCII urls."""
-    import gzip
-    import json
-
-    from comic_text_detector_spark.sources.warc import wat_files
-
-    docs = spark.createDataFrame(
-        [("https://h.example/café", None)], "url string, html string"
-    )
-    rows = wat_files(docs.repartition(1)).collect()
-    assert len(rows) == 1 and rows[0]["n_records"] == 1
-    body = gzip.decompress(bytes(rows[0]["wat"])).decode("utf-8")
-    # one metadata record; envelope URI == header URI (percent-encoded)
-    hdr_uri = [
-        ln.split(": ", 1)[1]
-        for ln in body.splitlines()
-        if ln.startswith("WARC-Target-URI: ")
-    ][0]
-    payload = json.loads(body[body.index('{"Envelope"'):body.rindex("}") + 1])
-    assert payload["Envelope"]["WARC-Header-Metadata"]["WARC-Target-URI"] == hdr_uri
-    assert "%C3%A9" in hdr_uri
-    hm = payload["Envelope"]["Payload-Metadata"]["HTTP-Response-Metadata"][
-        "HTML-Metadata"
-    ]
-    assert hm["Links"] == [] and hm["Head"]["Title"] == ""
 
 
 def test_classify_revisits_digest_dedup(spark):

@@ -9,8 +9,9 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb
 
@@ -42,57 +43,62 @@ def main():
     only = set(sys.argv[2:])
     spark = get_spark(app_name="verify-oracle", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
+    con = oracle_connection(sf_dir)
+    oracles = entry.oracle_sql()
+    counts = {"PASS": 0, "FAIL": 0, "ROWS-ONLY": 0}
+    for name, fn in entry.queries().items():
+        if only and name not in only:
+            continue
+        status, detail = check_query(spark, con, sf_dir, fn, oracles.get(name))
+        print(f"{status} {name}: {detail}")
+        counts[status] += 1
+    print(
+        f"\n{counts['PASS']} pass, {counts['FAIL']} fail, "
+        f"{counts['ROWS-ONLY']} rows-only"
+    )
+    spark.stop()
+    sys.exit(1 if counts["FAIL"] else 0)
+
+
+def oracle_connection(sf_dir: str):
+    """DuckDB connection with one view per table of ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    n_pass = n_fail = n_rows_only = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        try:
-            sdf = fn(spark, sf_dir)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
-        except Exception as e:
-            print(f"FAIL {name}: spark error {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(srows)} rows")
-            n_rows_only += 1
-            continue
-        try:
-            res = con.execute(oracles[name])
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
-            continue
-        sc, sr = norm_rows(scols, srows)
-        dc, dr = norm_rows(dcols, drows)
-        if sc != dc:
-            print(f"FAIL {name}: columns {sc} vs {dc}")
-            n_fail += 1
-            continue
-        if len(sr) != len(dr):
-            print(f"FAIL {name}: rowcount {len(sr)} vs {len(dr)}")
-            n_fail += 1
-            continue
-        if sr != dr:
-            bad = [(a, b) for a, b in zip(sr, dr) if a != b][:3]
-            print(f"FAIL {name}: values differ, e.g. {bad}")
-            n_fail += 1
-            continue
-        print(f"PASS {name}: {len(sr)} rows")
-        n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
-    spark.stop()
-    sys.exit(1 if n_fail else 0)
+    return con
+
+
+def check_query(spark, con, sf_dir: str, fn, oracle: str | None):
+    """Run one ``queries()`` entry on Spark and, when it has oracle SQL, on
+    DuckDB.
+    Returns (status, detail): PASS and ROWS-ONLY carry the Spark row count,
+    FAIL says what differed."""
+    try:
+        sdf = fn(spark, sf_dir)
+        srows = [tuple(r) for r in sdf.collect()]
+        scols = sdf.columns
+    except Exception as e:
+        return "FAIL", f"spark error {type(e).__name__}: {str(e)[:300]}"
+    if oracle is None:
+        return "ROWS-ONLY", f"{len(srows)} rows"
+    try:
+        res = con.execute(oracle)
+        dcols = [d[0] for d in res.description]
+        drows = res.fetchall()
+    except Exception as e:
+        return "FAIL", f"duckdb error {type(e).__name__}: {str(e)[:300]}"
+    sc, sr = norm_rows(scols, srows)
+    dc, dr = norm_rows(dcols, drows)
+    if sc != dc:
+        return "FAIL", f"columns {sc} vs {dc}"
+    if len(sr) != len(dr):
+        return "FAIL", f"rowcount {len(sr)} vs {len(dr)}"
+    if sr != dr:
+        bad = [(a, b) for a, b in zip(sr, dr) if a != b][:3]
+        return "FAIL", f"values differ, e.g. {bad}"
+    return "PASS", f"{len(sr)} rows"
 
 
 if __name__ == "__main__":
