@@ -4451,7 +4451,8 @@ def _q_ann_ivfpq_topk(spark, sf_dir):
 
 def _q_zorder_curve(spark, sf_dir):
     """Morton (Z-order) interleave of two bucketed keys — the multi-column
-    scan-pruning layout key behind write_zordered; pure shift/mask sums,
+    scan-pruning layout key (range-partition a table on it and per-file
+    min/max stats tighten on both keys); pure shift/mask sums,
     bit-identical in any engine (operators/layout.py)."""
     from comic_text_detector_spark.operators.dedup import md5_long
     from comic_text_detector_spark.operators.layout import zorder_key

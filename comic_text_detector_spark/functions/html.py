@@ -24,9 +24,6 @@ from typing import NamedTuple
 VOID_TAGS = frozenset(
     "br img hr meta link input area base col embed source track wbr param".split()
 )
-# Raw-text elements: their content is consumed verbatim up to the matching
-# close tag and never contributes text nodes.
-RAWTEXT_TAGS = frozenset("script style textarea title noscript".split())
 # Structural boilerplate: any text under these is never main content.
 # (The recast of the YOLO head's negative classes.)
 BOILER_TAGS = frozenset(
@@ -41,7 +38,6 @@ BLOCK_TAGS = frozenset(
     "summary center".split()
 )
 
-_NAME_RE = re.compile(r"^/?\s*([a-zA-Z][a-zA-Z0-9-]*)")
 _ENT_RE = re.compile(r"&(#[xX]?[0-9a-fA-F]+|[a-zA-Z][a-zA-Z0-9]*);")
 _NAMED_ENTITIES = {
     "amp": "&",

@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from ..operators.dedup import bucket_pairs
 from .pixels import decode_image_pixels
 
-HASH_BITS = 64
 _ROW = 8  # 8x8 comparison grid over a 9x8 cell lattice
 
 

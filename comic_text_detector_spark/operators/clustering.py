@@ -63,8 +63,6 @@ __all__ = [
     "ann_int8_topk",
 ]
 
-CENTI = 100
-
 
 def quantize_centi(vec: Column) -> Column:
     """array<float> -> array<long> of floor(x*100).

@@ -1,12 +1,12 @@
-"""Z-order (Morton-curve) data layout for multi-column scan pruning.
+"""Layout keys: the Z-order (Morton-curve) key and dense ids.
 
 At 100 TB a table sorted by one key prunes scans on that key only; a
 Z-order interleave of two key spaces clusters rows so that *both* keys'
 min/max ranges are tight per file — a filter on either column (or both)
 skips most row groups. This is the standard layout move behind
-Delta/Iceberg OPTIMIZE ZORDER; here it is a plain column expression plus
-``repartitionByRange`` so vanilla parquet min/max statistics do the
-pruning, no table-format extension needed.
+Delta/Iceberg OPTIMIZE ZORDER; here the key is a plain column expression,
+so ``repartitionByRange`` on it lets vanilla parquet min/max statistics
+do the pruning, no table-format extension needed.
 
 The interleave is pure bitwise arithmetic on non-negative ints < 2^bits —
 exact and identical in any engine (the oracle twin replays the same
@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["zorder_key", "write_zordered", "dense_ids"]
+__all__ = ["zorder_key", "dense_ids"]
 
 
 def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:
@@ -45,29 +45,6 @@ def zorder_key_sql(x: str, y: str, bits: int = 16) -> str:
         terms.append(f"(((CAST({x} AS BIGINT) >> {i}) & 1) << {2 * i})")
         terms.append(f"(((CAST({y} AS BIGINT) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"
-
-
-def write_zordered(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    path: str,
-    num_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered on the Z-curve of (x_col, y_col):
-    range-partition by the Morton code (contiguous curve segments per
-    file — this is what makes per-file min/max tight on BOTH columns),
-    sort within partitions, drop the helper column. Range partitioning
-    samples the key distribution, so skewed keys still split evenly."""
-    (
-        df.withColumn("_z", zorder_key(F.col(x_col), F.col(y_col), bits))
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def dense_ids(

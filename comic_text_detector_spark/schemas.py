@@ -38,19 +38,6 @@ NODES_SCHEMA = T.StructType(
     ]
 )
 
-# Candidate blocks — TextBlock analog (reference utils/textblock.py:12-86).
-BLOCKS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("block_key", T.IntegerType(), False),
-        T.StructField("n_nodes", T.IntegerType(), False),
-        T.StructField("total_chars", T.LongType(), False),
-        T.StructField("link_chars", T.LongType(), False),
-        T.StructField("is_boiler", T.BooleanType(), False),
-        T.StructField("conf", T.DoubleType(), False),
-    ]
-)
-
 SPAN_SCHEMA = T.StructType(
     [
         T.StructField("block_id", T.IntegerType(), False),
@@ -65,18 +52,5 @@ EXTRACTED_SCHEMA = T.StructType(
         T.StructField("url", T.StringType(), False),
         T.StructField("text", T.StringType(), False),
         T.StructField("spans", T.ArrayType(SPAN_SCHEMA), False),
-    ]
-)
-
-# Per-partition lineage rows for resumability (FIXTURES.md §4; north_rule).
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("docs_in", T.LongType(), False),
-        T.StructField("docs_out", T.LongType(), False),
-        T.StructField("bytes", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("ts", T.TimestampType(), False),
     ]
 )

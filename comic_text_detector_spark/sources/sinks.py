@@ -5,7 +5,8 @@ line polys, JSON blocks, mask PNG — inference.py:43-70); the engine's
 canonical sink is a url-bucketed parquet/Iceberg table
 (``write_extracted_table``, read back by ``read_url``), with the yolo-label
 and JSON-block text formats kept as column expressions so the byte format
-is testable without I/O.
+is testable without I/O. Jobs that materialize a stage write it with
+``write_counted``, which counts the rows during the write.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -22,6 +23,19 @@ def url_bucket(url_col: Column, buckets: int) -> Column:
     plain-Spark analog of Iceberg's ``bucket(N, url)``. One expression shared
     by writer and reader so pruning is correct by construction."""
     return F.pmod(F.xxhash64(url_col), F.lit(buckets)).cast("int")
+
+
+def write_counted(df: DataFrame, path: str) -> tuple[DataFrame, int]:
+    """Overwrite ``path`` with ``df`` as parquet; return the written table,
+    read back, and its row count. The count is an ``Observation`` that the
+    write itself fills, and the read takes ``df``'s schema instead of
+    inferring it from the files, so neither costs a Spark job. The returned
+    frame's plan is one file scan, not ``df``'s lineage."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path), obs.get["rows"]
 
 
 def write_extracted_table(

@@ -1,27 +1,28 @@
-"""The corpus-curation job: decontaminate → quality floor → mixture sample.
+"""The corpus-curation job: front door → decontaminate → text rewrites →
+floors → mixture sample.
 
 The training-data pipeline's third pass (after jobs/extract_job.py and
 jobs/dedup_job.py): given a deduplicated corpus and a benchmark set, drop
-documents that leak eval data, drop low-quality documents, and downsample
-each language stratum to its target mixture rate — deterministically, so a
-resumed or re-run job produces byte-identical output.
+pages that must not be trained on (blocklisted, noindex, crawl-trap and
+soft-404 pages) and documents that leak eval data (more than
+--max-shared-ngrams distinct n-grams shared with the benchmark; 0 =
+strict), strip boilerplate lines and cross-document verbatim spans, drop
+low-quality documents, and downsample each language stratum to its
+--rates entry (docs whose language has none are DROPPED) —
+deterministically, so a re-run produces the same output. --text-col names
+the text column in BOTH the corpus and the benchmark parquet.
 
-Every stage is a pure column-expression plan: the benchmark n-gram set
-broadcasts (linear in corpus size, no corpus-vs-corpus join), the quality
-floor and the hash sample are zero-exchange filters fused into one scan.
+The job is a linear chain: a stage whose plan reads its input more than
+once (an anti-join against a verdict on the same docs, or a join with a
+rewrite of them) writes its output under ``<output>/_stages/<name>`` and
+the next stage reads that file, so no plan replays the stages before it.
+The leaks are written to ``contaminated/`` and the result to ``curated/``;
+every summary count but ``docs_in`` is observed during a write.
 
-Usage:
+Usage (``--help`` lists every stage flag):
   spark-submit --py-files dist/ctd_spark.zip jobs/curate_job.py \
       --input <corpus parquet> --benchmark <benchmark parquet> \
-      --output /tmp/curated \
-      [--rates '{"en": 0.5, "de": 0.3}'] [--min-quality 0.3] \
-      [--max-shared-ngrams 0] [--id-col url] [--text-col text] \
-      [--lang-col lang] [--salt mix]
-
-Docs whose language has no entry in --rates are DROPPED (explicit mixture
-weights). --max-shared-ngrams N keeps docs sharing at most N distinct
-5-grams with the benchmark (0 = strict decontamination). --text-col names
-the text column in BOTH the corpus and the benchmark parquet.
+      --output /tmp/curated [stage flags]
 """
 
 from __future__ import annotations
@@ -146,7 +147,7 @@ def main(argv: list[str], spark=None) -> int:
         "--honor-noindex",
         action="store_true",
         help="parse <meta name=robots> from --html-col and drop noindex "
-        "pages before every other stage",
+        "pages at the front door, after --blocklist",
     )
     p.add_argument("--html-col", default="html")
     p.add_argument("--dup-k", type=int, default=20)
@@ -167,6 +168,7 @@ def main(argv: list[str], spark=None) -> int:
         hash_sample,
     )
     from comic_text_detector_spark.session import get_spark
+    from comic_text_detector_spark.sources.sinks import write_counted
 
     owns_session = spark is None
     if owns_session:
@@ -174,29 +176,37 @@ def main(argv: list[str], spark=None) -> int:
         spark.sparkContext.setLogLevel("WARN")
     docs = spark.read.parquet(args.input)
     bench = spark.read.parquet(args.benchmark)
-    n_in = docs.count()
+    stages = f"{args.output}/_stages"
 
     # optional stage 0: UT1-style URL blocklist — the curation front door
     # (host/domain-suffix/url-prefix verdicts, broadcast-joined); matched
-    # docs never reach the expensive stages
-    n_blocklisted = 0
+    # docs never reach the expensive stages. One aggregate counts both.
     if args.blocklist:
         from comic_text_detector_spark.operators.curation import (
             blocklist_filter,
         )
 
         bl = spark.read.parquet(args.blocklist)
-        docs = (
-            blocklist_filter(docs, bl, url_col=args.id_col)
-            .filter(F.col("block_category").isNull())
-            .drop("block_category", "block_kind")
+        docs = blocklist_filter(docs, bl, url_col=args.id_col)
+        n_in, n_blocklisted = docs.agg(
+            F.count(F.lit(1)), F.count("block_category")
+        ).first()
+        docs = docs.filter(F.col("block_category").isNull()).drop(
+            "block_category", "block_kind"
         )
-        n_after = docs.count()
-        n_blocklisted = n_in - n_after
+    else:
+        n_in, n_blocklisted = docs.count(), 0
+    n_front, dropped = n_in - n_blocklisted, {}
+
+    def front_door(name, survivors):
+        # the verdict was computed from the same docs it filters
+        nonlocal n_front
+        kept, n = write_counted(survivors, f"{stages}/{name}")
+        dropped[name], n_front = n_front - n, n
+        return kept
 
     # optional stage 0b: meta-robots noindex — an unindexable page must
     # not enter a training corpus; zero-shuffle directive parse + anti-join
-    n_noindexed = 0
     if args.honor_noindex:
         from comic_text_detector_spark.functions.links import (
             page_directives,
@@ -209,14 +219,11 @@ def main(argv: list[str], spark=None) -> int:
             .filter(F.col("noindex"))
             .select(F.col("url").alias(args.id_col))
         )
-        before = n_in - n_blocklisted
-        docs = docs.join(noidx, args.id_col, "left_anti")
-        n_noindexed = before - docs.count()
+        docs = front_door("noindex", docs.join(noidx, args.id_col, "left_anti"))
 
     # optional stage 0c: crawl-trap host drop — a trapped host's docs are
     # template spam by construction; one aggregate over the url column,
     # flagged hosts anti-joined back (broadcast-sized: hosts, not urls)
-    n_trapped = 0
     if args.drop_traps:
         from comic_text_detector_spark.operators.traps import detect_traps
 
@@ -228,20 +235,17 @@ def main(argv: list[str], spark=None) -> int:
             .filter("query_trap OR repeat_trap OR depth_trap")
             .select("host")
         )
-        before = docs.count()
-        docs = docs.join(
+        docs = front_door("traps", docs.join(
             trapped.withColumnRenamed("host", "__th"),
             F.expr(
                 f"regexp_extract({args.id_col},"
                 " '^[a-zA-Z]+://([^/?#]+)', 1) = __th"
             ),
             "left_anti",
-        )
-        n_trapped = before - docs.count()
+        ))
 
     # optional stage 0d: soft-404 scrub — 200-status not-found templates
     # must not enter the dedup tier; title from page_meta, zero shuffles
-    n_soft404 = 0
     if args.drop_soft404:
         from comic_text_detector_spark.functions.http import soft404_signals
         from comic_text_detector_spark.functions.links import page_meta
@@ -260,39 +264,38 @@ def main(argv: list[str], spark=None) -> int:
             .filter("is_soft404")
             .select(F.col("url").alias(args.id_col))
         )
-        before = docs.count()
-        docs = docs.join(flagged, args.id_col, "left_anti")
-        n_soft404 = before - docs.count()
+        docs = front_door("soft404", docs.join(flagged, args.id_col, "left_anti"))
 
     # stage 1: decontamination — anti-join against docs sharing more than
-    # the allowed number of distinct benchmark n-grams. The leaks frame is
-    # tiny (one row per contaminated doc) but sits downstream of the job's
-    # most expensive stage (the corpus n-gram explode), so it is
-    # materialized once as an audit artifact and re-read — the explode runs
-    # exactly once, like dedup_job's intermediate writes.
-    contaminated_docs(docs, bench, args.id_col, args.text_col, n=args.ngram).filter(
-        F.col("n_shared") > args.max_shared_ngrams
-    ).write.mode("overwrite").parquet(f"{args.output}/contaminated")
-    leaks = spark.read.parquet(f"{args.output}/contaminated")
-    clean = docs.join(
-        leaks.withColumnRenamed("id", args.id_col), args.id_col, "left_anti"
+    # the allowed number of distinct benchmark n-grams. The leaks (the
+    # corpus n-gram explode's output) are written once as an audit artifact.
+    leaks, _ = write_counted(contaminated_docs(
+        docs, bench, args.id_col, args.text_col, n=args.ngram
+    ).filter(F.col("n_shared") > args.max_shared_ngrams), f"{args.output}/contaminated")
+    clean, n_clean = write_counted(
+        docs.join(
+            leaks.withColumnRenamed("id", args.id_col), args.id_col, "left_anti"
+        ),
+        f"{stages}/decontaminated",
     )
-    n_clean = clean.count()
+
+    def rewrite(base, name, new):
+        # replace the text and the audit columns ``new`` carries; re-curating
+        # a previous curate_job output brings last run's audit columns, which
+        # must go first or the join would emit duplicate names
+        cols = [c for c in new.columns if c != args.id_col]
+        return write_counted(
+            base.drop(*cols).join(new, args.id_col), f"{stages}/{name}"
+        )[0]
 
     # optional stage 1b: boilerplate line removal (its own keyed exchanges;
     # n_lines_in/kept are carried into the curated output as audit columns)
     if args.max_line_doc_freq > 0:
         from comic_text_detector_spark.operators.curation import line_freq_dedup
 
-        deduped = line_freq_dedup(
+        clean = rewrite(clean, "line_dedup", line_freq_dedup(
             clean, args.id_col, args.text_col, max_doc_freq=args.max_line_doc_freq
-        ).withColumnRenamed("text", args.text_col)  # operator emits 'text'
-        # re-curating a previous curate_job output carries last run's audit
-        # columns — drop them (alongside the text) or the join would emit
-        # duplicate n_lines_* names and the parquet write would fail
-        clean = clean.drop(args.text_col, "n_lines_in", "n_lines_kept").join(
-            deduped, args.id_col
-        )
+        ).withColumnRenamed("text", args.text_col))  # operator emits 'text'
 
     # optional stage 1b2: HOST-scoped boilerplate removal — per-site nav
     # and footer lines whose corpus-wide df never crosses the 1b cap;
@@ -308,7 +311,7 @@ def main(argv: list[str], spark=None) -> int:
                 F.col(args.id_col), "^[a-zA-Z]+://([^/?#]+)", 1
             ),
         )
-        hdeduped = host_boilerplate_dedup(
+        clean = rewrite(clean, "host_line_dedup", host_boilerplate_dedup(
             hosted,
             args.id_col,
             args.text_col,
@@ -319,14 +322,10 @@ def main(argv: list[str], spark=None) -> int:
             F.col("text").alias(args.text_col),
             F.col("n_lines_in").alias("n_host_lines_in"),
             F.col("n_lines_kept").alias("n_host_lines_kept"),
-        )
-        clean = clean.drop(
-            args.text_col, "n_host_lines_in", "n_host_lines_kept"
-        ).join(hdeduped, args.id_col)
+        ))
 
-    # optional stage 1c: span-level exact-substring dedup — find cross-doc
-    # verbatim passages and cut them (n_cut_spans/n_chars_cut become audit
-    # columns; pre-existing ones from a re-curation are dropped first)
+    # optional stage 1c: span-level exact-substring dedup — cut cross-doc
+    # verbatim passages (n_cut_spans/n_chars_cut become audit columns)
     if args.cut_dup_spans:
         from comic_text_detector_spark.operators.curation import (
             cut_spans,
@@ -337,16 +336,16 @@ def main(argv: list[str], spark=None) -> int:
             clean, args.id_col, args.text_col,
             k=args.dup_k, min_len=args.dup_min_len,
         )
-        cut = cut_spans(clean, sp, args.id_col, args.text_col).withColumnRenamed(
-            "text_cut", args.text_col
-        )
-        clean = clean.drop(
-            args.text_col, "n_cut_spans", "n_chars_cut"
-        ).join(cut, args.id_col)
+        clean = rewrite(clean, "cut_spans", cut_spans(
+            clean, sp, args.id_col, args.text_col
+        ).withColumnRenamed("text_cut", args.text_col))
 
-    # optional stage 1d: trained/hashed linear quality floor — docs below
-    # the logit threshold leave via an anti-join (the scorer emits only
-    # docs WITH words; wordless docs keep their heuristic-floor fate)
+    # the text is final from here on: each floor below is a per-document
+    # verdict on the materialized ``final``, anti-joined out of ``clean``
+    final = clean
+
+    # optional stage 1d: trained/hashed linear quality floor (the scorer
+    # skips wordless docs; they keep their heuristic-floor fate)
     if args.min_logit is not None:
         from comic_text_detector_spark.operators.curation import quality_logit
 
@@ -356,13 +355,13 @@ def main(argv: list[str], spark=None) -> int:
             else None
         )
         low = quality_logit(
-            clean, args.id_col, args.text_col, weights=weights
+            final, args.id_col, args.text_col, weights=weights
         ).filter(F.col("logit") < args.min_logit)
         clean = clean.join(low.select(args.id_col), args.id_col, "left_anti")
 
     # optional stage 1e: LM perplexity floor (CCNet shape) — a bigram LM
-    # trained on the reference corpus scores every doc; low scorers leave
-    # via an anti-join (wordless docs are unscored and keep their fate)
+    # trained on the reference corpus scores every doc (wordless docs are
+    # unscored and keep their fate)
     if args.min_lm_score is not None:
         from comic_text_detector_spark.operators.lm import (
             lm_score,
@@ -380,12 +379,13 @@ def main(argv: list[str], spark=None) -> int:
             text_col=args.text_col,
         )
         low = lm_score(
-            clean, uni, big, id_col=args.id_col, text_col=args.text_col
+            final, uni, big, id_col=args.id_col, text_col=args.text_col
         ).filter(F.col("score") < args.min_lm_score)
         clean = clean.join(low.select(args.id_col), args.id_col, "left_anti")
 
     # optional stage 1e2: per-host anti-domination cap (deterministic
-    # uniform draw; hostless rows pass uncapped — see the operator)
+    # uniform draw; hostless rows pass uncapped — see the operator). Not
+    # row-local: which docs it keeps depends on the floors before it.
     if args.max_docs_per_host > 0:
         from comic_text_detector_spark.operators.curation import cap_per_host
 
@@ -399,14 +399,13 @@ def main(argv: list[str], spark=None) -> int:
 
     # optional stage 1f: Gopher heuristic battery — docs failing any of the
     # Rae et al. rules (word bounds, word length, symbol/bullet/ellipsis,
-    # duplicate lines, stopword presence) leave via an anti-join; the
-    # battery itself is a zero-shuffle Project so the stage's only
-    # exchange is the join back
+    # duplicate lines, stopword presence); the battery itself is a
+    # zero-shuffle Project
     if args.gopher:
         from comic_text_detector_spark.operators.curation import gopher_quality
 
         bad = gopher_quality(
-            clean, args.id_col, args.text_col, min_words=args.gopher_min_words
+            final, args.id_col, args.text_col, min_words=args.gopher_min_words
         ).filter(~F.col("keep")).select(args.id_col)
         clean = clean.join(bad, args.id_col, "left_anti")
 
@@ -431,17 +430,16 @@ def main(argv: list[str], spark=None) -> int:
             good, args.id_col, rates_by=args.lang_col, rates=rates,
             salt=args.salt,
         )
-    curated.write.mode("overwrite").parquet(f"{args.output}/curated")
+    _, n_out = write_counted(curated, f"{args.output}/curated")
 
-    n_out = spark.read.parquet(f"{args.output}/curated").count()
     summary = {
         "docs_in": n_in,
         "blocklisted": n_blocklisted,
-        "noindexed": n_noindexed,
-        "trap_dropped": n_trapped,
-        "soft404_dropped": n_soft404,
+        "noindexed": dropped.get("noindex", 0),
+        "trap_dropped": dropped.get("traps", 0),
+        "soft404_dropped": dropped.get("soft404", 0),
         "after_decontaminate": n_clean,
-        "contaminated_removed": n_in - n_clean,
+        "contaminated_removed": n_front - n_clean,
         "curated": n_out,
     }
     print(json.dumps(summary))

@@ -57,6 +57,7 @@ def main(argv: list[str], spark=None) -> int:
     )
     from comic_text_detector_spark.operators.graph import connected_components
     from comic_text_detector_spark.session import get_spark
+    from comic_text_detector_spark.sources.sinks import write_counted
 
     owns_session = spark is None
     if owns_session:
@@ -66,10 +67,10 @@ def main(argv: list[str], spark=None) -> int:
     n_in = docs.count()
 
     # pass 1: exact — one window, keeps the min-id row per distinct text
-    exact = exact_dedup_survivors(docs, args.text_col, args.id_col)
-    exact.write.mode("overwrite").parquet(f"{args.output}/exact_survivors")
-    exact = spark.read.parquet(f"{args.output}/exact_survivors")
-    n_exact = exact.count()
+    exact, n_exact = write_counted(
+        exact_dedup_survivors(docs, args.text_col, args.id_col),
+        f"{args.output}/exact_survivors",
+    )
 
     # optionally materialize this corpus's band index for future
     # incremental runs (the signature pass is the expensive leg)
@@ -107,12 +108,9 @@ def main(argv: list[str], spark=None) -> int:
         base_b = cand_all.join(
             ids.withColumnRenamed("__id", "id_b"), "id_b", "left_anti"
         ).select(F.col("id_a").alias(args.id_col))
-        dup_of_base = base_a.unionByName(base_b).distinct()
-        dup_of_base.write.mode("overwrite").parquet(
-            f"{args.output}/dup_of_base"
+        dup_of_base, n_dup_of_base = write_counted(
+            base_a.unionByName(base_b).distinct(), f"{args.output}/dup_of_base"
         )
-        dup_of_base = spark.read.parquet(f"{args.output}/dup_of_base")
-        n_dup_of_base = dup_of_base.count()
         exact = exact.join(dup_of_base, args.id_col, "left_anti")
         cand = both
     else:
@@ -120,24 +118,20 @@ def main(argv: list[str], spark=None) -> int:
     verified = ngram_jaccard_pairs(
         cand, exact, args.id_col, args.text_col
     ).filter(F.col("jaccard") >= args.jaccard)
-    verified.write.mode("overwrite").parquet(f"{args.output}/near_dup_pairs")
-    pairs = spark.read.parquet(f"{args.output}/near_dup_pairs")
-    connected_components(pairs).write.mode("overwrite").parquet(
-        f"{args.output}/clusters"
-    )
+    pairs, _ = write_counted(verified, f"{args.output}/near_dup_pairs")
     # survivors derive from the clusters ALREADY written — the iterative CC
     # (the job's most expensive stage) runs exactly once
-    cc = spark.read.parquet(f"{args.output}/clusters")
+    cc, _ = write_counted(connected_components(pairs), f"{args.output}/clusters")
     losers = cc.filter(F.col("id") != F.col("cluster_rep")).select(
         F.col("id").alias(args.id_col)
     )
-    survivors = exact.join(losers, args.id_col, "left_anti")
-    survivors.write.mode("overwrite").parquet(f"{args.output}/survivors")
+    _, n_out = write_counted(
+        exact.join(losers, args.id_col, "left_anti"), f"{args.output}/survivors"
+    )
     # bucket_pairs persists its annotated signature frame for plan reuse;
     # release it now that every downstream output is materialized
     spark.catalog.clearCache()
 
-    n_out = spark.read.parquet(f"{args.output}/survivors").count()
     summary = {
         "docs_in": n_in,
         "after_exact": n_exact,

@@ -10,12 +10,15 @@ from __future__ import annotations
 import contextlib
 import io
 import json
+from unittest import mock
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from __spark_entry__ import SF_DEFAULT
 from jobs import curate_job
+from tests.test_runner import _jobs_in_group
 
 REPLICAS = 4
 # the benchmark is the first 50 base docs, so every copy of them must be
@@ -69,9 +72,11 @@ def _planted_curate_corpus(spark, path, replicas):
 
 
 @pytest.fixture(scope="module")
-def chain(spark, tmp_path_factory):
-    """One curate_job call with line dedup, span cut, LM and logit floors;
-    returns (spark, corpus path, output dir, the job's JSON summary)."""
+def chain_call(spark, tmp_path_factory):
+    """One curate_job call with line dedup, span cut, LM and logit floors,
+    run under a job group with every parquet write's executed plan
+    recorded; returns (spark, corpus path, output dir, the job's JSON
+    summary, Spark jobs launched, {output path: plan})."""
     tmp = tmp_path_factory.mktemp("curate_chain")
     corpus, bench, out = (str(tmp / d) for d in ("c", "b", "out"))
     _planted_curate_corpus(spark, corpus, REPLICAS)
@@ -79,8 +84,14 @@ def chain(spark, tmp_path_factory):
         F.col("doc_id") < N_BENCH
     ).select("doc_id", "text").write.parquet(bench)
 
-    stdout = io.StringIO()
-    with contextlib.redirect_stdout(stdout):
+    plans = {}
+    write = DataFrameWriter.parquet
+
+    def recording_write(self, path, *args, **kwargs):
+        plans[path] = self._df._jdf.queryExecution().executedPlan().toString()
+        return write(self, path, *args, **kwargs)
+
+    def call():
         assert curate_job.main(
             [
                 "--input", corpus, "--benchmark", bench, "--output", out,
@@ -93,8 +104,36 @@ def chain(spark, tmp_path_factory):
             ],
             spark=spark,
         ) == 0
+
+    stdout = io.StringIO()
+    with contextlib.redirect_stdout(stdout), mock.patch.object(
+        DataFrameWriter, "parquet", recording_write
+    ):
+        n_jobs = _jobs_in_group(spark, "curate-chain", call)
     summary = json.loads(stdout.getvalue().strip().splitlines()[-1])
-    return spark, corpus, out, summary
+    return spark, corpus, out, summary, n_jobs, plans
+
+
+@pytest.fixture(scope="module")
+def chain(chain_call):
+    """(spark, corpus path, output dir, the job's JSON summary)."""
+    return chain_call[:4]
+
+
+def test_chain_is_linear(chain_call):
+    """Each stage reads the previous stage's written output, so the final
+    write scans the span-cut stage three times (the docs, the logit and
+    the LM scorers) and the benchmark three times (the LM's training), not
+    the corpus once per stage before it. The call is one input count,
+    then each write with its shuffles; every summary count is observed
+    during a write."""
+    spark, corpus, out, s, n_jobs, plans = chain_call
+    scans = plans[f"{out}/curated"].count("FileScan")
+    assert (n_jobs, scans) == (40, 6)
+    assert sorted(p[len(out) + 1:] for p in plans) == [
+        "_stages/cut_spans", "_stages/decontaminated", "_stages/line_dedup",
+        "contaminated", "curated",
+    ]
 
 
 def test_stage_monotone_and_counts(chain):

@@ -23,7 +23,7 @@ from comic_text_detector_spark.operators.clustering import (
     semdedup,
 )
 from comic_text_detector_spark.operators.dedup import cdc_chunks
-from comic_text_detector_spark.operators.layout import zorder_key, write_zordered
+from comic_text_detector_spark.operators.layout import zorder_key
 
 
 def _blob_df(spark, n_per=40, dim=8):
@@ -202,40 +202,6 @@ def test_zorder_key_known_values(spark):
     )
     assert (row.a, row.b, row.c, row.d) == (7, 0, 0b01010101, 0b10101010)
     assert row.e == (1 << 32) - 1
-
-
-def test_zorder_layout_tightens_both_columns(spark, tmp_path):
-    """The point of the layout: per-file bounding boxes on (x, y) shrink
-    vs a hash layout, so min/max pruning works on either column."""
-    n = 4096
-    df = spark.range(n).select(
-        F.col("id"),
-        F.pmod(F.xxhash64("id"), F.lit(256)).alias("x"),
-        F.pmod(F.xxhash64("id", F.lit(1)), F.lit(256)).alias("y"),
-    )
-    path = str(tmp_path / "zorder")
-    write_zordered(df, "x", "y", path, num_files=16, bits=8)
-    back = spark.read.parquet(path)
-
-    def bbox_area(d):
-        import pyspark.sql.functions as G
-
-        parts = (
-            d.withColumn("p", G.spark_partition_id())
-            .groupBy("p")
-            .agg(
-                (G.max("x") - G.min("x")).alias("dx"),
-                (G.max("y") - G.min("y")).alias("dy"),
-            )
-            .collect()
-        )
-        return sum((r.dx + 1) * (r.dy + 1) for r in parts)
-
-    z_area = bbox_area(back)
-    # baseline: same data hash-partitioned into 16 parts
-    base_area = bbox_area(df.repartition(16, "id"))
-    # z-ordered files cover far less of the key plane per file
-    assert z_area < base_area / 2, (z_area, base_area)
 
 
 def test_cdc_chunks_finds_shared_passage_anywhere(spark):

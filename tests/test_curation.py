@@ -1,5 +1,9 @@
 """Curation operators: decontamination + deterministic sampling."""
 
+import contextlib
+import io
+import json
+
 from pyspark.sql import functions as F
 
 from comic_text_detector_spark.operators.curation import (
@@ -1359,16 +1363,22 @@ def test_curate_job_blocklist_and_noindex(spark, tmp_path):
         "pattern string, kind string, category string",
     ).write.parquet(bl)
     out = str(tmp_path / "out")
-    assert curate_job.main(
-        [
-            "--input", corpus, "--benchmark", bench, "--output", out,
-            "--rates", '{"en": 1.0}', "--max-shared-ngrams", "99",
-            "--blocklist", bl, "--honor-noindex",
-        ],
-        spark=spark,
-    ) == 0
+    stdout = io.StringIO()
+    with contextlib.redirect_stdout(stdout):
+        assert curate_job.main(
+            [
+                "--input", corpus, "--benchmark", bench, "--output", out,
+                "--rates", '{"en": 1.0}', "--max-shared-ngrams", "99",
+                "--blocklist", bl, "--honor-noindex",
+            ],
+            spark=spark,
+        ) == 0
     kept = {r.url for r in spark.read.parquet(f"{out}/curated").collect()}
     assert kept == {"https://ok.com/a"}
+    s = json.loads(stdout.getvalue().strip().splitlines()[-1])
+    assert (s["blocklisted"], s["noindexed"], s["contaminated_removed"]) == (
+        1, 1, 0
+    )
 
 
 def test_bitext_url_pairs_planted(spark):
@@ -1527,14 +1537,20 @@ def test_curate_job_traps_and_soft404(spark, tmp_path):
     spark.createDataFrame([("zz qq ww",)], "text string").write.parquet(bench)
 
     out = str(tmp_path / "out_traps")
-    assert curate_job.main(
-        ["--input", corpus, "--output", out, "--benchmark", bench,
-         "--rates", '{"en": 1.0}', "--drop-traps",
-         "--trap-query-variants", "10", "--drop-soft404"],
-        spark=spark,
-    ) == 0
+    stdout = io.StringIO()
+    with contextlib.redirect_stdout(stdout):
+        assert curate_job.main(
+            ["--input", corpus, "--output", out, "--benchmark", bench,
+             "--rates", '{"en": 1.0}', "--drop-traps",
+             "--trap-query-variants", "10", "--drop-soft404"],
+            spark=spark,
+        ) == 0
     kept = [r.url for r in spark.read.parquet(f"{out}/curated").collect()]
     assert sorted(kept) == [f"http://ok.ex/p{k}" for k in range(3)]
+    s = json.loads(stdout.getvalue().strip().splitlines()[-1])
+    assert (s["trap_dropped"], s["soft404_dropped"], s["contaminated_removed"]) == (
+        12, 1, 0
+    )
 
 
 def test_c4_line_filter_rules(spark):

@@ -407,8 +407,11 @@ class TestNeardupIncremental:
 def test_dedup_job_incremental_band_index(spark, tmp_path):
     """Run 1 materializes the band index; run 2 (new snapshot) drops
     docs that collide with base as dup_of_base and dedups the rest
-    within-snapshot via the normal verify pipeline."""
-    import json  # noqa: F401
+    within-snapshot via the normal verify pipeline; its summary counts
+    each removal once."""
+    import contextlib
+    import io
+    import json
 
     from jobs import dedup_job
 
@@ -436,15 +439,72 @@ def test_dedup_job_incremental_band_index(spark, tmp_path):
          "--band-index-out", bands],
         spark=spark,
     ) == 0
-    assert dedup_job.main(
-        ["--input", incr_in, "--output", incr_out,
-         "--base-band-index", bands, "--jaccard", "0.5"],
-        spark=spark,
-    ) == 0
+    stdout = io.StringIO()
+    with contextlib.redirect_stdout(stdout):
+        assert dedup_job.main(
+            ["--input", incr_in, "--output", incr_out,
+             "--base-band-index", bands, "--jaccard", "0.5"],
+            spark=spark,
+        ) == 0
+    assert json.loads(stdout.getvalue().strip().splitlines()[-1]) == {
+        "docs_in": 3, "after_exact": 3, "after_near_dup": 1,
+        "near_dup_removed": 1, "dup_of_base_removed": 1,
+    }
     dup = {r["url"] for r in spark.read.parquet(f"{incr_out}/dup_of_base").collect()}
     assert dup == {"n1"}
     surv = {r["url"] for r in spark.read.parquet(f"{incr_out}/survivors").collect()}
     assert surv == {"n2"}  # n1 dup-of-base, n3 clustered under n2
+
+
+def test_dedup_job_summary(spark, tmp_path):
+    """Full mode on a planted corpus (three exact copies, a near-dup pair,
+    two unrelated docs): every summary value matches the parquet outputs.
+    The call is the input count, then each write with its shuffles; the
+    exact and near-dup counts are observed during the writes of
+    exact_survivors/ and survivors/, which are not read back to count."""
+    import contextlib
+    import io
+    import json
+
+    from jobs import dedup_job
+    from tests.test_runner import _jobs_in_group
+
+    def words(p):
+        return " ".join(f"{p}{i}" for i in range(80))
+
+    docs = spark.createDataFrame(
+        [(f"a{k}", words("w")) for k in (1, 2, 3)]
+        + [("b1", words("q")), ("b2", words("q") + " tail")]
+        + [("c1", words("z")), ("c2", words("y"))],
+        "url string, text string",
+    )
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    docs.write.parquet(inp)
+    stdout = io.StringIO()
+    with contextlib.redirect_stdout(stdout):
+        n_jobs = _jobs_in_group(
+            spark, "dedup-job",
+            lambda: dedup_job.main(["--input", inp, "--output", out], spark=spark),
+        )
+    s = json.loads(stdout.getvalue().strip().splitlines()[-1])
+
+    def urls(name):
+        return {r.url for r in spark.read.parquet(f"{out}/{name}").collect()}
+
+    losers = spark.read.parquet(f"{out}/clusters").filter("id != cluster_rep")
+    assert urls("exact_survivors") == {"a1", "b1", "b2", "c1", "c2"}
+    assert urls("survivors") == {"a1", "b1", "c1", "c2"}
+    assert s == {
+        "docs_in": spark.read.parquet(inp).count(),
+        "after_exact": len(urls("exact_survivors")),
+        "after_near_dup": len(urls("survivors")),
+        "near_dup_removed": losers.count(),
+        "dup_of_base_removed": 0,
+    } == {
+        "docs_in": 7, "after_exact": 5, "after_near_dup": 4,
+        "near_dup_removed": 1, "dup_of_base_removed": 0,
+    }
+    assert n_jobs == 40
 
 
 def test_containment_pairs_asymmetric(spark):

@@ -10,18 +10,21 @@ are resolved against the importing module, and importing a dotted module
 also runs each parent package's ``__init__``. A package module that no
 root reaches is code only its own tests use.
 
-Definitions: a top-level ``def`` or ``class`` in a package module is
-reached when its name is referenced in a root file, in a package module's
-module-level statements (decorators, defaults, annotations and base
-classes run there too), or in the body of another reached definition;
-iterate to a fixed point. A definition's own body does not keep it alive.
-Code kept on purpose (``ALLOWED_UNREACHED`` modules and
+Definitions: a top-level ``def``, ``class`` or assignment target (a
+module constant) in a package module is reached when its name is
+referenced in a root file, in a package module's other module-level
+statements (decorators, defaults, annotations and base classes run there
+too), or in the body of another reached definition; iterate to a fixed
+point. A definition's own body (an assignment's value) does not keep it
+alive. Code kept on purpose (``ALLOWED_UNREACHED`` modules and
 ``ALLOWED_UNREACHED_DEFS``) counts as reached for what it calls. A
 reference is an ``ast.Name``, an ``ast.Attribute`` attr, an import alias,
-or a string constant equal to the name (dispatch by name). Matching is by
-name only: one reference keeps every definition of that name alive, so the
-check can miss an orphan that shares a name with reached code, but it
-never fails on reached code.
+or a string constant equal to the name (dispatch by name). Module dunders
+(``__all__``, ``__version__``) are metadata, neither definitions nor
+references: listing a name in ``__all__`` exports it without using it.
+Matching is by name only: one reference keeps every definition of that
+name alive, so the check can miss an orphan that shares a name with
+reached code, but it never fails on reached code.
 """
 
 from __future__ import annotations
@@ -145,12 +148,23 @@ def _import_time_parts(node: ast.AST) -> list[ast.AST]:
     return parts
 
 
+def _assigned_names(node: ast.AST) -> list[str]:
+    """The names a top-level ``X = ...`` / ``X: T = ...`` binds."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    return [t.id for t in targets if isinstance(t, ast.Name)]
+
+
 def _definitions(files: dict[str, Path]):
     """Qualified name -> (name, refs of the whole definition) for every
-    top-level def/class in a package module outside ``ALLOWED_UNREACHED``,
-    and the names that are live from the start: every reference in a root
-    file or an allowed module, and in a package module's module-level
-    statements."""
+    top-level def/class/assigned name in a package module outside
+    ``ALLOWED_UNREACHED``, and the names that are live from the start:
+    every reference in a root file or an allowed module, and in a package
+    module's other module-level statements."""
     defs: dict[str, tuple[str, set[str]]] = {}
     live: set[str] = set()
     for mod, path in files.items():
@@ -161,9 +175,15 @@ def _definitions(files: dict[str, Path]):
         if mod.split(".")[0] != PACKAGE:
             continue
         for node in tree.body:
+            names = _assigned_names(node)
+            if any(n.startswith("__") and n.endswith("__") for n in names):
+                continue
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs[f"{mod}.{node.name}"] = (node.name, _refs(node))
                 live |= _refs(*_import_time_parts(node))
+            elif names:
+                for name in names:
+                    defs[f"{mod}.{name}"] = (name, _refs(node.value))
             else:
                 live |= _refs(node)
     return defs, live

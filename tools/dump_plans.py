@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 KEY = re.compile(
     r"ReadSchema|PushedFilters|Location|hashpartitioning|REPARTITION|"
@@ -225,7 +227,7 @@ def main() -> None:
     ]
     for title, df, note in sections:
         out.append(f"## {title}\n\n{note}\n\n```\n{trim(fmt(df))}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written")
     spark.stop()
