@@ -279,10 +279,6 @@ def corpus_df(spark: SparkSession, n: int = 200, seed: int = SEED) -> DataFrame:
     return spark.createDataFrame(data, DOCUMENTS_SCHEMA)
 
 
-def write_corpus(spark: SparkSession, path: str, n: int = 200, seed: int = SEED) -> None:
-    corpus_df(spark, n, seed).write.mode("overwrite").parquet(path)
-
-
 def gen_hard_documents(n: int = 100, seed: int = SEED + 1) -> list[dict]:
     """Adversarial tier: pages where heuristics are ALLOWED to be imperfect.
 

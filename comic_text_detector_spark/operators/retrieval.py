@@ -23,7 +23,7 @@ the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -460,23 +460,26 @@ def write_inverted_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_term_buckets: int = 64,
-) -> None:
+) -> int:
     """Materialize the index: postings laid out hash-partitioned by term
     (``term_bucket=NN`` directories, Hive-style) so a query's read prunes
     to |q| buckets of the term space instead of scanning every posting;
     lengths beside them; a one-row meta relation records the bucket count
-    (the reader must probe with the SAME bucketing)."""
+    (the reader must probe with the SAME bucketing). Returns the number of
+    postings, observed during their write."""
     spark = docs.sparkSession
     postings, lengths = build_inverted_index(docs, id_col, text_col)
+    n_postings = Observation()
     postings.withColumn(
         "term_bucket", F.pmod(F.xxhash64("w"), F.lit(n_term_buckets))
-    ).write.mode("overwrite").partitionBy("term_bucket").parquet(
-        f"{path}/postings"
-    )
+    ).observe(n_postings, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).partitionBy("term_bucket").parquet(f"{path}/postings")
     lengths.write.mode("overwrite").parquet(f"{path}/lengths")
     spark.createDataFrame(
         [(int(n_term_buckets),)], "n_term_buckets int"
     ).write.mode("overwrite").parquet(f"{path}/meta")
+    return n_postings.get["rows"]
 
 
 def bm25_from_index_path(

@@ -4,6 +4,9 @@ Mirrors the reference's ``model2annotations`` shape (inference.py:19-70):
 directory scan → per-document pipeline → fan-out to per-format outputs
 (there: yolo labels, line polys, JSON blocks, masks; here: the extracted
 table, a JSON block-record sink (S6/F22), and a flat label text sink (S4)).
+The extracted table is written once with ``write_counted``; the other two
+sinks read it back, so extraction runs once, and the summary's ``docs`` is
+the row count observed on that write.
 
 Usage:
   spark-submit --py-files dist/ctd_spark.zip jobs/annotate_job.py \
@@ -17,7 +20,7 @@ import json
 import sys
 
 
-def main(argv: list[str]) -> int:
+def main(argv: list[str], spark=None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
@@ -30,14 +33,16 @@ def main(argv: list[str]) -> int:
     from comic_text_detector_spark.plans.extract import extract_fused
     from comic_text_detector_spark.session import get_spark
     from comic_text_detector_spark.sources.readers import read_documents
+    from comic_text_detector_spark.sources.sinks import write_counted
 
-    spark = get_spark(app_name="ctd-annotate")
-    spark.sparkContext.setLogLevel("WARN")
+    owns_session = spark is None
+    if owns_session:
+        spark = get_spark(app_name="ctd-annotate")
+        spark.sparkContext.setLogLevel("WARN")
     docs = asof_dedup(read_documents(spark, args.input))
-    extracted = extract_fused(docs).cache()
 
-    # sink 1: the canonical table
-    extracted.write.mode("overwrite").parquet(f"{args.output}/extracted")
+    # sink 1: the canonical table; the other sinks read it back
+    extracted, n = write_counted(extract_fused(docs), f"{args.output}/extracted")
 
     # sink 2: JSON block records (S6/F22) — one line per url
     blocks = extracted.select(
@@ -73,9 +78,9 @@ def main(argv: list[str]) -> int:
     )
     labels.write.mode("overwrite").text(f"{args.output}/labels")
 
-    n = extracted.count()
     print(json.dumps({"docs": n, "output": args.output}))
-    spark.stop()
+    if owns_session:
+        spark.stop()
     return 0
 
 

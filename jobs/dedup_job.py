@@ -46,6 +46,7 @@ def main(argv: list[str], spark=None) -> int:
     )
     args = p.parse_args(argv)
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from comic_text_detector_spark.operators.dedup import (
@@ -63,10 +64,13 @@ def main(argv: list[str], spark=None) -> int:
     if owns_session:
         spark = get_spark(app_name="ctd-dedup")
         spark.sparkContext.setLogLevel("WARN")
+    docs_in = Observation()
     docs = spark.read.parquet(args.input).select(args.id_col, args.text_col)
-    n_in = docs.count()
+    docs = docs.observe(docs_in, F.count(F.lit(1)).alias("rows"))
 
-    # pass 1: exact — one window, keeps the min-id row per distinct text
+    # pass 1: exact — one window, keeps the min-id row per distinct text.
+    # This write is the input's only reader (through a hash exchange that
+    # nothing samples), so docs_in counts each input row once
     exact, n_exact = write_counted(
         exact_dedup_survivors(docs, args.text_col, args.id_col),
         f"{args.output}/exact_survivors",
@@ -133,7 +137,7 @@ def main(argv: list[str], spark=None) -> int:
     spark.catalog.clearCache()
 
     summary = {
-        "docs_in": n_in,
+        "docs_in": docs_in.get["rows"],
         "after_exact": n_exact,
         "after_near_dup": n_out,
         # n_exact was counted BEFORE the dup-of-base anti-join, so the

@@ -25,10 +25,6 @@ def main(argv: list[str], spark=None) -> int:
     p.add_argument("--run-id", default="run0")
     p.add_argument("--num-partitions", type=int, default=64)
     p.add_argument("--num-chunks", type=int, default=4)
-    p.add_argument(
-        "--synthesize", type=int, default=0,
-        help="if >0, generate this many synthetic docs at --input first",
-    )
     args = p.parse_args(argv)
 
     from comic_text_detector_spark.plans.runner import read_metrics, run_extract
@@ -39,10 +35,6 @@ def main(argv: list[str], spark=None) -> int:
     if owns_session:
         spark = get_spark(app_name="ctd-extract")
         spark.sparkContext.setLogLevel("WARN")
-    if args.synthesize:
-        from comic_text_detector_spark.fixtures import write_corpus
-
-        write_corpus(spark, args.input, n=args.synthesize)
     import time
 
     docs = read_documents(spark, args.input)

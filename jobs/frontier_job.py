@@ -15,7 +15,9 @@ The crawl-side pipeline the engine's pieces compose into, end to end:
    crawl-delay spacing its slots.
 
 Every stage is the oracle-checked operator; this job only wires them and
-writes audit tables (candidates, blocked count, schedule).
+writes audit tables (candidates, allowed, schedule). Each is written with
+``write_counted``, so the summary's counts (candidates, blocked, scheduled)
+come from those writes, and the next stage reads the written table.
 
 Usage:
   spark-submit --py-files dist/ctd_spark.zip jobs/frontier_job.py \
@@ -56,6 +58,7 @@ def main(argv: list[str], spark=None) -> int:
         schedule_frontier,
     )
     from comic_text_detector_spark.session import get_spark
+    from comic_text_detector_spark.sources.sinks import write_counted
 
     owns_session = spark is None
     if owns_session:
@@ -93,19 +96,17 @@ def main(argv: list[str], spark=None) -> int:
         crawled = spark.createDataFrame(
             [], "url string, warc_ts timestamp"
         )
-    candidates = refetch_candidates(pages, crawled)
-    candidates.write.mode("overwrite").parquet(f"{args.output}/candidates")
-    candidates = spark.read.parquet(f"{args.output}/candidates")
-    n_candidates = candidates.count()
+    candidates, n_candidates = write_counted(
+        refetch_candidates(pages, crawled), f"{args.output}/candidates"
+    )
 
     # stage 4: robots filtering (blocked urls are an audit count, not a
-    # silent disappearance). Materialized once — counting the frame AND
-    # scheduling from it would otherwise run the filter pipeline twice
-    robots_filter(candidates, rules, url_col="url").write.mode(
-        "overwrite"
-    ).parquet(f"{args.output}/allowed")
-    allowed = spark.read.parquet(f"{args.output}/allowed")
-    n_allowed = allowed.count()
+    # silent disappearance). Materialized once — the allowed/ audit table
+    # and the schedule would otherwise each run the filter pipeline
+    allowed, n_allowed = write_counted(
+        robots_filter(candidates, rules, url_col="url"),
+        f"{args.output}/allowed",
+    )
 
     # stage 5: politeness schedule with per-host crawl-delays
     schedule = schedule_frontier(
@@ -114,9 +115,7 @@ def main(argv: list[str], spark=None) -> int:
         per_host_delay_ms=args.default_delay_ms,
         host_delays=delays,
     )
-    schedule.write.mode("overwrite").parquet(f"{args.output}/schedule")
-
-    n_scheduled = spark.read.parquet(f"{args.output}/schedule").count()
+    _, n_scheduled = write_counted(schedule, f"{args.output}/schedule")
     summary = {
         "candidates": n_candidates,
         "robots_blocked": n_candidates - n_allowed,

@@ -18,6 +18,9 @@ Composes four oracle-checked operator families over the SAME corpus scan:
 6. (--anchors) the anchor-expanded BM25 index (``build_anchor_index``,
    anchor tokens at field weight 2) written beside the plain one.
 
+Each summary count is observed on the write of the table it counts; only
+``communities``, a distinct count, is an action over the written file.
+
 Usage:
   spark-submit --py-files dist/ctd_spark.zip jobs/index_job.py \
       --input <parquet (url, warc_ts, text[, html])> --output /tmp/index \
@@ -69,12 +72,14 @@ def main(argv: list[str], spark=None) -> int:
     if (args.anchors or args.communities) and not args.html_col:
         p.error("--anchors/--communities require --html-col")
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from comic_text_detector_spark.operators.retrieval import (
         write_inverted_index,
     )
     from comic_text_detector_spark.session import get_spark
+    from comic_text_detector_spark.sources.sinks import write_counted
     from comic_text_detector_spark.sources.warc import cdx_lines
 
     owns_session = spark is None
@@ -82,33 +87,31 @@ def main(argv: list[str], spark=None) -> int:
         spark = get_spark(app_name="ctd-index")
         spark.sparkContext.setLogLevel("WARN")
     docs = spark.read.parquet(args.input)
-    summary: dict = {"docs_in": docs.count()}
 
     # 1. CDX — sortWithinPartitions after a range repartition on surt
-    # gives globally ordered files without a single-partition sort
+    # gives globally ordered files without a single-partition sort. One
+    # line per doc, so its count is docs_in, observed above the range
+    # exchange (whose sampler runs the subtree below it twice)
     cdx = cdx_lines(
         docs, url_col=args.url_col, ts_col=args.ts_col,
         payload_col=args.text_col,
     )
-    (
-        cdx.repartitionByRange("surt", "ts14")
-        .sortWithinPartitions("surt", "ts14")
-        .write.mode("overwrite")
-        .parquet(f"{args.output}/cdx")
+    _, n_docs = write_counted(
+        cdx.repartitionByRange("surt", "ts14").sortWithinPartitions(
+            "surt", "ts14"
+        ),
+        f"{args.output}/cdx",
     )
-    summary["cdx_lines"] = spark.read.parquet(f"{args.output}/cdx").count()
+    summary: dict = {"docs_in": n_docs, "cdx_lines": n_docs}
 
     # 2. BM25 inverted index (term-bucket pruned layout)
-    write_inverted_index(
+    summary["bm25_postings"] = write_inverted_index(
         docs,
         f"{args.output}/bm25",
         id_col=args.url_col,
         text_col=args.text_col,
         n_term_buckets=args.n_term_buckets,
     )
-    summary["bm25_postings"] = spark.read.parquet(
-        f"{args.output}/bm25/postings"
-    ).count()
 
     # 3+4. link graph + ranks (optional: needs page html)
     if args.html_col:
@@ -127,7 +130,7 @@ def main(argv: list[str], spark=None) -> int:
         # node identity = portless lowercased host on BOTH edge ends
         # (host_of is the one shared definition) — otherwise a :8080
         # deployment splits into two graph nodes and trust never flows
-        edges = (
+        edges, summary["edges"] = write_counted(
             links.select(
                 host_of(F.col("src_url"), strip_port=True).alias("src"),
                 F.regexp_replace(
@@ -136,34 +139,31 @@ def main(argv: list[str], spark=None) -> int:
             )
             .filter((F.col("src") != "") & (F.col("dst") != ""))
             .groupBy("src", "dst")
-            .agg(F.count("*").cast("long").alias("n_links"))
+            .agg(F.count("*").cast("long").alias("n_links")),
+            f"{args.output}/links",
         )
-        edges.write.mode("overwrite").parquet(f"{args.output}/links")
-        edges = spark.read.parquet(f"{args.output}/links")
-        summary["edges"] = edges.count()
-        pagerank(edges, n_iter=args.pagerank_iters).write.mode(
-            "overwrite"
-        ).parquet(f"{args.output}/pagerank")
-        summary["ranked_nodes"] = spark.read.parquet(
-            f"{args.output}/pagerank"
-        ).count()
+        _, summary["ranked_nodes"] = write_counted(
+            pagerank(edges, n_iter=args.pagerank_iters),
+            f"{args.output}/pagerank",
+        )
         if args.seeds:
             seeds = spark.read.parquet(args.seeds)
-            trustrank(edges, seeds, n_iter=args.pagerank_iters).write.mode(
-                "overwrite"
-            ).parquet(f"{args.output}/trustrank")
-            summary["trusted_nodes"] = spark.read.parquet(
-                f"{args.output}/trustrank"
-            ).filter(F.col("rank") > 0).count()
+            trusted = Observation()
+            trustrank(edges, seeds, n_iter=args.pagerank_iters).observe(
+                trusted, F.count_if(F.col("rank") > 0).alias("n")
+            ).write.mode("overwrite").parquet(f"{args.output}/trustrank")
+            summary["trusted_nodes"] = trusted.get["n"]
         if args.communities:
             from comic_text_detector_spark.operators.graph import (
                 label_propagation,
             )
 
-            label_propagation(edges, n_iter=3).write.mode(
-                "overwrite"
-            ).parquet(f"{args.output}/communities")
-            comm = spark.read.parquet(f"{args.output}/communities")
+            comm, _ = write_counted(
+                label_propagation(edges, n_iter=3),
+                f"{args.output}/communities",
+            )
+            # a distinct count cannot be an observed metric, so this one
+            # stays an action over the written file
             summary["communities"] = (
                 comm.select("community").distinct().count()
             )
@@ -179,15 +179,12 @@ def main(argv: list[str], spark=None) -> int:
                 text_col=args.text_col,
                 anchor_weight=2,
             )
-            a_post.write.mode("overwrite").parquet(
-                f"{args.output}/bm25_anchor/postings"
+            _, summary["anchor_postings"] = write_counted(
+                a_post, f"{args.output}/bm25_anchor/postings"
             )
             a_len.write.mode("overwrite").parquet(
                 f"{args.output}/bm25_anchor/lengths"
             )
-            summary["anchor_postings"] = spark.read.parquet(
-                f"{args.output}/bm25_anchor/postings"
-            ).count()
 
     print(json.dumps(summary))
     if owns_session:

@@ -990,10 +990,16 @@ class TestSitemaps:
 def test_frontier_job_e2e(spark, tmp_path):
     """robots + sitemaps + crawl state → scheduled fetch plan: rules
     block /private, the agent-specific crawl-delay spaces slots, refetch
-    decisions respect lastmod."""
+    decisions respect lastmod. The summary's counts are observed on the
+    writes of candidates/, allowed/ and schedule/, which are not read
+    back to count: each matches its parquet output, and the call
+    launches a pinned number of Spark jobs."""
+    import contextlib
+    import io
     import json
 
     from jobs import frontier_job
+    from tests.test_runner import _jobs_in_group
 
     robots = spark.createDataFrame(
         [
@@ -1037,14 +1043,30 @@ def test_frontier_job_e2e(spark, tmp_path):
     sitemaps.write.parquet(sdir)
     state.write.parquet(cdir)
     out = str(tmp_path / "out")
-    assert frontier_job.main(
-        [
-            "--robots", rdir, "--sitemaps", sdir, "--output", out,
-            "--crawl-state", cdir, "--agent", "ctdbot",
-            "--default-delay-ms", "500",
-        ],
-        spark=spark,
-    ) == 0
+    stdout = io.StringIO()
+    with contextlib.redirect_stdout(stdout):
+        n_jobs = _jobs_in_group(
+            spark, "frontier-job",
+            lambda: frontier_job.main(
+                [
+                    "--robots", rdir, "--sitemaps", sdir, "--output", out,
+                    "--crawl-state", cdir, "--agent", "ctdbot",
+                    "--default-delay-ms", "500",
+                ],
+                spark=spark,
+            ),
+        )
+    s = json.loads(stdout.getvalue().strip().splitlines()[-1])
+
+    def count(name):
+        return spark.read.parquet(f"{out}/{name}").count()
+
+    assert s == {
+        "candidates": count("candidates"),
+        "robots_blocked": count("candidates") - count("allowed"),
+        "scheduled": count("schedule"),
+    } == {"candidates": 4, "robots_blocked": 1, "scheduled": 3}
+    assert n_jobs == 24
     sched = spark.read.parquet(f"{out}/schedule").collect()
     urls = {r["url"] for r in sched}
     # /private blocked; /seen unmodified → not refetched; p1/p2/q scheduled

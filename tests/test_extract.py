@@ -176,3 +176,44 @@ def test_entity_tail_decoding():
     assert unescape("&rsquo;&ldquo;&rdquo;") == "’“”"
     assert unescape("&notanentity; &x;") == "&notanentity; &x;"
     assert unescape("&#x2014; &#8212;") == "— —"
+
+
+def test_annotate_job_sinks_agree(spark, tmp_path, capsys):
+    """jobs/annotate_job.py fans one extraction out to three sinks: the
+    JSON block records and the label lines carry exactly the spans of
+    extracted/, one block record per url, and the summary's ``docs`` is
+    the rows of extracted/ (one per url after the as-of pick)."""
+    import json
+
+    from jobs import annotate_job
+
+    src, out = str(tmp_path / "docs"), str(tmp_path / "out")
+    corpus = corpus_df(spark, 20)
+    corpus.write.parquet(src)
+    capsys.readouterr()
+    assert annotate_job.main(["--input", src, "--output", out], spark=spark) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    extracted = spark.read.parquet(f"{out}/extracted").collect()
+    spans = sorted(
+        (r.url, s.block_id, s.char_start, s.char_end)
+        for r in extracted
+        for s in r.spans
+    )
+    records = spark.read.json(f"{out}/blocks_json").collect()
+    blocks = sorted(
+        (r.url, b["block_id"], b["char_start"], b["char_end"])
+        for r in records
+        for b in json.loads(r.blocks_json)
+    )
+    labels = sorted(
+        (url, int(bid), int(start), int(end))
+        for url, bid, start, end in (
+            r.value.split(" ") for r in spark.read.text(f"{out}/labels").collect()
+        )
+    )
+    assert spans and blocks == spans == labels
+    assert sorted(r.url for r in records) == sorted(r.url for r in extracted)
+    n_urls = corpus.select("url").distinct().count()
+    assert summary == {"docs": len(extracted), "output": out}
+    assert len(extracted) == n_urls
+    assert not spark.sparkContext._jsc.sc().isStopped()

@@ -51,7 +51,9 @@ ALLOWED_UNREACHED_DEFS = {
     # index_job's BM25 index
     f"{PACKAGE}.plans.runner.read_extracted",
     f"{PACKAGE}.operators.retrieval.bm25_from_index_path",
-    # test-data generator
+    # test-data generators
+    f"{PACKAGE}.fixtures.gen_documents",
+    f"{PACKAGE}.fixtures.corpus_df",
     f"{PACKAGE}.fixtures.gen_hard_documents",
     # build inputs for, or check outputs of, tests of reached code
     # (convex_iou / offset_polygons_df, pack_sequences)

@@ -250,10 +250,19 @@ def test_positional_index_phrase_matches_direct(spark):
 def test_index_job_end_to_end(spark, tmp_path):
     """jobs/index_job.py writes all four artifacts: sorted CDX, pruned
     BM25 index, the host link graph, pagerank + trustrank ranks; a
-    query through the materialized index finds the planted doc."""
+    query through the materialized index finds the planted doc. Every
+    summary count but ``communities`` is observed on the write of the
+    table it counts, so no output is read back to count it: each value
+    matches its parquet output, and the call launches a pinned number of
+    Spark jobs."""
+    import contextlib
+    import io
+    import json
+
     from pyspark.sql import functions as F
 
     from jobs import index_job
+    from tests.test_runner import _jobs_in_group
 
     docs = spark.createDataFrame(
         [
@@ -273,12 +282,37 @@ def test_index_job_end_to_end(spark, tmp_path):
     inp, out, seeds = (str(tmp_path / d) for d in ("in", "out", "seeds"))
     docs.write.parquet(inp)
     spark.createDataFrame([("a.com",)], "node string").write.parquet(seeds)
-    assert index_job.main(
-        ["--input", inp, "--output", out, "--html-col", "html",
-         "--seeds", seeds, "--n-term-buckets", "8",
-         "--anchors", "--communities"],
-        spark=spark,
-    ) == 0
+    stdout = io.StringIO()
+    with contextlib.redirect_stdout(stdout):
+        n_jobs = _jobs_in_group(
+            spark, "index-job",
+            lambda: index_job.main(
+                ["--input", inp, "--output", out, "--html-col", "html",
+                 "--seeds", seeds, "--n-term-buckets", "8",
+                 "--anchors", "--communities"],
+                spark=spark,
+            ),
+        )
+    s = json.loads(stdout.getvalue().strip().splitlines()[-1])
+
+    def rows(name):
+        return spark.read.parquet(f"{out}/{name}")
+
+    assert s == {
+        "docs_in": spark.read.parquet(inp).count(),
+        "cdx_lines": rows("cdx").count(),
+        "bm25_postings": rows("bm25/postings").count(),
+        "edges": rows("links").count(),
+        "ranked_nodes": rows("pagerank").count(),
+        "trusted_nodes": rows("trustrank").filter("rank > 0").count(),
+        "communities": rows("communities").select("community").distinct().count(),
+        "anchor_postings": rows("bm25_anchor/postings").count(),
+    } == {
+        "docs_in": 3, "cdx_lines": 3, "bm25_postings": 8, "edges": 3,
+        "ranked_nodes": 3, "trusted_nodes": 2, "communities": 2,
+        "anchor_postings": 9,
+    }
+    assert n_jobs == 103
     cdx = spark.read.parquet(f"{out}/cdx")
     assert cdx.count() == 3
     assert {r.surt for r in cdx.collect()} == {
