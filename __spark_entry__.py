@@ -2414,8 +2414,9 @@ _LINKS_FIXTURE_SQL = (
 _LINKS_SQL = (
     "SELECT t.url AS src_url, regexp_extract(t.tag, ' href=\"([^\">]*)\"', 1)"
     " AS href, regexp_extract(t.tag, '>([^<]*)</a>', 1) AS anchor,"
-    " regexp_extract(regexp_extract(t.tag, ' href=\"([^\">]*)\"', 1),"
-    " '^[a-zA-Z]+://([^/?#]+)', 1) AS dst_host FROM ("
+    " lower(regexp_replace(regexp_extract(regexp_extract(t.tag,"
+    " ' href=\"([^\">]*)\"', 1), '^[a-zA-Z]+://([^/?#]+)', 1),"
+    " '^[^@]*@', '')) AS dst_host FROM ("
     " SELECT url, unnest(regexp_extract_all(html,"
     " '<a ([^>]* )?href=\"[^\">]*\"[^>]*>[^<]*</a>', 0)) AS tag FROM ("
     + _LINKS_FIXTURE_SQL
@@ -2449,14 +2450,15 @@ def _q_link_pagerank(spark, sf_dir):
     from html → host-level edges → integer-deterministic PageRank. The
     oracle is the link-extraction SQL fed into the unrolled pagerank
     replay — the whole extraction→graph pipeline verified in one query."""
-    from comic_text_detector_spark.functions.links import extract_links
+    from comic_text_detector_spark.functions.links import (
+        extract_links,
+        host_of,
+    )
     from comic_text_detector_spark.operators.graph import pagerank
-
-    from comic_text_detector_spark.functions.links import link_host
 
     links = extract_links(_linked_pages(spark, sf_dir))
     edges = links.select(
-        link_host(F.col("src_url")).alias("src"),
+        host_of(F.col("src_url")).alias("src"),
         F.col("dst_host").alias("dst"),
     )
     return pagerank(edges, n_iter=3).select(
@@ -2468,7 +2470,8 @@ def _link_pagerank_oracle() -> str:
     from comic_text_detector_spark.operators.graph import pagerank_sql
 
     edges = (
-        "SELECT regexp_extract(src_url, '^[a-zA-Z]+://([^/?#]+)', 1)"
+        "SELECT lower(regexp_replace(regexp_extract(src_url,"
+        " '^[a-zA-Z]+://([^/?#]+)', 1), '^[^@]*@', ''))"
         " AS src, dst_host AS dst FROM (" + _LINKS_SQL + ")"
     )
     return pagerank_sql(edges, n_iter=3)
@@ -3386,11 +3389,10 @@ def _q_schedule_frontier(spark, sf_dir):
 _FRONTIER_ORACLE = (
     "WITH u AS (SELECT 'https://h' || (doc_id % 40)::VARCHAR ||"
     " '.example/p/' || doc_id::VARCHAR AS url FROM documents), "
-    "k AS (SELECT url,"
-    " regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1) AS host,"
-    " md5('frontier:' || url) AS okey FROM u WHERE"
-    " coalesce(regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1), '')"
-    " <> ''), "
+    "h AS (SELECT url, lower(regexp_replace(regexp_extract(url,"
+    " '^[a-zA-Z]+://([^/?#]+)', 1), '^[^@]*@', '')) AS host FROM u), "
+    "k AS (SELECT url, host, md5('frontier:' || url) AS okey FROM h"
+    " WHERE coalesce(host, '') <> ''), "
     "s AS (SELECT url, host,"
     " CAST(('0x'||substr(md5(host),1,8))::BIGINT % 8 AS INT) AS worker,"
     " CAST(row_number() OVER (PARTITION BY host ORDER BY okey, url) - 1"
@@ -4204,7 +4206,8 @@ _SURT_ORACLE = (
     "nu AS (SELECT doc_id, url, lower(sh || p ||"
     " CASE WHEN q <> '' THEN '?' || q ELSE '' END) AS u FROM norm), "
     "pp AS (SELECT doc_id, url,"
-    " regexp_extract(u, '^[a-z]+://([^/?]*)', 1) AS hp,"
+    " lower(regexp_replace(regexp_extract(u, '^[a-zA-Z]+://([^/?#]+)', 1),"
+    " '^[^@]*@', '')) AS hp,"
     " regexp_replace(u, '^[a-z]+://[^/?]*', '') AS rest FROM nu), "
     "hh AS (SELECT doc_id, url,"
     " regexp_extract(hp, ':(\\d+)$', 1) AS port,"
@@ -8425,7 +8428,8 @@ def oracle_sql() -> dict[str, str]:
             "  || '.example.org/p/' || CAST(doc_id AS VARCHAR) AS url"
             " FROM documents),"
             " h AS (SELECT doc_id, url,"
-            "  regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1) AS host"
+            "  lower(regexp_replace(regexp_extract(url,"
+            "   '^[a-zA-Z]+://([^/?#]+)', 1), '^[^@]*@', '')) AS host"
             "  FROM u),"
             " r AS (SELECT doc_id, host, CAST(row_number() OVER ("
             "  PARTITION BY host"
@@ -8790,8 +8794,9 @@ def oracle_sql() -> dict[str, str]:
             "   || '.example.org/p/' || doc_id::VARCHAR END AS url"
             "  FROM documents),"
             " h AS (SELECT doc_id, url,"
-            "  regexp_replace(lower(regexp_extract(url,"
-            "   '^[a-zA-Z]+://([^/?#]+)', 1)), ':\\d+$', '') AS host"
+            "  regexp_replace(lower(regexp_replace(regexp_extract(url,"
+            "   '^[a-zA-Z]+://([^/?#]+)', 1), '^[^@]*@', '')), ':\\d+$', '')"
+            "  AS host"
             "  FROM d),"
             " u AS (SELECT *, ('0x' || substr(md5('split:' || host), 1, 8))"
             "  ::BIGINT / 4294967296.0 AS uu FROM h)"

@@ -28,11 +28,6 @@ from pyspark.sql import functions as F
 A_TAG = '<a ([^>]* )?href="[^">]*"[^>]*>[^<]*</a>'
 HREF = ' href="([^">]*)"'
 ANCHOR = '>([^<]*)</a>'
-HOST = "^[a-zA-Z]+://([^/?#]+)"
-
-
-def link_host(href: Column) -> Column:
-    return F.regexp_extract(href, HOST, 1)
 
 
 def extract_links(
@@ -52,7 +47,7 @@ def extract_links(
         "src_url",
         href.alias("href"),
         F.regexp_extract(F.col("tag"), ANCHOR, 1).alias("anchor"),
-        link_host(href).alias("dst_host"),
+        host_of(href).alias("dst_host"),
     )
 
 
@@ -107,13 +102,40 @@ _decode_entities = decode_entities  # established internal alias
 
 
 def host_of(url: Column, strip_port: bool = False) -> Column:
-    """Lowercased host of a url — THE shared extraction (blocklist
-    verdicts, link-graph node identity) so host definitions cannot
-    drift per call site. ``strip_port`` drops an explicit :port —
-    blocklists and graph node ids are portless by convention; keep the
-    port only when distinguishing vhost deployments matters."""
-    h = F.lower(F.regexp_extract(url, r"^[a-zA-Z]+://([^/?#]+)", 1))
+    """The host of a url: its authority (RFC 3986 §3.2) lowercased, with
+    any ``userinfo@`` dropped — the one host key of the package, so the
+    link graph, frontier, caps, traps, robots and blocklists agree on a
+    url's host. '' when the url has no ``scheme://`` authority.
+    ``strip_port`` drops an explicit :port — blocklists, splits and
+    graph node ids are portless; politeness, caps, traps and robots
+    keep it."""
+    auth = F.regexp_extract(url, r"^[a-zA-Z]+://([^/?#]+)", 1)
+    h = F.lower(F.regexp_replace(auth, r"^[^@]*@", ""))
     return F.regexp_replace(h, r":\d+$", "") if strip_port else h
+
+
+def resolve_ref(base: Column, ref: Column) -> Column:
+    """``ref`` resolved against the absolute url ``base`` for the
+    RFC 3986 §4.2 forms a crawler meets in Location headers and
+    canonical links: absolute as declared, protocol-relative
+    (``//host/p``) on base's scheme, root-relative (``/p``) on base's
+    scheme+authority. NULL for any other form, or a NULL ``ref``: the
+    caller picks the fallback (drop-not-fake — without full reference
+    resolution we must not guess)."""
+    scheme = F.regexp_extract(base, r"^([a-zA-Z]+):", 1)
+    scheme_host = F.regexp_extract(base, r"^([a-zA-Z]+://[^/?#]+)", 1)
+    return (
+        F.when(ref.rlike("^[a-zA-Z]+://"), ref)
+        .when(  # network-path reference: prepending scheme_host would
+            # fabricate http://own//other/p
+            ref.startswith("//") & (scheme != ""),
+            F.concat(scheme, F.lit(":"), ref),
+        )
+        .when(
+            ref.startswith("/") & (scheme_host != ""),
+            F.concat(scheme_host, ref),
+        )
+    )
 
 
 def page_directives(
@@ -177,11 +199,12 @@ def canonical_dedup(
     lexicographic url), else the lexicographically-smallest url.
     Returns (url, canonical_group, is_representative).
 
-    Group key resolution: an ABSOLUTE canonical is used as declared; a
-    ROOT-RELATIVE canonical (href="/index.html" — extremely common)
-    resolves against the page's own scheme+host (two different hosts
-    declaring "/index.html" must NOT collapse into one group); any
-    other relative form falls back to the page's own url
+    Group key resolution (``resolve_ref``): an ABSOLUTE canonical is
+    used as declared; a ROOT-RELATIVE canonical (href="/index.html" —
+    extremely common) resolves against the page's own scheme+host (two
+    different hosts declaring "/index.html" must NOT collapse into one
+    group), a protocol-relative one against its scheme; any other
+    relative form, or no canonical, falls back to the page's own url
     (drop-not-fake: without base resolution we must not guess an
     identity).
 
@@ -192,25 +215,8 @@ def canonical_dedup(
     winning url only the earliest one is marked. noindex pages should
     be filtered BEFORE grouping (an unindexable page must not become a
     group representative)."""
-    canon = F.col("canonical_url")
     own = F.col(url_col)
-    scheme = F.regexp_extract(own, r"^([a-zA-Z]+):", 1)
-    scheme_host = F.regexp_extract(own, r"^([a-zA-Z]+://[^/?#]+)", 1)
-    resolved = (
-        F.when(canon.isNull(), own)
-        .when(canon.rlike("^[a-zA-Z]+://"), canon)
-        .when(  # protocol-relative (//host/p): scheme alone, RFC 3986
-            # §4.2 network-path reference — prepending scheme_host
-            # would fabricate http://own//other/p
-            canon.startswith("//") & (scheme != ""),
-            F.concat(scheme, F.lit(":"), canon),
-        )
-        .when(
-            canon.startswith("/") & (scheme_host != ""),
-            F.concat(scheme_host, canon),
-        )
-        .otherwise(own)
-    )
+    resolved = F.coalesce(resolve_ref(own, F.col("canonical_url")), own)
     g = directives.select(
         F.col(url_col).alias("url"),
         resolved.alias("canonical_group"),

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.links import host_of
 from .dedup import md5_long, shingles
 
 
@@ -106,8 +107,9 @@ def normalize_url(url: Column) -> Column:
 def surt_key(url: Column) -> Column:
     """SURT (Sort-friendly URI Reordering Transform) key, the Wayback/
     Common Crawl index ordering: canonicalize (``normalize_url``), then
-    lowercase everything, strip the scheme, default :80/:443 ports and a
-    leading ``www.``, and reverse the host labels comma-joined —
+    lowercase everything, strip the scheme, any userinfo (the host is
+    ``host_of``'s), default :80/:443 ports and a leading ``www.``, and
+    reverse the host labels comma-joined —
     ``https://www.News.Example.org/a?q=1`` → ``org,example,news)/a?q=1``.
 
     Why at scale: sorting/bucketing a 10^12-row crawl index by SURT key
@@ -117,7 +119,7 @@ def surt_key(url: Column) -> Column:
     passes — the same pruning argument as ``zorder_key`` but for the
     host hierarchy. Pure regexp/array exprs, oracle-replayable."""
     u = F.lower(normalize_url(url))
-    hostport = F.regexp_extract(u, r"^[a-z]+://([^/?]*)", 1)
+    hostport = host_of(u)
     rest = F.regexp_replace(u, r"^[a-z]+://[^/?]*", "")
     # the port is split off BEFORE label reversal and re-attached after
     # (dropped when default) — 'www.example.org:8080' must become
@@ -257,14 +259,11 @@ def robots_filter(
     match, and a null join key would silently vanish in the join-back
     anyway — better an explicit documented drop than a leak).
     """
-    # the match-key derivation strips the fragment BEFORE extracting the
-    # host (a '#' straight after the authority would otherwise contaminate
-    # it and silently bypass every rule for the real host), drops userinfo,
-    # and treats an empty or query-only path as '/' (RFC 9309: the match
-    # target for 'https://h?x=1' is '/?x=1', which Disallow:/ must catch)
+    # the host is host_of's (lowercased, userinfo dropped); the match
+    # path strips the fragment first and treats an empty or query-only
+    # path as '/' (RFC 9309: the match target for 'https://h?x=1' is
+    # '/?x=1', which Disallow:/ must catch)
     u0 = F.regexp_replace(F.col(url_col), r"#.*$", "")
-    auth = F.regexp_extract(u0, r"^[a-zA-Z]+://([^/?]*)", 1)
-    host = F.lower(F.regexp_replace(auth, r"^[^@]*@", ""))
     raw_path = F.regexp_replace(u0, r"^[a-zA-Z]+://[^/?]*", "")
     path = F.when(raw_path == "", F.lit("/")).otherwise(
         F.when(
@@ -273,7 +272,7 @@ def robots_filter(
     )
     u = (
         urls.filter(F.col(url_col).isNotNull())
-        .withColumn("__host", host)
+        .withColumn("__host", host_of(F.col(url_col)))
         .withColumn("__path", path)
     )
     # rule pattern → (anchored?, regex, literal-octet specificity):
@@ -806,7 +805,8 @@ def schedule_frontier(
     ``fetch_at_ms = slot * delay`` spaces same-host fetches — where
     ``delay`` is the host's row in ``host_delays`` (host, delay_milli —
     e.g. ``robots_crawl_delay`` output, broadcast: one row per polite
-    host) when given, else ``per_host_delay_ms``.
+    host; its host is lowercased to meet ``host_of``'s) when given,
+    else ``per_host_delay_ms``.
 
     Pure column exprs + one host-keyed window — a single exchange on the
     host key. Zipf-headed hosts are fine: the window only sorts each
@@ -818,8 +818,6 @@ def schedule_frontier(
     DESIGN — that is the politeness constraint, not a skew bug."""
     if n_workers <= 0:
         raise ValueError(f"n_workers must be positive, got {n_workers}")
-    from .salting import host_of
-
     w = Window.partitionBy("host").orderBy(F.col("okey"), F.col("url"))
     ranked = (
         df.select(
@@ -847,7 +845,7 @@ def schedule_frontier(
         # join out and schedule every url once per agent row; max = the
         # conservative politeness choice (callers pre-select their
         # agent's row for exact semantics — see jobs/frontier_job.py)
-        one = host_delays.groupBy("host").agg(
+        one = host_delays.groupBy(F.lower("host").alias("host")).agg(
             F.max("delay_milli").alias("delay_milli")
         )
         ranked = ranked.join(F.broadcast(one), "host", "left")
@@ -1301,8 +1299,6 @@ def cap_per_host(
     """
     if cap < 1:
         raise ValueError("cap must be >= 1")
-    from .salting import host_of
-
     with_host = df.withColumn(
         "__cth_host", F.coalesce(host_of(F.col(url_col)), F.lit(""))
     )
@@ -1650,8 +1646,6 @@ def blocklist_filter(
     host can only match url_prefix patterns whose own host is empty —
     i.e. effectively never; they pass (drop-not-fake: absence of
     evidence)."""
-    from ..functions.links import host_of
-
     d = docs.withColumn("__host", host_of(F.col(url_col), strip_port=True))
     bl = blocklist.select(
         F.lower(F.col("pattern")).alias("pattern"),
@@ -2168,8 +2162,6 @@ def split_by_host(
     Scale: embarrassingly parallel — one pure-column projection, zero
     shuffles, no driver state. Emits the input columns plus (host,
     split)."""
-    from ..functions.links import host_of
-
     if splits is None:
         splits = [("train", 0.98), ("val", 0.01), ("test", 0.01)]
     if not splits:

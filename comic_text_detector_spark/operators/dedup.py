@@ -68,9 +68,10 @@ def exact_dedup_survivors(
 ) -> DataFrame:
     """The surviving ROWS of exact dedup: for each distinct text, the full
     row of its min-id representative (the companion ``exact_dedup`` returns
-    the group table; callers previously had to re-join to get rows back —
-    round-1 judge wart #3). Mirrors ``dedup_keep_representatives``
-    (operators/graph.py). One window on the content hash, no join."""
+    the group table). The min-id rule is the one
+    ``graph.dedup_keep_representatives`` applies to near-dup clusters, but
+    no code is shared: this is one window on the content hash, no join.
+    ``dedup_job`` runs it as its first stage."""
     w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col).asc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -550,9 +551,11 @@ def neardup_survivors(
     With ``hash_fn='md5'`` the whole pipeline is engine-portable and the
     survivor set is value-checkable in SQL.
 
-    Returns the FULL surviving rows (the downstream-feedable corpus),
-    via the same ``dedup_keep_representatives`` tail ``dedup_job`` uses —
-    one definition of the survivor invariant.
+    Returns the FULL surviving rows (the downstream-feedable corpus)
+    through ``graph.dedup_keep_representatives``: connected components,
+    then an anti-join of the non-representatives. ``dedup_job`` does not
+    call it: it inlines those two steps, because it writes the components
+    to ``clusters/`` and derives its survivors from that write.
     """
     from .graph import dedup_keep_representatives
 

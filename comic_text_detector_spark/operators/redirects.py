@@ -18,33 +18,21 @@ redirects terminate in one hop). No visited-set state is carried:
 a cycle simply never reaches a non-3xx terminal and surfaces as
 ``resolved=false`` at the hop cap — deterministic, never mislabeled.
 
-Location resolution mirrors ``functions/links.py::canonical_dedup``:
-absolute targets as declared; root-relative (``Location: /new``)
-against the source's scheme+host; any other relative form ends the
-chain unresolved (drop-not-fake — RFC 9110 allows them, but without
-full reference resolution we must not guess).
+Location resolution is ``functions/links.py::resolve_ref``, the one
+``canonical_dedup`` uses: absolute targets as declared;
+protocol-relative on the source's scheme; root-relative
+(``Location: /new``) against the source's scheme+host; any other
+relative form ends the chain unresolved (drop-not-fake — RFC 9110
+allows them, but without full reference resolution we must not
+guess).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _resolve_location(url: Column, loc: Column) -> Column:
-    scheme = F.regexp_extract(url, r"^([a-zA-Z]+):", 1)
-    scheme_host = F.regexp_extract(url, r"^([a-zA-Z]+://[^/?#]+)", 1)
-    return (
-        F.when(loc.rlike("^[a-zA-Z]+://"), loc)
-        .when(  # protocol-relative (RFC 3986 §4.2): scheme alone
-            loc.startswith("//") & (scheme != ""),
-            F.concat(scheme, F.lit(":"), loc),
-        )
-        .when(
-            loc.startswith("/") & (scheme_host != ""),
-            F.concat(scheme_host, loc),
-        )
-    )
+from ..functions.links import resolve_ref
 
 
 def resolve_redirects(
@@ -77,7 +65,7 @@ def resolve_redirects(
         & (F.col(status_col) <= 399)
         & F.col(location_col).isNotNull()
     )
-    target = _resolve_location(F.col(url_col), F.col(location_col))
+    target = resolve_ref(F.col(url_col), F.col(location_col))
     # the edge list: one row per usable redirect. Broken redirects
     # (NULL/relative Location) are excluded — they terminate in place.
     edges = (

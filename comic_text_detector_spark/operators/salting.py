@@ -1,9 +1,10 @@
 """Hot-key salting (north_rule: 'salting of hot hosts to kill skew').
 
 The reference never needs this (strictly per-image work), so skew handling
-is engine-original: a cheap pre-pass counts rows (or bytes) per host; keys
-above the threshold get a salt derived from xxhash64(url) so one hot host
-spreads over ``n_salts`` partitions. The salt map is tiny (only hot hosts)
+is engine-original: a cheap pre-pass counts rows (or bytes) per host
+(``functions/links.py::host_of``); keys above the threshold get a salt
+derived from xxhash64(url) so one hot host spreads over ``n_salts``
+partitions. The salt map is tiny (only hot hosts)
 and is broadcast — the pre-pass is a map-side-combined count, the apply is
 a broadcast join, so the total added cost is one small aggregate.
 """
@@ -13,14 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def host_of(url_col) -> F.Column:
-    """Host extraction as a column expr: scheme://host[/?#]... — THE
-    shared host key for salting and frontier scheduling (one definition,
-    or hot-host salting and politeness ownership could disagree on the
-    same url). Case-insensitive scheme; host ends at '/', '?' or '#';
-    no match (relative/malformed url) yields ''."""
-    return F.regexp_extract(url_col, r"^[a-zA-Z]+://([^/?#]+)", 1)
+from ..functions.links import host_of
 
 
 def hot_hosts(

@@ -23,11 +23,12 @@ one real exchange.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.links import host_of
+
 _PATH = r"^[a-zA-Z]+://[^/?#]+([^?#]*)"
-_HOST = r"^[a-zA-Z]+://([^/?#]+)"
 _QUERY = r"^[^?#]*\?([^#]*)"
 
 
@@ -54,7 +55,7 @@ def url_shape(df: DataFrame, url_col: str = "url") -> DataFrame:
     ).otherwise(F.lit(0))
     return df.select(
         u.alias("url"),
-        F.regexp_extract(u, _HOST, 1).alias("host"),
+        host_of(u).alias("host"),
         path.alias("path"),
         F.when(has_q, F.regexp_extract(u, _QUERY, 1)).alias("query"),
         F.size(segs).alias("depth"),

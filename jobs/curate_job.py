@@ -162,6 +162,7 @@ def main(argv: list[str], spark=None) -> int:
 
     from pyspark.sql import functions as F
 
+    from comic_text_detector_spark.functions.links import host_of
     from comic_text_detector_spark.functions.textstats import quality_score
     from comic_text_detector_spark.operators.curation import (
         contaminated_docs,
@@ -237,10 +238,7 @@ def main(argv: list[str], spark=None) -> int:
         )
         docs = front_door("traps", docs.join(
             trapped.withColumnRenamed("host", "__th"),
-            F.expr(
-                f"regexp_extract({args.id_col},"
-                " '^[a-zA-Z]+://([^/?#]+)', 1) = __th"
-            ),
+            host_of(F.col(args.id_col)) == F.col("__th"),
             "left_anti",
         ))
 
@@ -298,19 +296,13 @@ def main(argv: list[str], spark=None) -> int:
         ).withColumnRenamed("text", args.text_col))  # operator emits 'text'
 
     # optional stage 1b2: HOST-scoped boilerplate removal — per-site nav
-    # and footer lines whose corpus-wide df never crosses the 1b cap;
-    # the host is derived from the url id (same regexp as detect_traps)
+    # and footer lines whose corpus-wide df never crosses the 1b cap
     if args.max_host_line_doc_freq > 0:
         from comic_text_detector_spark.operators.curation import (
             host_boilerplate_dedup,
         )
 
-        hosted = clean.withColumn(
-            "__host",
-            F.regexp_extract(
-                F.col(args.id_col), "^[a-zA-Z]+://([^/?#]+)", 1
-            ),
-        )
+        hosted = clean.withColumn("__host", host_of(F.col(args.id_col)))
         clean = rewrite(clean, "host_line_dedup", host_boilerplate_dedup(
             hosted,
             args.id_col,

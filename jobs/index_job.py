@@ -127,15 +127,12 @@ def main(argv: list[str], spark=None) -> int:
         links = extract_links(
             docs, url_col=args.url_col, html_col=args.html_col
         )
-        # node identity = portless lowercased host on BOTH edge ends
-        # (host_of is the one shared definition) — otherwise a :8080
-        # deployment splits into two graph nodes and trust never flows
+        # node identity = portless host on BOTH edge ends — otherwise a
+        # :8080 deployment splits into two graph nodes and trust never flows
         edges, summary["edges"] = write_counted(
             links.select(
                 host_of(F.col("src_url"), strip_port=True).alias("src"),
-                F.regexp_replace(
-                    F.lower(F.col("dst_host")), r":\d+$", ""
-                ).alias("dst"),
+                host_of(F.col("href"), strip_port=True).alias("dst"),
             )
             .filter((F.col("src") != "") & (F.col("dst") != ""))
             .groupBy("src", "dst")

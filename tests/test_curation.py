@@ -509,6 +509,24 @@ def test_schedule_frontier_politeness(spark):
     assert a == b
     with pytest.raises(ValueError):
         schedule_frontier(urls, n_workers=0)
+    # one host key: case and userinfo variants of a host are one host on
+    # one worker, and a mixed-case host_delays row still spaces them
+    variants = spark.createDataFrame(
+        [
+            ("https://a.example/p1",), ("https://A.example/p2",),
+            ("https://a.EXAMPLE/p3",), ("https://u@a.example/p4",),
+        ],
+        "url string",
+    )
+    delays = spark.createDataFrame(
+        [("A.Example", 3000)], "host string, delay_milli long"
+    )
+    got = schedule_frontier(variants, host_delays=delays).collect()
+    assert {r.host for r in got} == {"a.example"}
+    assert len({r.worker for r in got}) == 1
+    assert sorted((r.slot, r.fetch_at_ms) for r in got) == [
+        (0, 0), (1, 3000), (2, 6000), (3, 9000)
+    ]
 
 
 def test_schedule_frontier_excludes_hostless(spark):
@@ -852,6 +870,16 @@ class TestCapPerHost:
         assert len(by_host["big.example"]) == 5
         assert len(by_host["small.example"]) == 1
         assert len(by_host[""]) == 2  # hostless rows are never capped
+        # case and userinfo variants of one host are one capped host
+        variants = spark.createDataFrame(
+            [
+                ("https://big.example/a",), ("https://BIG.example/b",),
+                ("https://Big.Example/c",), ("https://u@big.example/d",),
+            ],
+            "url string",
+        )
+        out = cap_per_host(variants, cap=1).collect()
+        assert [r["host"] for r in out] == ["big.example"]
 
     def test_deterministic_uniform_selection(self, spark):
         from comic_text_detector_spark.operators.curation import cap_per_host
@@ -1066,7 +1094,7 @@ def test_frontier_job_e2e(spark, tmp_path):
         "robots_blocked": count("candidates") - count("allowed"),
         "scheduled": count("schedule"),
     } == {"candidates": 4, "robots_blocked": 1, "scheduled": 3}
-    assert n_jobs == 24
+    assert n_jobs == 23
     sched = spark.read.parquet(f"{out}/schedule").collect()
     urls = {r["url"] for r in sched}
     # /private blocked; /seen unmodified → not refetched; p1/p2/q scheduled
@@ -1309,6 +1337,7 @@ def test_blocklist_filter_kinds_and_priority(spark):
             (7, "https://pre.net/ok/1"),         # same host, prefix miss
             (8, "https://both.com/x"),           # host AND domain → host
             (9, "not-a-url"),                    # no host → clean
+            (10, "https://x@Host.Exact.org/y"),  # userinfo is not the host
         ],
         "doc_id long, url string",
     )
@@ -1335,6 +1364,7 @@ def test_blocklist_filter_kinds_and_priority(spark):
     assert got[7] == (None, None)
     assert got[8] == ("ahost", "host")  # host kind outranks domain kind
     assert got[9] == (None, None)
+    assert got[10] == ("tracker", "host")
 
 
 def test_badword_score_weights_and_wordless(spark):
@@ -1681,6 +1711,10 @@ def test_split_by_host_leakage_guard(spark):
 
     rows = [(i, f"https://h{i % 7}.example.org/p/{i}") for i in range(200)]
     rows += [(900, "/relative/path"), (901, None)]
+    # case and userinfo variants of h3.example.org
+    rows += [
+        (902, "https://H3.Example.org/p/x"), (903, "https://u@h3.example.org/")
+    ]
     df = spark.createDataFrame(rows, "doc_id long, url string")
     out = split_by_host(
         df, [("train", 0.5), ("val", 0.25), ("test", 0.25)]
@@ -1691,6 +1725,9 @@ def test_split_by_host_leakage_guard(spark):
             by_host.setdefault(r.host, set()).add(r.split)
     # the leakage guard: every page of a host lands in exactly one split
     assert by_host and all(len(s) == 1 for s in by_host.values())
+    variants = {r.doc_id: r for r in out if r.doc_id in (3, 902, 903)}
+    assert {r.host for r in variants.values()} == {"h3.example.org"}
+    assert len({r.split for r in variants.values()}) == 1
     # hostless rows are explicitly unassigned, never guessed
     hostless = [r for r in out if not r.host]
     assert len(hostless) == 2

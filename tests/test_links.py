@@ -30,6 +30,14 @@ def test_extract_links_planted(spark):
     # relative href → no scheme → empty host (caller resolves/filters)
     assert by_href["relative/path"].dst_host == ""
     assert all(r.src_url == "u1" for r in rows)
+    # dst_host is host_of's: lowercased, userinfo dropped, port kept
+    mixed = spark.createDataFrame(
+        [("u4", '<a href="https://user@Z.Example:8443/r">z</a>')],
+        "url string, html string",
+    )
+    assert [r.dst_host for r in extract_links(mixed).collect()] == [
+        "z.example:8443"
+    ]
 
 
 def test_data_href_not_mistaken_for_href(spark):

@@ -171,6 +171,13 @@ def test_salting_spreads_hot_host(spark):
     assert len(hot_keys) == 8  # hot host spread over 8 salts
     assert max(r["count"] for r in hot_keys) < 200 / 2  # no salt holds the host
     assert len(cold_keys) == 20
+    # case variants of one host count toward one hot host
+    mixed = spark.createDataFrame(
+        [(f"https://{'HOT' if i % 2 else 'hot'}.example/{i}", i) for i in range(120)],
+        "url string, i int",
+    )
+    hot = hot_hosts(mixed, row_threshold=100).collect()
+    assert [(h.host, h.n_rows) for h in hot] == [("hot.example", 120)]
 
 
 def test_geometry_exprs(spark):

@@ -33,6 +33,8 @@ def test_detect_traps(spark):
         + [("https://d.ex/" + "/".join(f"s{k}" for k in range(14)),)]
         # healthy host: 3 paths, one query each
         + [(f"https://ok.ex/p{k}?x=1",) for k in range(3)]
+        # one host in three cases
+        + [("https://m.ex/a",), ("https://M.ex/b",), ("https://m.EX/c",)]
     )
     df = spark.createDataFrame(rows, "url string")
     got = {r.host: r for r in detect_traps(df).collect()}
@@ -46,3 +48,6 @@ def test_detect_traps(spark):
     ok = got["ok.ex"]
     assert ok.n_urls == 3 and ok.n_paths == 3
     assert not (ok.query_trap or ok.repeat_trap or ok.depth_trap)
+    assert got["m.ex"].n_urls == 3 and set(got) == {
+        "q.ex", "r.ex", "d.ex", "ok.ex", "m.ex"
+    }
