@@ -1642,10 +1642,10 @@ def _q_neardup_incremental(spark, sf_dir):
     )
     base = docs.filter(F.col("doc_id") % 4 != 0)
     incr = docs.filter(F.col("doc_id") % 4 == 0)
-    base_bands = banded_signatures(base, "doc_id", "text", hash_fn="md5")
     return neardup_incremental_pairs(
-        base_bands, incr, "doc_id", "text",
-        max_bucket_size=1 << 20, hash_fn="md5",
+        banded_signatures(base, "doc_id", "text", hash_fn="md5"),
+        banded_signatures(incr, "doc_id", "text", hash_fn="md5"),
+        max_bucket_size=1 << 20,
     )
 
 

@@ -19,6 +19,7 @@ Design notes (scale):
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
 from typing import NamedTuple
 
 VOID_TAGS = frozenset(
@@ -217,15 +218,35 @@ _SCAN = re.compile(
     re.S | re.I,
 )
 
-# quote-aware single-tag matcher for the slow path. The body is an ATOMIC
-# group ((?>...)): the plain/quoted alternatives are then committed left to
-# right exactly once — deterministic HTML5-style quote pairing. Without it,
-# a tag mixing both quote styles with no closing '>' lets the backtracker
-# re-pair quote spans combinatorially (a crafted ~200-byte document took
-# >100 s in one task — a decode-bomb-class DoS on the tokenizer).
-_TAG_SLOW = re.compile(
-    r"<(/?)([a-zA-Z][a-zA-Z0-9-]*)((?>(?:[^>\"']+|\"[^\"]*\"|'[^']*')*))>", re.S
-)
+# the characters that steer the slow path's quote-aware tag scan
+_TAG_STOPS = re.compile(r"[>\"']")
+
+
+def _quoted_tag_ends(s: str) -> tuple[list[int], list[int]]:
+    """Where a quote-aware tag body starting at each stop character ends.
+
+    The slow path reads a tag body left to right, HTML5-style: a quote
+    opens a value that runs to the next quote of the same kind, and the
+    first ``>`` outside a value closes the tag. Returns ``(stops, ends)``:
+    the positions of every ``>``, ``"`` and ``'`` in ``s``, and for each
+    the position of the ``>`` that closes a body reaching it outside a
+    value, or -1 when an unclosed quote or the end of ``s`` comes first.
+    One right-to-left pass, so every tag of a document is resolved in
+    linear time: rescanning from each tag cost O(n) per tag, quadratic on
+    a page of unclosed mixed-quote tags."""
+    stops = [m.start() for m in _TAG_STOPS.finditer(s)]
+    ends = [-1] * len(stops)
+    next_quote = {'"': len(stops), "'": len(stops)}
+    for i in range(len(stops) - 1, -1, -1):
+        c = s[stops[i]]
+        if c == ">":
+            ends[i] = stops[i]
+            continue
+        j = next_quote[c]  # the value's closing quote; the body goes on after it
+        if j + 1 < len(stops):
+            ends[i] = ends[j + 1]
+        next_quote[c] = i
+    return stops, ends
 
 # one-lookup tag classification for the hot loop:
 # name -> (is_void, boiler_delta, is_link, is_block)
@@ -453,6 +474,7 @@ def _tokenize_positional(s: str) -> list[Node]:
 
     tag_info = _TAG_INFO
     default = _TAG_DEFAULT
+    quoted = None  # (stops, ends) of _quoted_tag_ends, built on first use
     while (m := _SCAN.search(s, last)) is not None:
         start = m.start()
         if start > last:
@@ -465,11 +487,14 @@ def _tokenize_positional(s: str) -> list[Node]:
             body.count('"') % 2 or body.count("'") % 2
         ):
             # a quoted attribute value containing '>' truncated the fast
-            # match; re-match quote-aware from the same position
-            sm = _TAG_SLOW.match(s, start)
-            if sm is not None:
-                last = sm.end()
-                closing, name, body = sm.group(1, 2, 3)
+            # match; re-read the body quote-aware from the same position
+            if quoted is None:
+                quoted = _quoted_tag_ends(s)
+            stops, ends = quoted
+            i = bisect_left(stops, m.start(4))
+            if i < len(stops) and ends[i] >= 0:
+                last = ends[i] + 1
+                body = s[m.start(4):ends[i]]
         if not name.islower():
             name = name.lower()
         if closing:  # closing tag

@@ -454,9 +454,9 @@ def substring_dup_spans(
     #
     # The surviving positions persist: the frequency pass and the
     # join-back both consume this frame, and without the cache the whole
-    # digest-per-position subtree executes twice. Long-lived sessions
-    # issuing many calls should spark.catalog.clearCache() after
-    # consuming the result, same discipline as dedup.bucket_pairs.
+    # digest-per-position subtree executes twice. The returned plan reads
+    # the cache, so it cannot be released here: it stays in the session's
+    # cache until the session ends or someone clears it.
     from pyspark import StorageLevel
 
     pos = df.select(

@@ -7,15 +7,17 @@ needs several. All are shuffle-once designs:
   pattern in the engine, SURVEY.md §2.3): window + row_number, never a
   global sort.
 * ``exact_dedup`` — content-hash groupBy (map-side partial agg).
-* ``minhash_lsh_pairs`` — shingle → minhash → band → bucket-join; the
-  bucket equi-join replaces the quadratic all-pairs comparison, which is the
-  only strategy that survives 10^12 docs.
+* ``minhash_lsh_pairs`` — shingle → minhash → band → ``bucket_pairs``; one
+  window pass over the band buckets replaces the quadratic all-pairs
+  comparison, which is the only strategy that survives 10^12 docs.
 * ``simhash64`` — 64-bit simhash fingerprints; near-dup candidates = equal
   fingerprint bands.
 * ``ngram_jaccard_pairs`` — exact n-gram Jaccard on candidate pairs
   (verification stage after LSH, or standalone on bounded candidate sets).
-* ``embedding_cosine_pairs`` — near-dup by embedding cosine over
-  LSH-bucketed candidates (random-hyperplane signs).
+
+``similarity.embedding_near_dup_pairs`` (near-dup by embedding cosine over
+random-hyperplane buckets) and ``imagehash.hamming_pairs`` emit their
+candidates through the same ``bucket_pairs``.
 
 Hashes are hand-rolled deterministic arithmetic (xxhash64/crc32 built-ins or
 explicit polynomial expressions) so results are stable across runs, Python
@@ -202,117 +204,78 @@ def bucket_pairs(
     max_bucket_size: int = 32,
 ) -> DataFrame:
     """(id, *bucket_cols, *payload_cols) rows → candidate pairs (id_a < id_b,
-    plus ``{payload}_a``/``{payload}_b``), computed in ONE pass.
+    plus ``{payload}_a``/``{payload}_b`` and the pair's ``bucket_size``).
 
-    The shared pair-emission stage behind every LSH family member. Two
-    scale properties (the round-1 judge's "single real scale-killer" fix):
+    The shared pair-emission stage behind every LSH family member: one
+    window pass and one explode, no self-join and no cached frame.
 
-    * **The signature pipeline runs once.** A window over the bucket key
-      annotates every row with its bucket size and bucket-min member, and the
-      annotated frame is persisted — both emission branches read the cache,
-      so the plan has ONE scan→explode→aggregate branch (the old
-      self-equi-join evaluated it twice).
-    * **Hot buckets emit star + signature-ordered chain, not all pairs.**
-      Buckets of size ≤ ``max_bucket_size`` emit all C(k,2) pairs (exact
-      candidate set for the verify stage). Larger buckets — boilerplate-
-      identical template clusters, the common 100-TB skew — emit each
-      member paired with the bucket-min anchor PLUS each member paired
-      with its predecessor in (payload, id) sort order: ≤ 2k rows instead
-      of C(k,2), so a 10^6-doc template cluster emits ~2*10^6 pairs
-      instead of 5*10^11. Connectivity of the raw candidate graph is
-      identical to all-pairs. When a verify filter (hamming/cosine/
-      jaccard) runs AFTER emission, capped buckets are where exactness
-      can soften: the chain leg exists precisely for that case — sorting
-      by the payload signature puts near-identical members adjacent, so
-      verified edges still connect the cluster even when the anchor is an
-      outlier; only member-member near-dup pairs that are BOTH far from
-      the anchor AND non-adjacent in signature order can be missed, and
-      only in buckets beyond the cap (raise ``max_bucket_size`` to
-      recover exact semantics). Same discipline as the reference's
-      bounded candidate stage (reference utils/yolov5_utils.py:143-146:
-      cap work before the expensive pass).
+    * **One window pass.** One window spec partitions by the bucket key
+      and orders by (payload, id). A single select over it gives each row
+      its bucket size, the bucket-min member (the anchor), its predecessor
+      (``lag``) and the next ``max_bucket_size - 1`` members (a
+      ``collect_list`` over a sliding ``ROWS`` frame), so the plan shuffles
+      and sorts the input once and reads it once.
+    * **Hot buckets emit anchor + predecessor, not all pairs.** In a bucket
+      of size k ≤ ``max_bucket_size`` each member pairs with every later
+      member: all C(k,2) pairs, the exact candidate set for the verify
+      stage. A larger bucket — a boilerplate-identical template cluster,
+      the common 100-TB skew — pairs each member with the anchor and with
+      its predecessor in (payload, id) order: ≤ 2k rows instead of C(k,2),
+      with the connectivity of all-pairs. When a verify filter (hamming/
+      cosine/jaccard) runs after emission, capped buckets are where
+      exactness can soften: sorting by the payload puts near-identical
+      members adjacent, so verified edges still connect the cluster when
+      the anchor is an outlier; only member-member near-dup pairs that are
+      both far from the anchor and non-adjacent in payload order can be
+      missed, and only beyond the cap (raise ``max_bucket_size`` to
+      recover exact semantics). The sliding frame still costs O(k·cap)
+      per hot bucket, which ``max_bucket_size`` bounds.
 
-    ``bucket_size`` is carried on every emitted pair so callers can count
-    and log how many came from capped (star/chain-emitted) buckets.
-
-    The annotated frame stays persisted (MEMORY_AND_DISK, LRU-evicted) so
-    both emission branches of the lazily returned plan read one
-    materialization; long-lived sessions issuing many LSH calls should
-    ``spark.catalog.clearCache()`` after consuming the result (see
-    jobs/dedup_job.py) — a DataFrame-returning operator cannot unpersist
-    before its caller evaluates it.
+    ``bucket_size`` lets callers count how many pairs came from capped
+    buckets; a pair found in several buckets keeps one of their sizes.
     """
     payload_cols = payload_cols or []
-    # ONE ordered window spec serves all three functions (count and min are
-    # order-independent aggregates over the full frame), so the plan pays a
-    # single partition+sort instead of an unordered window plus a second
-    # sort for the lag. The three window expressions are parsed SQL (one
-    # py4j round trip each) rather than Column-builder chains — the same
-    # treatment as banded_signatures; the frozen bench rebuilds the query
-    # inside its timed region, so construction wall is part of every
-    # trial (measured ~240 ms → ~90 ms for this function's build).
+    # the window expressions are parsed SQL (one py4j round trip each)
+    # rather than Column-builder chains, the same treatment as
+    # banded_signatures: query construction is driver wall on every call
     part = ", ".join(f"`{c}`" for c in bucket_cols)
-    member_sql = "struct(" + ", ".join(
+    member = "struct(" + ", ".join(
         f"`{c}`" for c in ["id", *payload_cols]
     ) + ")"
     order = ", ".join(f"`{c}`" for c in [*payload_cols, "id"])
-    w_ord_sql = f"partition by {part} order by {order}"
-    full_frame = "rows between unbounded preceding and unbounded following"
-    ann = banded.select(
-        "id",
-        *bucket_cols,
-        *payload_cols,
-        F.expr(f"count(1) over ({w_ord_sql} {full_frame})").alias("__k"),
-        F.expr(
-            f"min({member_sql}) over ({w_ord_sql} {full_frame})"
-        ).alias("__anchor"),
-        F.expr(f"lag({member_sql}) over ({w_ord_sql})").alias("__prev"),
-    ).persist()
-
-    def _emit_sql(a_of: str, b_of: str) -> list[str]:
-        cols = [f"{a_of}.`id` as id_a", f"{b_of}.`id` as id_b"]
-        for c in payload_cols:
-            cols.append(f"{a_of}.`{c}` as `{c}_a`")
-            cols.append(f"{b_of}.`{c}` as `{c}_b`")
-        return cols
-
-    star = ann.where(
-        f"__k > {max_bucket_size} AND id != __anchor.id"
-    ).selectExpr(
-        "__anchor.`id` as id_a",
-        "`id` as id_b",
-        *[
-            x
-            for c in payload_cols
-            for x in (f"__anchor.`{c}` as `{c}_a`", f"`{c}` as `{c}_b`")
-        ],
+    w = f"partition by {part} order by {order}"
+    whole = f"{w} rows between unbounded preceding and unbounded following"
+    # a frame's upper bound may not be below its lower; at a cap of 1 or
+    # less every bucket of two or more is capped and never reads __later
+    upper = max(max_bucket_size - 1, 1)
+    later = f"{w} rows between 1 following and {upper} following"
+    others = (
+        f"CASE WHEN __k <= {max_bucket_size} THEN __later"
+        " ELSE array(IF(__anchor.id != __m.id, __anchor, NULL), __prev) END"
+    )
+    pairs = (
+        banded.select(
+            F.expr(member).alias("__m"),
+            F.expr(f"count(1) over ({whole})").alias("__k"),
+            F.expr(f"min({member}) over ({whole})").alias("__anchor"),
+            F.expr(f"lag({member}) over ({w})").alias("__prev"),
+            F.expr(f"collect_list({member}) over ({later})").alias("__later"),
+        )
+        .selectExpr("__m", "__k", f"explode({others}) AS __o")
+        .where("__o IS NOT NULL")
+        # id-ordered pair; equal ids keep (payload, id) order
+        .selectExpr(
+            "IF(__o.id < __m.id, __o, __m) AS __a",
+            "IF(__o.id < __m.id, __m, __o) AS __b",
+            "__k",
+        )
+    )
+    return pairs.selectExpr(
+        "__a.`id` as id_a",
+        "__b.`id` as id_b",
+        *[f"__{s}.`{c}` as `{c}_{s}`" for c in payload_cols for s in "ab"],
         "__k as bucket_size",
-    )
-    # the chain leg: (predecessor-in-signature-order, member), id-ordered
-    lo = f"CASE WHEN __prev.`id` < `id` THEN __prev ELSE {member_sql} END"
-    hi = f"CASE WHEN __prev.`id` < `id` THEN {member_sql} ELSE __prev END"
-    chain = ann.where(
-        f"__k > {max_bucket_size} AND __prev IS NOT NULL"
-    ).selectExpr(*_emit_sql(f"({lo})", f"({hi})"), "__k as bucket_size")
-    star = star.unionByName(chain)
-    small = (
-        ann.where(f"__k BETWEEN 2 AND {max_bucket_size}")
-        .groupBy(*bucket_cols)
-        # the window already hash-partitioned by the bucket key, so this
-        # groupBy reuses the exchange; arrays are bounded by max_bucket_size
-        .agg(F.expr(f"sort_array(collect_list({member_sql}))").alias("ms"))
-        .selectExpr("ms", "posexplode(ms) as (i, a)")
-        .selectExpr(
-            "a",
-            "size(ms) as bucket_size",
-            "explode(slice(ms, i + 2, size(ms) - i - 1)) as b",
-        )
-        .selectExpr(
-            *_emit_sql("a", "b"),
-            "cast(bucket_size as long) as bucket_size",
-        )
-    )
-    return star.unionByName(small).dropDuplicates(["id_a", "id_b"])
+    ).dropDuplicates(["id_a", "id_b"])
 
 
 def minhash_lsh_pairs(
@@ -566,43 +529,28 @@ def neardup_survivors(
     return dedup_keep_representatives(df, pairs, id_col)
 
 
-def write_band_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "url",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    hash_fn: str = "xxhash64",
-) -> None:
-    """Materialize a corpus's banded minhash signatures (partitioned by
-    ``band_id``) so later snapshots run ``neardup_incremental_pairs``
-    against it without recomputing the base corpus — the signature pass
-    is the expensive leg (shingle explode + 64 mins over every document),
-    and at 10^12 docs recomputing it per recrawl would dwarf the delta."""
-    banded_signatures(
-        df, id_col, text_col, num_hashes, bands, shingle_n, hash_fn
-    ).write.mode("overwrite").partitionBy("band_id").parquet(path)
+def write_band_index(bands: DataFrame, path: str) -> DataFrame:
+    """Write ``banded_signatures`` rows to ``path`` (partitioned by
+    ``band_id``) and return them read back with their schema (no
+    schema-inference job). Later snapshots run ``neardup_incremental_pairs``
+    against the index without recomputing the base corpus — the signature
+    pass is the expensive leg (shingle explode + 64 mins over every
+    document), and at 10^12 docs recomputing it per recrawl would dwarf the
+    delta; the caller that wrote the index reads its own pairs from it too."""
+    bands.write.mode("overwrite").partitionBy("band_id").parquet(path)
+    return bands.sparkSession.read.schema(bands.schema).parquet(path)
 
 
 def neardup_incremental_pairs(
-    base_bands: DataFrame,
-    incr: DataFrame,
-    id_col: str = "url",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    max_bucket_size: int = 32,
-    hash_fn: str = "xxhash64",
+    base_bands: DataFrame, incr_bands: DataFrame, max_bucket_size: int = 32
 ) -> DataFrame:
     """Near-dup candidate pairs for a NEW snapshot against an indexed
     base corpus — every pair with at least one increment member: within
     the increment (via ``bucket_pairs``) plus increment x base (via a
     keyed equi-join on (band_id, band_hash) against the stored band
-    index). Only the increment's signatures are computed; the base
-    corpus contributes its MATERIALIZED bands (``write_band_index``).
+    index). Both sides are ``banded_signatures`` rows: the increment's,
+    computed by the caller, and the base corpus's MATERIALIZED bands
+    (``write_band_index``), so no base signature is recomputed.
 
     Hot-bucket discipline, same rationale as ``bucket_pairs``: a band
     bucket larger than ``max_bucket_size`` on either side is truncated
@@ -616,11 +564,8 @@ def neardup_incremental_pairs(
     Pairs emit ordered (id_a < id_b), distinct; a document present in
     both sides (recapture of the same id) never pairs with itself.
     """
-    ib = banded_signatures(
-        incr, id_col, text_col, num_hashes, bands, shingle_n, hash_fn
-    ).persist()  # used by both the self-pair and cross-join legs
     self_pairs = bucket_pairs(
-        ib, ["band_id", "band_hash"], [], max_bucket_size
+        incr_bands, ["band_id", "band_hash"], [], max_bucket_size
     ).select("id_a", "id_b")
 
     def _capped(bands_df):
@@ -636,12 +581,12 @@ def neardup_incremental_pairs(
     # window sorts ~|increment's buckets| rows, not the whole 10^12-doc
     # index (which would defeat the point of materializing it); on a
     # band_id-partitioned index the join also prunes partitions
-    touched = ib.select("band_id", "band_hash").distinct()
+    touched = incr_bands.select("band_id", "band_hash").distinct()
     base_touched = base_bands.join(
         touched, ["band_id", "band_hash"], "left_semi"
     )
     cross = (
-        _capped(ib)
+        _capped(incr_bands)
         .withColumnRenamed("id", "iid")
         .join(
             _capped(base_touched).withColumnRenamed("id", "bid"),
@@ -815,14 +760,13 @@ def containment_pairs(
     candidate join linear in corpus size; the recall trade is
     documented, not hidden: containment within dropped-boilerplate
     space is invisible). The pair aggregate and both size joins key on
-    ids. Same discipline as ``bucket_pairs``' star+chain cap.
+    ids.
 
-    Cache discipline (same note as ``bucket_pairs``): two corpus-scale
-    frames (the shingle df table and the kept-shingle relation) stay
-    persisted so the plan's three consumers share one materialization; a
-    DataFrame-returning operator cannot unpersist before its caller
-    evaluates the result, so long-lived sessions issuing repeated calls
-    should ``spark.catalog.clearCache()`` after consuming the output."""
+    Two corpus-scale frames (the shingle df table and the kept-shingle
+    relation) are persisted so the plan's three consumers share one
+    materialization. The returned plan reads them, so this operator
+    cannot release them: they stay in the session's cache (LRU-evicted)
+    until the session ends or someone clears it."""
     if n < 1 or max_df < 2:
         raise ValueError("need n >= 1 and max_df >= 2")
     sh = docs.select(
@@ -835,8 +779,7 @@ def containment_pairs(
 
     # the shingle explode and its df aggregate feed THREE consumers
     # (sizes, the pair join's two sides) — persist once so the explode
-    # runs once, the same economy bucket_pairs applies to its
-    # annotated frame
+    # runs once
     dfreq = sh.groupBy("kg").agg(F.count("*").alias("df")).persist(
         StorageLevel.MEMORY_AND_DISK
     )

@@ -135,8 +135,8 @@ def embedding_near_dup_pairs(
     p = 1 - arccos(0.9)/pi ≈ 0.86 → same 8-plane bucket with p ≈ 0.3 per
     table → ≥1 of 8 tables with p ≈ 0.94. Pair emission goes through
     ``operators.dedup.bucket_pairs``: the SRP signature pipeline executes
-    once (window + persist, no self-join) and buckets beyond the size cap
-    emit the linear star instead of C(k,2) pairs.
+    once (one window pass, no self-join) and buckets beyond the size cap
+    emit the linear anchor + predecessor pairs instead of C(k,2).
 
     ``hash_fn='md5'`` derives the plane coefficients from md5 digests
     instead of xxhash64 — arithmetic an independent SQL engine reproduces

@@ -2,18 +2,26 @@
 
 The training-data pipeline's second pass (after jobs/extract_job.py):
 
-1. exact dedup groups (md5 groupBy, map-side combined);
-2. minhash-LSH candidate pairs via the one-pass star-capped ``bucket_pairs``
-   (a boilerplate-identical template cluster emits O(k) rows, never C(k,2));
-3. exact n-gram Jaccard verify on the candidates;
-4. distributed connected components over verified pairs;
-5. survivors table (cluster representative rows) + a cluster map, both
+1. exact dedup: the min-id row per distinct text (one window);
+2. the exact survivors' banded minhash signatures, computed once; with
+   ``--band-index-out`` they are written there and the pairs read them back;
+3. minhash-LSH candidate pairs from those bands via ``bucket_pairs`` (one
+   window pass; a boilerplate-identical template cluster emits O(k) rows,
+   never C(k,2)), or, with ``--base-band-index``, via
+   ``neardup_incremental_pairs`` against a stored base index;
+4. exact n-gram Jaccard verify on the candidates;
+5. distributed connected components over verified pairs;
+6. survivors table (cluster representative rows) + a cluster map, both
    written as parquet (Iceberg ``writeTo(...).append()`` in prod).
+
+The job caches nothing, so a caller's cached tables survive a call that
+passes its session.
 
 Usage:
   spark-submit --py-files dist/ctd_spark.zip jobs/dedup_job.py \
       --input <documents parquet with (url, text)> --output /tmp/dedup_out \
-      [--jaccard 0.8] [--id-col url] [--text-col text]
+      [--jaccard 0.8] [--id-col url] [--text-col text] \
+      [--band-index-out <dir>] [--base-band-index <dir>]
 """
 
 from __future__ import annotations
@@ -33,9 +41,10 @@ def main(argv: list[str], spark=None) -> int:
     p.add_argument(
         "--band-index-out",
         default=None,
-        help="also materialize the exact-survivors' banded minhash "
+        help="also write the exact-survivors' banded minhash "
         "signatures here (write_band_index) so the NEXT snapshot can "
-        "run incremental near-dup without recomputing this corpus",
+        "run incremental near-dup without recomputing this corpus; "
+        "this run's pairs read them back",
     )
     p.add_argument(
         "--base-band-index",
@@ -50,8 +59,9 @@ def main(argv: list[str], spark=None) -> int:
     from pyspark.sql import functions as F
 
     from comic_text_detector_spark.operators.dedup import (
+        banded_signatures,
+        bucket_pairs,
         exact_dedup_survivors,
-        minhash_lsh_pairs,
         neardup_incremental_pairs,
         ngram_jaccard_pairs,
         write_band_index,
@@ -76,10 +86,11 @@ def main(argv: list[str], spark=None) -> int:
         f"{args.output}/exact_survivors",
     )
 
-    # optionally materialize this corpus's band index for future
-    # incremental runs (the signature pass is the expensive leg)
+    # the one signature pass (the expensive leg); with --band-index-out
+    # the pairs below read the written index instead of recomputing it
+    bands = banded_signatures(exact, args.id_col, args.text_col)
     if args.band_index_out:
-        write_band_index(exact, args.band_index_out, args.id_col, args.text_col)
+        bands = write_band_index(bands, args.band_index_out)
 
     # pass 2: near-dup candidates → verify (materialized — the pair table is
     # both an output and the input to two downstream reads) → clusters →
@@ -93,10 +104,7 @@ def main(argv: list[str], spark=None) -> int:
     n_dup_of_base = 0
     if args.base_band_index:
         cand_all = neardup_incremental_pairs(
-            spark.read.parquet(args.base_band_index),
-            exact,
-            args.id_col,
-            args.text_col,
+            spark.read.parquet(args.base_band_index), bands
         )
         ids = exact.select(F.col(args.id_col).alias("__id"))
         in_a = cand_all.join(
@@ -118,7 +126,9 @@ def main(argv: list[str], spark=None) -> int:
         exact = exact.join(dup_of_base, args.id_col, "left_anti")
         cand = both
     else:
-        cand = minhash_lsh_pairs(exact, args.id_col, args.text_col)
+        cand = bucket_pairs(bands, ["band_id", "band_hash"]).select(
+            "id_a", "id_b"
+        )
     verified = ngram_jaccard_pairs(
         cand, exact, args.id_col, args.text_col
     ).filter(F.col("jaccard") >= args.jaccard)
@@ -132,9 +142,6 @@ def main(argv: list[str], spark=None) -> int:
     _, n_out = write_counted(
         exact.join(losers, args.id_col, "left_anti"), f"{args.output}/survivors"
     )
-    # bucket_pairs persists its annotated signature frame for plan reuse;
-    # release it now that every downstream output is materialized
-    spark.catalog.clearCache()
 
     summary = {
         "docs_in": docs_in.get["rows"],

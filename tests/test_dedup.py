@@ -98,6 +98,22 @@ def test_bucket_pairs_small_all_pairs_and_star_cap(spark):
     }
 
 
+def test_bucket_pairs_leaves_no_cached_frame(spark):
+    """bucket_pairs is one plan over its input with no persisted frame:
+    collecting its pairs leaves the session's cache empty."""
+    from comic_text_detector_spark.operators.dedup import bucket_pairs
+
+    spark.catalog.clearCache()
+    banded = spark.createDataFrame(
+        [("a", 0, 1), ("b", 0, 1), ("c", 0, 1), ("x", 1, 2), ("y", 1, 2)],
+        "id string, band_id int, band_hash bigint",
+    )
+    for cap in (32, 2, 1):
+        pairs = bucket_pairs(banded, ["band_id", "band_hash"], [], cap)
+        assert len(pairs.collect()) == 4
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_lsh_hot_bucket_star_emission_is_linear(spark):
     """A 1000-identical-doc template cluster (the common crawl skew case)
     emits star + chain pairs — O(k), same connected components — instead of
@@ -351,6 +367,7 @@ class TestNeardupIncremental:
         from pyspark.sql import functions as F
 
         from comic_text_detector_spark.operators.dedup import (
+            banded_signatures,
             minhash_lsh_pairs,
             neardup_incremental_pairs,
             write_band_index,
@@ -377,12 +394,15 @@ class TestNeardupIncremental:
         expected = {p for p in full if p[0] >= 10 or p[1] >= 10}
 
         path = str(tmp_path / "bands")
-        write_band_index(base, path, "doc_id", "text", hash_fn="md5")
+        base_bands = write_band_index(
+            banded_signatures(base, "doc_id", "text", hash_fn="md5"), path
+        )
         got = {
             (r["id_a"], r["id_b"])
             for r in neardup_incremental_pairs(
-                spark.read.parquet(path), incr, "doc_id", "text",
-                max_bucket_size=1 << 20, hash_fn="md5",
+                base_bands,
+                banded_signatures(incr, "doc_id", "text", hash_fn="md5"),
+                max_bucket_size=1 << 20,
             ).collect()
         }
         assert got == expected
@@ -398,14 +418,14 @@ class TestNeardupIncremental:
         body = " ".join(f"w{i}" for i in range(40))
         docs = spark.createDataFrame([(1, body)], "doc_id long, text string")
         bands = banded_signatures(docs, "doc_id", "text", hash_fn="md5")
-        pairs = neardup_incremental_pairs(
-            bands, docs, "doc_id", "text", hash_fn="md5"
-        ).collect()
+        pairs = neardup_incremental_pairs(bands, bands).collect()
         assert pairs == []
 
 
 def test_dedup_job_incremental_band_index(spark, tmp_path):
-    """Run 1 materializes the band index; run 2 (new snapshot) drops
+    """Run 1 materializes the band index and reads its own pairs from
+    it, so the index costs one Spark job (its write) over the same run
+    without it, not a second signature pass; run 2 (new snapshot) drops
     docs that collide with base as dup_of_base and dedups the rest
     within-snapshot via the normal verify pipeline; its summary counts
     each removal once."""
@@ -414,6 +434,7 @@ def test_dedup_job_incremental_band_index(spark, tmp_path):
     import json
 
     from jobs import dedup_job
+    from tests.test_runner import _jobs_in_group
 
     body = " ".join(f"w{i}" for i in range(80))
     other = " ".join(f"q{i}" for i in range(80))
@@ -434,11 +455,24 @@ def test_dedup_job_incremental_band_index(spark, tmp_path):
     base_docs.write.parquet(base_in)
     incr_docs.write.parquet(incr_in)
 
-    assert dedup_job.main(
-        ["--input", base_in, "--output", base_out,
-         "--band-index-out", bands],
-        spark=spark,
-    ) == 0
+    with_index = _jobs_in_group(
+        spark, "dedup-band-index",
+        lambda: dedup_job.main(
+            ["--input", base_in, "--output", base_out,
+             "--band-index-out", bands],
+            spark=spark,
+        ),
+    )
+    without_index = _jobs_in_group(
+        spark, "dedup-no-band-index",
+        lambda: dedup_job.main(
+            ["--input", base_in, "--output", str(tmp_path / "bo2")],
+            spark=spark,
+        ),
+    )
+    # the index write is the one extra job: the pairs read the written
+    # bands back instead of running the signature pass a second time
+    assert with_index - without_index == 1
     stdout = io.StringIO()
     with contextlib.redirect_stdout(stdout):
         assert dedup_job.main(
@@ -461,7 +495,9 @@ def test_dedup_job_summary(spark, tmp_path):
     two unrelated docs): every summary value matches the parquet outputs.
     The call is each write with its shuffles; the input and exact counts
     are observed during the write of exact_survivors/ and the near-dup
-    count during that of survivors/, which are not read back to count."""
+    count during that of survivors/, which are not read back to count.
+    The job caches nothing and clears no cache: a table the caller cached
+    in the same session stays cached."""
     import contextlib
     import io
     import json
@@ -480,12 +516,17 @@ def test_dedup_job_summary(spark, tmp_path):
     )
     inp, out = str(tmp_path / "in"), str(tmp_path / "out")
     docs.write.parquet(inp)
+    docs.createOrReplaceTempView("dedup_caller_cached")
+    spark.catalog.cacheTable("dedup_caller_cached")
     stdout = io.StringIO()
     with contextlib.redirect_stdout(stdout):
         n_jobs = _jobs_in_group(
             spark, "dedup-job",
             lambda: dedup_job.main(["--input", inp, "--output", out], spark=spark),
         )
+    assert spark.catalog.isCached("dedup_caller_cached")
+    spark.catalog.uncacheTable("dedup_caller_cached")
+    spark.catalog.dropTempView("dedup_caller_cached")
     s = json.loads(stdout.getvalue().strip().splitlines()[-1])
 
     def urls(name):
@@ -504,7 +545,7 @@ def test_dedup_job_summary(spark, tmp_path):
         "docs_in": 7, "after_exact": 5, "after_near_dup": 4,
         "near_dup_removed": 1, "dup_of_base_removed": 0,
     }
-    assert n_jobs == 38
+    assert n_jobs == 35
 
 
 def test_containment_pairs_asymmetric(spark):

@@ -3,7 +3,9 @@
 The full gate is ``tools/verify_oracle.py`` (every query, sf0.01). This
 runs the same per-query compare on the queries over the extraction runner,
 the Bloom filters, the crawl-record formats, HTTP parsing, polygons,
-packing and pagination, so drift there fails the test suite too.
+packing, pagination and every value-checked query whose pairs come from
+``operators/dedup.py::bucket_pairs``, so drift there fails the test suite
+too.
 """
 
 from __future__ import annotations
@@ -22,6 +24,13 @@ QUERIES = (
     "polygon_unclip_axis",
     "pack_sequences",
     "stitch_pagination",
+    # through bucket_pairs
+    "minhash_lsh_pairs_md5",
+    "neardup_survivors",
+    "neardup_incremental",
+    "simhash_pairs_md5",
+    "dedup_embedding_pairs_md5",
+    "image_neardup_pairs",
 )
 
 

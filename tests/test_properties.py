@@ -59,8 +59,9 @@ def test_extract_invariants_on_random_html(frags):
 def test_tokenize_mixed_quote_tag_is_linear_time():
     """Regression: a tag mixing both quote styles with no closing '>' used
     to send the slow-path matcher into exponential backtracking (a ~220
-    byte crafted document took >100 s). The atomic-group body must keep
-    this linear."""
+    byte crafted document took >100 s), and a page of such tags made the
+    slow path rescan to the end of the page from every tag (56 KB took
+    ~5 s). Both must stay linear."""
     import time
 
     doc = (
@@ -76,6 +77,10 @@ def test_tokenize_mixed_quote_tag_is_linear_time():
     t1 = time.time()
     tokenize(b'<p a="x' + b"ab'c" * 5000 + b" no close ever")
     assert time.time() - t0 < 5.0 and time.time() - t1 < 5.0
+    # 8,000 tags whose quote-aware body never closes: one node per tag
+    t2 = time.time()
+    assert len(tokenize('<a \'">\'' * 8000)) == 8000
+    assert time.time() - t2 < 1.0
 
 
 @settings(max_examples=200, deadline=None)

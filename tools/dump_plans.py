@@ -108,11 +108,13 @@ def main() -> None:
             "map-side partial aggregation: the shuffle carries one row per "
             "doc, not one per shingle. (A naive array-expression form is 64x "
             "slower: Catalyst does not CSE nested lambda trees.) Pair "
-            "emission is bucket_pairs: the banded signature frame is "
-            "window-annotated and PERSISTED, so both union branches (star "
-            "for capped hot buckets, all-pairs for small ones) read "
-            "InMemoryTableScan — the signature pipeline appears ONCE, where "
-            "the round-1 self-join ran it twice. Hot buckets emit O(k) star "
+            "emission is bucket_pairs: ONE Window over one exchange on the "
+            "band key computes each row's bucket size, anchor, predecessor "
+            "and next members, and one Generate explodes its pairs (the "
+            "dropDuplicates aggregate above it folds away under this "
+            "audit's limit(1)) — no union, no cached frame, and the "
+            "signature pipeline appears ONCE, where the round-1 self-join "
+            "ran it twice. Hot buckets emit O(k) anchor + predecessor "
             "rows, never C(k,2).",
         ),
         (
